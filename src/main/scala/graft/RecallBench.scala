@@ -13,8 +13,9 @@ import graft.vamana._
   *
   * Usage: runMain graft.RecallBench [n] [dim] [R] [L] [ef] [parallelism]
   * Prints one JSON line; results recorded in BASELINE_REPRO.md.
-  * No SparkSession — this measures the sequential kernel, which is what a
-  * single reference process is.
+  * No SparkSession — this measures the in-process kernel build (the
+  * batch-synchronous build, on `parallelism` threads) and its search,
+  * which is what a single reference process is.
   */
 object RecallBench {
   def main(args: Array[String]): Unit = {
@@ -35,9 +36,7 @@ object RecallBench {
 
     val params = VamanaParams(dim = dim, maxDegree = r, beamWidth = l, alpha = 1.2f, efSearch = ef)
     val t0 = System.nanoTime()
-    val index =
-      if (parallelism > 1) VamanaKernel.buildParallel(ids, points, params, parallelism)
-      else VamanaKernel.build(ids, points, params)
+    val index = VamanaKernel.buildParallel(ids, points, params, parallelism)
     val buildSec = (System.nanoTime() - t0) / 1e9
 
     // ground truth: brute force (main.cpp:104-118)

@@ -74,9 +74,9 @@ final class VamanaIndex(val params: VamanaParams, val maxPoints: Int) {
   }
 
   def search(query: Array[Float], k: Int): Array[(Long, Float)] = {
-    val (res, stats) = K.searchWithStats(index, MetricReduction.prepareQuery(query, params.metric), k)
-    statHops.addAndGet(stats.hops)
-    statDistComps.addAndGet(stats.distComputations)
+    val (res, hops, comps) = K.searchCounted(index, MetricReduction.prepareQuery(query, params.metric), k)
+    statHops.addAndGet(hops)
+    statDistComps.addAndGet(comps)
     statQueries.incrementAndGet()
     res
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * Build (the expensive part) is distributed: points are assigned to
   * `numShards` overlapping shards (each point lands in 2 shards so
-  * cross-shard neighborhoods exist), each shard runs the sequential
+  * cross-shard neighborhoods exist), each shard runs
   * [[VamanaKernel.build]] inside one task, and the per-shard adjacency
   * lists are merged + re-pruned to R with a distributed join — the
   * published DiskANN sharded-build recipe, with no shared mutable state
@@ -75,11 +75,11 @@ object VamanaIndexer {
       else math.max(2, math.ceil(2.0 * n / math.max(1L, maxLocalPoints)).toInt)
 
     if (effShards <= 1) {
-      // single-shard: use the batch-synchronous parallel kernel — the
-      // executor threads are otherwise idle during a driver-local build.
-      // Output is identical for any parallelism >= 2 (kernel contract).
+      // single-shard: build on a thread pool — the executor threads are
+      // otherwise idle during a driver-local build. Output is identical
+      // for any parallelism (kernel contract).
       val collected = ptsT.collect().sortBy(_._1)
-      val par = math.max(2, math.min(Runtime.getRuntime.availableProcessors(), 16))
+      val par = math.min(Runtime.getRuntime.availableProcessors(), 16)
       val index = VamanaKernel.buildParallel(collected.map(_._1), collected.map(_._2), kParams, par)
       new VamanaModel(index, maxLocalPoints)
     } else {
@@ -93,7 +93,7 @@ object VamanaIndexer {
         val s2 = math.floorMod(s1 + 1 + math.floorMod(h2, s - 1), s)
         Seq((s1, id, vec), (s2, id, vec))
       }
-      // one sequential kernel build per shard, kept as a cached dataset of
+      // one kernel build per shard, kept as a cached dataset of
       // shard indexes — reused (a) to extract edges for the global merge and
       // (b) as the beyond-broadcast fanout serving model. Never collected.
       implicit val shardEnc: Encoder[(Int, LocalIndex)] =
@@ -268,19 +268,8 @@ final class FanoutModel private[vamana] (
         res.iterator.map { case (id, dist) => (qid, id, dist.toDouble) }
       }
     }.toDF("query_id", "id", "dist")
-    // overlapping shards may answer the same point twice — merge before
-    // rank. Rank on the UNROUNDED distances (round only the emitted
-    // column): rounding first could order two points differently from the
-    // exact kNN the full-beam gates compare against when true distances
-    // differ only past 4 decimals at the rank-k boundary.
-    val mergedA = answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
-    mergedA
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id"),
-        (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
+    // overlapping shards may answer the same point twice
+    FanoutModel.rankMerge(answers, k)
   }
 
   /** Range (radius) query on the fanout path — the serving regime where
@@ -593,17 +582,7 @@ final class FanoutModel private[vamana] (
           .iterator.map { case (id, dist) => (qid, id, dist.toDouble) }
       }
     }.toDF("query_id", "id", "dist")
-    // rank on unrounded distances, round only the emitted column — the
-    // exactness gate's theorem must hold independent of the data, not
-    // just while no pair straddles a 1e-4 boundary at rank k
-    val mergedA = answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
-    mergedA
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id"),
-        (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
+    FanoutModel.rankMerge(answers, k)
   }
 
   /** Release the cached shard dataset (cache-lifecycle surface for tests
@@ -825,6 +804,23 @@ final class FanoutModel private[vamana] (
 }
 
 object FanoutModel {
+
+  /** The global merge of per-shard (query_id, id, dist) answers: dedup a
+    * point answered by several shards to its min dist, rank on the
+    * UNROUNDED distances, keep the first k, round only the emitted column
+    * (rounding first could order two points differently from the exact
+    * kNN the full-beam gates compare against when true distances differ
+    * only past 4 decimals at the rank-k boundary). */
+  private[vamana] def rankMerge(answers: DataFrame, k: Int): DataFrame = {
+    val merged = answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
+    merged
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("id"),
+        (expr("rint(dist * 10000)") / 1e4).as("dist"))
+      .orderBy(col("query_id"), col("rank"))
+  }
 
   /** Post-filter pools [[FanoutModel.postFilterSearch]] persists so the
     * survivor check and the returned frame share one fetch; bounded at

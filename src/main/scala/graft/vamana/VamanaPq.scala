@@ -101,15 +101,38 @@ object VamanaPq {
       while (s < m) { d += lut(s)(row(s)); s += 1 }
       d
     }
-    val kk = math.min(k, index.size)
-    val beamL = if (fullBeam) index.size else math.max(index.params.efSearch, kk)
-    val (poolIds, _) = VamanaKernel.greedySearchScored(score, index.graph, index.medoid, beamL)
-    poolIds
-      .map(p => (index.ids(p), VamanaKernel.l2sq(index.points(p), qv)))
-      .sortBy { case (id, d) => (d, id) }
-      .take(kk)
+    rerankTopK(index, score, qv, k, fullBeam, VamanaKernel.AnyId)
       .map { case (id, d) => (id, math.rint(d * 1e4) / 1e4) }
       .toIndexedSeq
+  }
+
+  /** ADC traversal over one index (the broadcast index or one shard),
+    * exact rerank of the visited pool, then the kernel's top-k step over
+    * the allowed ids — the per-index body of every PQ search path. */
+  private def rerankTopK(idx: LocalIndex, score: Int => Float, qv: Array[Float], k: Int,
+      fullBeam: Boolean, allowed: Long => Boolean): Array[(Long, Float)] = {
+    val kk = math.min(k, idx.size)
+    val beamL = if (fullBeam) idx.size else math.max(idx.params.efSearch, kk)
+    val (poolIds, _) = VamanaKernel.greedySearchScored(score, idx.graph, idx.medoid, beamL)
+    val exact = poolIds.map(p => VamanaKernel.l2sq(idx.points(p), qv))
+    VamanaKernel.topK(idx, poolIds, exact, kk, i => allowed(idx.ids(poolIds(i))))
+  }
+
+  /** One shard's answers to one query as (query_id, id, dist) rows: ADC
+    * scores over the shard's m-byte code rows, then [[rerankTopK]]. */
+  private def shardAnswers(idx: LocalIndex, cb: PqCodebooks, codes: Array[Array[Byte]],
+      qid: Long, qv: Array[Float], k: Int, fullBeam: Boolean,
+      allowed: Long => Boolean = VamanaKernel.AnyId): Iterator[(Long, Long, Double)] = {
+    val lut = adcLut(qv, cb)
+    val m = cb.m
+    val score: Int => Float = { node =>
+      val row = codes(node)
+      var d = 0.0f
+      var s = 0
+      while (s < m) { d += lut(s)(row(s)); s += 1 }
+      d
+    }
+    rerankTopK(idx, score, qv, k, fullBeam, allowed).iterator.map { case (id, d) => (qid, id, d.toDouble) }
   }
 
   /** The fitted broadcast-regime PQ serving state (index + codebooks +
@@ -264,38 +287,9 @@ object VamanaPq {
     val dirKey = cacheKey
     val answers = fm.shards.flatMap { case (shard, idx) =>
       val (cb, codes) = shardPqState(dirKey, shard, idx)
-      val m = cb.m
-      bcQ.value.iterator.flatMap { case (qid, qv) =>
-        val lut = adcLut(qv, cb)
-        val score: Int => Float = { node =>
-          val row = codes(node)
-          var d = 0.0f
-          var s = 0
-          while (s < m) { d += lut(s)(row(s)); s += 1 }
-          d
-        }
-        val kk = math.min(k, idx.size)
-        val beamL = if (fullBeam) idx.size else math.max(idx.params.efSearch, kk)
-        val (poolIds, _) = VamanaKernel.greedySearchScored(score, idx.graph, idx.medoid, beamL)
-        poolIds
-          .map(p => (idx.ids(p), VamanaKernel.l2sq(idx.points(p), qv).toDouble))
-          .sortBy { case (id, d) => (d, id) }
-          .take(kk)
-          .iterator
-          .map { case (id, d) => (qid, id, d) }
-      }
+      bcQ.value.iterator.flatMap { case (qid, qv) => shardAnswers(idx, cb, codes, qid, qv, k, fullBeam) }
     }.toDF("query_id", "id", "dist")
-    // same merge discipline as FanoutModel.searchImpl: dedup, rank on
-    // unrounded distances, round only the emitted column
-    val mergedA = answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
-    mergedA
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id"),
-        (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
+    FanoutModel.rankMerge(answers, k)
   }
 
   /** PQ-guided ROUTED serving — the serving-matrix cell (clustered
@@ -339,37 +333,10 @@ object VamanaPq {
       if (probes.isEmpty) Iterator.empty
       else {
         val (cb, codes) = shardPqState(dirKey, shard, idx)
-        val m = cb.m
-        probes.iterator.flatMap { case (qid, qv) =>
-          val lut = adcLut(qv, cb)
-          val score: Int => Float = { node =>
-            val row = codes(node)
-            var d = 0.0f
-            var s = 0
-            while (s < m) { d += lut(s)(row(s)); s += 1 }
-            d
-          }
-          val kk = math.min(k, idx.size)
-          val beamL = if (fullBeam) idx.size else math.max(idx.params.efSearch, kk)
-          val (poolIds, _) = VamanaKernel.greedySearchScored(score, idx.graph, idx.medoid, beamL)
-          poolIds
-            .map(pp => (idx.ids(pp), VamanaKernel.l2sq(idx.points(pp), qv).toDouble))
-            .sortBy { case (id, d) => (d, id) }
-            .take(kk)
-            .iterator
-            .map { case (id, d) => (qid, id, d) }
-        }
+        probes.iterator.flatMap { case (qid, qv) => shardAnswers(idx, cb, codes, qid, qv, k, fullBeam) }
       }
     }.toDF("query_id", "id", "dist")
-    val mergedR = answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
-    mergedR
-      .withColumn("rank", row_number().over(wr).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id"),
-        (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
+    FanoutModel.rankMerge(answers, k)
   }
 
   /** FILTERED PQ-guided fanout search — the serving-matrix completion
@@ -400,37 +367,11 @@ object VamanaPq {
       val (cb, codes) = shardPqState(dirKey, shard, idx)
       val allow = bcA.value
       val pred = (id: Long) => java.util.Arrays.binarySearch(allow, id) >= 0
-      val m = cb.m
       bcQ.value.iterator.flatMap { case (qid, qv) =>
-        val lut = adcLut(qv, cb)
-        val score: Int => Float = { node =>
-          val row = codes(node)
-          var d = 0.0f
-          var s = 0
-          while (s < m) { d += lut(s)(row(s)); s += 1 }
-          d
-        }
-        val kk = math.min(k, idx.size)
-        val beamL = if (fullBeam) idx.size else math.max(idx.params.efSearch, kk)
-        val (poolIds, _) = VamanaKernel.greedySearchScored(score, idx.graph, idx.medoid, beamL)
-        poolIds
-          .filter(p => pred(idx.ids(p)))
-          .map(p => (idx.ids(p), VamanaKernel.l2sq(idx.points(p), qv).toDouble))
-          .sortBy { case (id, d) => (d, id) }
-          .take(kk)
-          .iterator
-          .map { case (id, d) => (qid, id, d) }
+        shardAnswers(idx, cb, codes, qid, qv, k, fullBeam, pred)
       }
     }.toDF("query_id", "id", "dist")
-    val mergedA = answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
-    mergedA
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id"),
-        (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
+    FanoutModel.rankMerge(answers, k)
   }
 
   /** Hash-checked gate for the filtered PQ fanout path — the

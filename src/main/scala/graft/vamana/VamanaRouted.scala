@@ -3,7 +3,6 @@ package graft.vamana
 import scala.util.hashing.MurmurHash3
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** CLUSTERED (routed) shard layout for ANN serving — the SPANN posture
@@ -475,16 +474,8 @@ final class RoutedFanoutModel private[vamana] (
             .map { case (id, dist) => (qid, id, dist.toDouble) }
         }
     }.toDF("query_id", "id", "dist")
-    // ε-closure replication may answer a point twice — merge before rank;
-    // rank on unrounded distances (FanoutModel.searchImpl's rationale)
-    val merged = answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
-    merged
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id"),
-        (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
+    // ε-closure replication may answer a point twice
+    FanoutModel.rankMerge(answers, k)
   }
 
   /** Live per-shard point counts (one int per shard row — driver-trivial

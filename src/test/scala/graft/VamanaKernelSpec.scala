@@ -100,10 +100,13 @@ class VamanaKernelSpec extends AnyFunSuite {
     val points = randPoints(400, 8, seed = 17)
     val ids = Array.tabulate(400)(_.toLong)
     val params = VamanaParams(dim = 8, maxDegree = 16, beamWidth = 32, alpha = 1.2f, efSearch = 64, seed = 5L)
-    val g2 = VamanaKernel.buildParallel(ids, points, params, 2)
     val g8 = VamanaKernel.buildParallel(ids, points, params, 8)
-    assert(g2.graph.map(_.toSeq).toSeq == g8.graph.map(_.toSeq).toSeq,
-      "batch-synchronous build must not depend on thread count")
+    val others = Seq(1, 2).map(t => s"parallelism $t" -> VamanaKernel.buildParallel(ids, points, params, t)) :+
+      ("build" -> VamanaKernel.build(ids, points, params))
+    for ((name, g) <- others) {
+      assert(g.medoid == g8.medoid && g.graph.map(_.toSeq).toSeq == g8.graph.map(_.toSeq).toSeq,
+        s"$name: batch-synchronous build must not depend on thread count")
+    }
     assert(VamanaKernel.healthCheck(g8))
     val rng = new Random(23)
     val queries = Array.fill(40)(Array.fill(8)(rng.nextFloat() * 2 - 1))
@@ -112,6 +115,47 @@ class VamanaKernelSpec extends AnyFunSuite {
       (VamanaKernel.search(g8, q, 10).map(_._1).toSet intersect truth).size / 10.0
     }.sum / queries.length
     assert(avg >= 0.9, s"parallel-build recall $avg")
+  }
+
+  test("buildParallel rejects bad input before any work starts") {
+    val params = VamanaParams(dim = 8, maxDegree = 8, beamWidth = 16, efSearch = 16)
+    val points = randPoints(200, 8, seed = 3)
+    val ids = Array.tabulate(200)(_.toLong)
+    val ragged = points.clone()
+    ragged(150) = Array.fill(5)(0.5f)
+    val bad = Seq(
+      "zero points" -> (Array.empty[Long], Array.empty[Array[Float]]),
+      "too few ids" -> (ids.take(199), points),
+      "too many ids" -> (ids :+ 200L, points),
+      "ragged point" -> (ids, ragged),
+      "wrong dim everywhere" -> (ids, randPoints(200, 4, seed = 3)))
+    for ((name, (i, p)) <- bad) {
+      val builds = VamanaKernel.buildCount.get()
+      intercept[IllegalArgumentException](VamanaKernel.buildParallel(i, p, params, 2))
+      assert(VamanaKernel.buildCount.get() == builds, s"$name: a rejected build must not start")
+    }
+  }
+
+  test("paper-rule prune on clustered data: recall@10 >= 0.9 (2k points, 16 clusters, dim 16)") {
+    val rng = new Random(31)
+    val dim = 16
+    val centres = Array.fill(16)(Array.fill(dim)(rng.nextFloat() * 2 - 1))
+    def sample(): Array[Float] = {
+      val c = centres(rng.nextInt(centres.length))
+      Array.tabulate(dim)(j => c(j) + 0.1f * rng.nextGaussian().toFloat)
+    }
+    val points = Array.fill(2000)(sample())
+    val ids = Array.tabulate(points.length)(_.toLong)
+    val params = VamanaParams(dim = dim, maxDegree = 16, beamWidth = 32, alpha = 1.2f,
+      efSearch = 32, seed = 9L, paperPrune = true)
+    val index = VamanaKernel.buildParallel(ids, points, params, 4)
+    assert(VamanaKernel.healthCheck(index))
+    val queries = Array.fill(100)(sample())
+    val avg = queries.map { q =>
+      val truth = bruteKnn(points, q, 10).map(_.toLong).toSet
+      (VamanaKernel.search(index, q, 10).map(_._1).toSet intersect truth).size / 10.0
+    }.sum / queries.length
+    assert(avg >= 0.9, s"paper-prune recall on clustered data $avg")
   }
 
   test("paper-rule prune (DiskANN iterative) also clears the recall gate") {
