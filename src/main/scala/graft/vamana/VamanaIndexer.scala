@@ -1,8 +1,6 @@
 package graft.vamana
 
-import scala.util.hashing.MurmurHash3
-
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -84,26 +82,12 @@ object VamanaIndexer {
       new VamanaModel(index, maxLocalPoints)
     } else {
       val s = effShards
-      val seed = params.seed
-      // deterministic 2-of-s overlap assignment per point id
-      val assigned = ptsT.flatMap { case (id, vec) =>
-        val h1 = MurmurHash3.productHash((id, seed))
-        val h2 = MurmurHash3.productHash((id, seed + 1))
-        val s1 = math.floorMod(h1, s)
-        val s2 = math.floorMod(s1 + 1 + math.floorMod(h2, s - 1), s)
-        Seq((s1, id, vec), (s2, id, vec))
-      }
-      // one kernel build per shard, kept as a cached dataset of
-      // shard indexes — reused (a) to extract edges for the global merge and
-      // (b) as the beyond-broadcast fanout serving model. Never collected.
-      implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-        Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-      val shardIdx: Dataset[(Int, LocalIndex)] =
-        assigned.groupByKey(_._1).mapGroups { (shard, it) =>
-          val arr = it.toArray.sortBy(_._2)
-          (shard, VamanaKernel.build(arr.map(_._2), arr.map(_._3),
-            kParams.copy(seed = params.seed + shard)))
-        }.cache()
+      // deterministic 2-of-s overlap assignment per point id, then one
+      // kernel build per shard, kept as a cached dataset of shard indexes —
+      // reused (a) to extract edges for the global merge and (b) as the
+      // beyond-broadcast fanout serving model. Never collected.
+      val core = ShardCore.fit(ptsT, kParams, HashRouting(s, replicate2 = true), parallelism = 1)
+      val shardIdx = core.shards
       // union shard edge lists, dedup, then re-prune each merged list to R —
       // all keyed joins, nothing driver-side
       val prunedDs = mergeShardGraph(shardIdx, ptsT, params)
@@ -122,7 +106,7 @@ object VamanaIndexer {
         // beyond-broadcast: frames for save/export, shard kernels for serving
         VamanaModel.distributed(
           ModelFrames(ptsT.toDF("id", "vec"), prunedDs.toDF("id", "neighbors"), kParams),
-          new FanoutModel(shardIdx, kParams, s, replicate2 = true))
+          new FanoutModel(core))
       }
     }
   }
@@ -195,26 +179,29 @@ object VamanaIndexer {
   * the save layout; nothing here is ever collected. */
 final case class ModelFrames(points: DataFrame, graph: DataFrame, params: VamanaParams)
 
-/** A fitted shard-fanout serving model: one [[LocalIndex]] per shard, held
-  * as a CACHED dataset of kryo-serialized kernels — built exactly once at
-  * fit/load time. Every search deserializes shard kernels partition-locally
-  * and answers the whole broadcast query batch; the global answer is the
-  * per-query merge of shard top-ks (a global top-k is contained in the union
-  * of per-shard top-ks). Nothing is collected to the driver and no single
-  * index must fit in one broadcast — the working set per task is one shard. */
-final class FanoutModel private[vamana] (
-    private[vamana] val shards: Dataset[(Int, LocalIndex)],
-    val params: VamanaParams,
-    /** Shard count the FIT used — the routing modulus for every later
-      * insert. `shards.count()` is NOT this number once a delete removed
-      * an entire shard; routing with the live count would scatter new
-      * points into a different key space than the fitted corpus. */
-    private[vamana] val numShardsFit: Int,
-    /** True when the fit placed each point in TWO shards (the merged-graph
-      * sharded build); false for the 1-of-s [[VamanaFanout.fit]]. Inserts
-      * replicate exactly as the fit did, so inserted points get the same
-      * shard redundancy as fitted ones. */
-    private[vamana] val replicate2: Boolean) {
+/** A fitted shard-fanout serving model: hash-routed shards over the
+  * [[ShardCore]] (one cached [[LocalIndex]] per shard, built exactly once
+  * at fit/load time). Every search deserializes shard kernels partition-
+  * locally and answers the whole broadcast query batch; the global answer
+  * is the per-query merge of shard top-ks (a global top-k is contained in
+  * the union of per-shard top-ks). Nothing is collected to the driver and
+  * no single index must fit in one broadcast — the working set per task is
+  * one shard. */
+final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[HashRouting]) {
+  import FanoutModel._
+
+  private[vamana] def this(shards: Dataset[(Int, LocalIndex)], params: VamanaParams,
+      numShardsFit: Int, replicate2: Boolean) =
+    this(new ShardCore(shards, params, HashRouting(numShardsFit, replicate2)))
+
+  private[vamana] def shards: Dataset[(Int, LocalIndex)] = core.shards
+
+  def params: VamanaParams = core.params
+
+  /** See [[HashRouting]]: the fit-time shard count (insert routing
+    * modulus) and whether the fit placed each point in two shards. */
+  private[vamana] def numShardsFit: Int = core.routing.numShardsFit
+  private[vamana] def replicate2: Boolean = core.routing.replicate2
 
   /** Batch ANN top-k (same output shape as [[VamanaModel.search]]). Calling
     * it twice runs ZERO graph builds the second time (spec-asserted) — the
@@ -224,7 +211,8 @@ final class FanoutModel private[vamana] (
       k: Int,
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec"): DataFrame =
-    searchImpl(queries, k, queryIdCol, queryVecCol, startVecCol = None)
+    core.topK(core.prepare(queries, queryIdCol, queryVecCol), k)(
+      (_, idx) => q => VamanaKernel.search(idx, q._2, k))
 
   /** Q2 semantics on the fanout path: each shard resolves the start vector
     * to its own nearest stored point; the merge keeps the best answers. */
@@ -234,43 +222,8 @@ final class FanoutModel private[vamana] (
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec",
       startVecCol: String = "start_vec"): DataFrame =
-    searchImpl(queries, k, queryIdCol, queryVecCol, Some(startVecCol))
-
-  private def searchImpl(
-      queries: DataFrame,
-      k: Int,
-      queryIdCol: String,
-      queryVecCol: String,
-      startVecCol: Option[String]): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val metric = params.metric
-    val prepared: Array[(Long, Array[Float], Array[Float])] = startVecCol match {
-      case None =>
-        queries.select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
-          .as[(Long, Array[Float])].collect().sortBy(_._1)
-          .map { case (id, v) => (id, MetricReduction.prepareQuery(v, metric), null) }
-      case Some(sc) =>
-        queries.select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"),
-            col(sc).cast("array<float>"))
-          .as[(Long, Array[Float], Array[Float])].collect().sortBy(_._1)
-          .map { case (id, v, sv) =>
-            (id, MetricReduction.prepareQuery(v, metric), MetricReduction.prepareQuery(sv, metric))
-          }
-    }
-    require(prepared.length <= 10000, "fanout broadcasts the query batch; keep it bounded")
-    val bcQ = spark.sparkContext.broadcast(prepared)
-    val answers = shards.flatMap { case (_, idx) =>
-      bcQ.value.iterator.flatMap { case (qid, qvec, svec) =>
-        val res =
-          if (svec == null) VamanaKernel.search(idx, qvec, k)
-          else VamanaKernel.searchWithStartPoint(idx, svec, qvec, k)
-        res.iterator.map { case (id, dist) => (qid, id, dist.toDouble) }
-      }
-    }.toDF("query_id", "id", "dist")
-    // overlapping shards may answer the same point twice
-    FanoutModel.rankMerge(answers, k)
-  }
+    core.topK(core.prepare(queries, queryIdCol, queryVecCol, Some(startVecCol)), k)(
+      (_, idx) => q => VamanaKernel.searchWithStartPoint(idx, q._3, q._2, k))
 
   /** Range (radius) query on the fanout path — the serving regime where
     * range search is embarrassingly parallel: radius membership is a
@@ -285,51 +238,15 @@ final class FanoutModel private[vamana] (
       queries: DataFrame,
       radiusSq: Double,
       queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    require(params.metric == "l2", "range radius is a squared-L2 bound; fit with metric=l2")
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val prepared = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(prepared.length <= 10000, "fanout broadcasts the query batch; keep it bounded")
-    val bcQ = spark.sparkContext.broadcast(prepared)
-    val r = radiusSq.toFloat
-    val answers = shards.flatMap { case (_, idx) =>
-      bcQ.value.iterator.flatMap { case (qid, qvec) =>
-        VamanaKernel.rangeSearch(idx, qvec, r).iterator.map {
-          case (id, dist) => (qid, id, dist.toDouble)
-        }
-      }
-    }.toDF("query_id", "id", "dist")
-    answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-      .select(col("query_id"), col("id"), (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("id"))
-  }
+      queryVecCol: String = "query_vec"): DataFrame =
+    core.rangeUnion(queries, radiusSq, queryIdCol, queryVecCol)
 
   /** A new model over the SAME fitted shard graphs, with each kernel
     * re-parameterized to beam = shard size — the full-beam exactness
     * regime of the hash-checked gates, without a refit. The mapped
     * dataset is cached (one kernel per shard, same footprint as the
     * source shards). */
-  private[graft] def withFullBeamShards(): FanoutModel = {
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val s2 = shards.map { case (s, idx) =>
-      (s, new LocalIndex(idx.ids, idx.points, idx.graph, idx.medoid,
-        idx.params.copy(efSearch = idx.size)))
-    }.cache()
-    s2.count()
-    new FanoutModel(s2, params, numShardsFit, replicate2)
-  }
-
-  /** Soft cap on the broadcast allowed-id set: 5M sorted longs ≈ 40 MB —
-    * the mid-selectivity band where per-shard filtering pays is exactly
-    * where the set still broadcasts. Above it selectivity is high enough
-    * that plain [[search]] + post-filter keeps recall (the adaptive
-    * strategy's upper regime); below [[VamanaOps.ExactScanMaxAllowed]]
-    * the exact scan wins outright. */
-  val MaxBroadcastAllowed: Int = 5000000
+  private[graft] def withFullBeamShards(): FanoutModel = new FanoutModel(core.withFullBeam())
 
   /** Filtered Q1 on the fanout path — the beyond-broadcast story for
     * filtered serving: the allowed-id set is broadcast as sorted longs,
@@ -351,12 +268,7 @@ final class FanoutModel private[vamana] (
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec",
       fullBeam: Boolean = false): DataFrame =
-    if (allowedIds.length > MaxBroadcastAllowed) {
-      val spark = shards.sparkSession
-      import spark.implicits._
-      postFilterSearch(queries, spark.createDataset(allowedIds).toDF("id"),
-        deny = false, k, queryIdCol, queryVecCol, fullBeam)
-    } else searchIdFiltered(queries, allowedIds, deny = false, k, queryIdCol, queryVecCol, fullBeam)
+    byIds(queries, allowedIds, deny = false, k, queryIdCol, queryVecCol, fullBeam)
 
   /** [[searchFiltered]]'s complement form: rank every stored point EXCEPT
     * `deniedIds`. The natural shape for label-complement predicates
@@ -371,44 +283,27 @@ final class FanoutModel private[vamana] (
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec",
       fullBeam: Boolean = false): DataFrame =
-    if (deniedIds.length > MaxBroadcastAllowed) {
+    byIds(queries, deniedIds, deny = true, k, queryIdCol, queryVecCol, fullBeam)
+
+  private def byIds(queries: DataFrame, ids: Array[Long], deny: Boolean, k: Int,
+      queryIdCol: String, queryVecCol: String, fullBeam: Boolean): DataFrame =
+    if (ids.length > MaxBroadcastAllowed) {
       val spark = shards.sparkSession
       import spark.implicits._
-      postFilterSearch(queries, spark.createDataset(deniedIds).toDF("id"),
-        deny = true, k, queryIdCol, queryVecCol, fullBeam)
-    } else searchIdFiltered(queries, deniedIds, deny = true, k, queryIdCol, queryVecCol, fullBeam)
+      postFilterSearch(queries, spark.createDataset(ids).toDF("id"),
+        deny, k, queryIdCol, queryVecCol, fullBeam)
+    } else searchIdFiltered(queries, ids, deny, k, queryIdCol, queryVecCol, fullBeam)
 
   /** Live external-id count of the fitted index (distributed; the 2-of-s
     * replicated fit counts distinct ids, not shard rows). Memoized — the
     * adaptive filtered path reads it once per model. */
-  lazy val totalPoints: Long =
-    if (replicate2) idsDF.count()
-    else shards.map { case (_, idx) => idx.size.toLong }(Encoders.scalaLong)
-      .reduce(_ + _)
+  lazy val totalPoints: Long = if (replicate2) idsDF.count() else core.storedPoints
 
   /** All external ids in the fitted index as a distributed one-column
     * frame `id` — the complement side of the adaptive filtered path. */
-  private[vamana] def idsDF: DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val raw = shards.flatMap { case (_, idx) => idx.ids.iterator }.toDF("id")
-    if (replicate2) raw.distinct() else raw
-  }
+  private[vamana] def idsDF: DataFrame =
+    if (replicate2) core.idsDF.distinct() else core.idsDF
 
-  /** ADAPTIVE filtered search — the entry point that makes the broadcast
-    * band an internal decision instead of a caller contract (no caller
-    * can OOM the driver by collecting the wrong side): `allowed` is a
-    * one-column DataFrame of permitted external ids, and the model picks,
-    * from one cheap distributed count,
-    *  - broadcast-ALLOWED when the set fits the band;
-    *  - broadcast-DENIED (complement via anti-join against [[idsDF]],
-    *    never the driver) when the complement fits instead — the
-    *    high-selectivity regime where "all but a label" is the predicate;
-    *  - [[search]] with an over-fetched k + distributed semi-join
-    *    post-filter when BOTH sides exceed the band — at that scale the
-    *    filter passes nearly everything or nearly nothing, and only the
-    *    nearly-everything case reaches this branch (approximate:
-    *    recall-bounded by the overfetch, documented, never an abort). */
   /** M3 search-stats on the SHARDED layout — [[VamanaModel.searchStats]]'s
     * scatter-gather twin: every probed shard's kernel reports its own
     * (hops, comps) per query and the frame aggregates the two numbers a
@@ -425,20 +320,11 @@ final class FanoutModel private[vamana] (
       queryVecCol: String = "query_vec"): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
-    val metric = params.metric
-    val prepared = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (id, v) => (id, MetricReduction.prepareQuery(v, metric)) }
-    require(prepared.length <= 10000, "fanout broadcasts the query batch; keep it bounded")
-    val bcQ = spark.sparkContext.broadcast(prepared)
-    val fb = fullBeam
-    val kk = k
-    shards.flatMap { case (_, idx) =>
-      bcQ.value.iterator.map { case (qid, qvec) =>
-        val (_, hops, comps) =
-          VamanaKernel.searchCounted(idx, qvec, kk, if (fb) idx.size else 0)
-        (qid, hops, comps)
+    core.scatter(core.prepare(queries, queryIdCol, queryVecCol), probe = None) { (_, idx) =>
+      val beam = if (fullBeam) idx.size else 0
+      q => {
+        val (_, hops, comps) = VamanaKernel.searchCounted(idx, q._2, k, beam)
+        Iterator.single((q._1, hops, comps))
       }
     }.toDF("query_id", "hops", "comps")
       .groupBy(col("query_id"))
@@ -447,6 +333,20 @@ final class FanoutModel private[vamana] (
       .orderBy(col("query_id"))
   }
 
+  /** ADAPTIVE filtered search — the entry point that makes the broadcast
+    * band an internal decision instead of a caller contract (no caller
+    * can OOM the driver by collecting the wrong side): `allowed` is a
+    * one-column DataFrame of permitted external ids, and the model picks,
+    * from one cheap distributed count,
+    *  - broadcast-ALLOWED when the set fits the band;
+    *  - broadcast-DENIED (complement via anti-join against [[idsDF]],
+    *    never the driver) when the complement fits instead — the
+    *    high-selectivity regime where "all but a label" is the predicate;
+    *  - [[search]] with an over-fetched k + distributed semi-join
+    *    post-filter when BOTH sides exceed the band — at that scale the
+    *    filter passes nearly everything or nearly nothing, and only the
+    *    nearly-everything case reaches this branch (approximate:
+    *    recall-bounded by the overfetch, documented, never an abort). */
   def searchFiltered(queries: DataFrame, allowed: DataFrame, k: Int,
       fullBeam: Boolean): DataFrame =
     adaptiveFiltered(queries, allowed, deny = false, k, fullBeam)
@@ -457,23 +357,19 @@ final class FanoutModel private[vamana] (
       fullBeam: Boolean): DataFrame =
     adaptiveFiltered(queries, denied, deny = true, k, fullBeam)
 
-  /** `band` defaults to [[MaxBroadcastAllowed]]; the test hook narrows it
-    * so the complement and post-filter branches are exercised at spec
-    * scale instead of only beyond 5M ids. */
+  /** `band` defaults to [[FanoutModel.MaxBroadcastAllowed]]; the test hook
+    * narrows it so the complement and post-filter branches are exercised
+    * at spec scale instead of only beyond 5M ids. */
   private[vamana] def adaptiveFiltered(queries: DataFrame, filter: DataFrame, deny: Boolean,
       k: Int, fullBeam: Boolean, band: Int = MaxBroadcastAllowed): DataFrame = {
-    import org.apache.spark.sql.functions.col
     // distinct BEFORE counting: duplicate ids in the caller's frame would
     // inflate n (wrongly skipping the exact broadcast branch), corrupt the
     // complement arithmetic (totalPoints - n could go negative), and ride
     // duplicated through collectIds' broadcast
     val ids = filter.select(col(filter.columns.head).cast("long").as("id")).distinct()
     val n = ids.count()
-    def collectIds(df: DataFrame): Array[Long] = {
-      val spark = shards.sparkSession
-      import spark.implicits._
-      df.select(col("id")).as[Long].collect()
-    }
+    def collectIds(df: DataFrame): Array[Long] =
+      df.select(col("id")).as[Long](Encoders.scalaLong).collect()
     if (n <= band)
       searchIdFiltered(queries, collectIds(ids), deny, k, "query_id", "query_vec", fullBeam)
     else if (totalPoints - n <= band)
@@ -484,11 +380,6 @@ final class FanoutModel private[vamana] (
         !deny, k, "query_id", "query_vec", fullBeam)
     else postFilterSearch(queries, ids, deny, k, "query_id", "query_vec", fullBeam)
   }
-
-  /** Overfetch multiple for the beyond-broadcast post-filter branch: at
-    * the selectivity that reaches it (both filter sides > 5M) a k×8
-    * fetch retains recall while keeping the merge bounded. */
-  val PostFilterOverfetch: Int = 8
 
   /** The beyond-broadcast branch with ESCALATING overfetch: fetch k×mult,
     * post-filter with a distributed semi/anti-join, and — instead of
@@ -511,7 +402,12 @@ final class FanoutModel private[vamana] (
     var prev: DataFrame = null
     while (result == null) {
       val fetchK = math.min(math.min(k.toLong * mult, total), Int.MaxValue.toLong).toInt
-      val fetched = searchAtBeam(queries, fetchK, queryIdCol, queryVecCol, fullBeam)
+      // the fetch stage: plain search, or the full-beam form of the
+      // filtered core with an empty deny set
+      val fetched =
+        if (!fullBeam) search(queries, fetchK, queryIdCol, queryVecCol)
+        else searchIdFiltered(queries, Array.empty[Long], deny = true, fetchK,
+          queryIdCol, queryVecCol, fullBeam = true)
       val kept = FanoutModel.pinPool(
         fetched.join(filterIds, Seq("id"), if (deny) "left_anti" else "left_semi")
           .persist())
@@ -541,54 +437,18 @@ final class FanoutModel private[vamana] (
     result
   }
 
-  /** [[search]] with an optional full-beam override — the post-filter
-    * branch's fetch stage. */
-  private def searchAtBeam(queries: DataFrame, k: Int, queryIdCol: String,
-      queryVecCol: String, fullBeam: Boolean): DataFrame =
-    if (!fullBeam) searchImpl(queries, k, queryIdCol, queryVecCol, startVecCol = None)
-    else searchIdFiltered(queries, Array.empty[Long], deny = true, k,
-      queryIdCol, queryVecCol, fullBeam = true)
-
   /** The broadcast-band core: `filterIds` rides to every shard as sorted
     * longs; `deny` picks membership vs non-membership as the ranking
     * predicate for [[VamanaKernel.searchFiltered]] (traversal always
     * unfiltered). */
-  private def searchIdFiltered(
-      queries: DataFrame,
-      filterIds: Array[Long],
-      deny: Boolean,
-      k: Int,
-      queryIdCol: String,
-      queryVecCol: String,
-      fullBeam: Boolean): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val metric = params.metric
-    val prepared: Array[(Long, Array[Float])] = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (id, v) => (id, MetricReduction.prepareQuery(v, metric)) }
-    require(prepared.length <= 10000, "fanout broadcasts the query batch; keep it bounded")
-    val sorted = { val a = filterIds.clone(); java.util.Arrays.sort(a); a }
-    val bcQ = spark.sparkContext.broadcast(prepared)
-    val bcA = spark.sparkContext.broadcast(sorted)
-    val denyFlag = deny
-    val answers = shards.flatMap { case (_, idx) =>
-      val ids = bcA.value
-      val pred = (id: Long) => (java.util.Arrays.binarySearch(ids, id) >= 0) != denyFlag
-      val beam = if (fullBeam) idx.size else 0
-      bcQ.value.iterator.flatMap { case (qid, qvec) =>
-        VamanaKernel.searchFiltered(idx, qvec, k, pred, beam)
-          .iterator.map { case (id, dist) => (qid, id, dist.toDouble) }
-      }
-    }.toDF("query_id", "id", "dist")
-    FanoutModel.rankMerge(answers, k)
-  }
+  private def searchIdFiltered(queries: DataFrame, filterIds: Array[Long], deny: Boolean,
+      k: Int, queryIdCol: String, queryVecCol: String, fullBeam: Boolean): DataFrame =
+    core.filteredTopK(core.prepare(queries, queryIdCol, queryVecCol), filterIds, deny, k, fullBeam)
 
   /** Release the cached shard dataset (cache-lifecycle surface for tests
     * and long-lived services; searching after this rebuilds nothing but
     * re-reads whatever produced the shards). */
-  def unpersist(): Unit = { val _ = shards.unpersist() }
+  def unpersist(): Unit = core.unpersist()
 
   /** Distributed incremental insert — the daily-embedding-batch shape at
     * 100 TB: new points are routed by the FIT-TIME shard count and seeded
@@ -602,50 +462,12 @@ final class FanoutModel private[vamana] (
     * corpus norm at fit time, which a later batch could invalidate — refit
     * for ip. */
   def insert(newPoints: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): FanoutModel = {
-    require(params.metric != "ip",
-      "incremental insert is not defined for metric=ip (fit-time norm augmentation); refit instead")
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val s = numShardsFit
-    val rep2 = replicate2 && s >= 2
-    val seed = params.seed
-    val kp = params
-    val pts = newPoints
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])]
-    val (ptsT, _) = VamanaIndexer.metricTransform(pts, params)
-    // the fit's exact assignment: s1 always; s2 too when the fit overlapped
-    val assigned = ptsT.flatMap { case (id, vec) =>
-      val h1 = MurmurHash3.productHash((id, seed))
-      val s1 = math.floorMod(h1, s)
-      if (!rep2) Seq((s1, id, vec))
-      else {
-        val h2 = MurmurHash3.productHash((id, seed + 1))
-        val s2 = math.floorMod(s1 + 1 + math.floorMod(h2, s - 1), s)
-        Seq((s1, id, vec), (s2, id, vec))
-      }
-    }.groupByKey(_._1)
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val updated = shards.groupByKey(_._1)
-      .cogroup(assigned) { (shard, idxIt, newIt) =>
-        val batch = newIt.toArray.sortBy(_._2)
-        val idxs = idxIt.toArray
-        if (idxs.isEmpty) {
-          // shard row gone (full-membership delete): rebuild it from the batch
-          if (batch.isEmpty) Iterator.empty
-          else Iterator.single((shard, VamanaKernel.build(
-            batch.map(_._2), batch.map(_._3), kp.copy(seed = kp.seed + shard))))
-        } else idxs.iterator.map { case (_, idx) =>
-          (shard,
-            if (batch.isEmpty) idx
-            else VamanaKernel.insert(idx, batch.map(_._2), batch.map(_._3)))
-        }
-      }.cache()
-    updated.count() // materialize once; the old model stays independently usable
-    new FanoutModel(updated, params, numShardsFit, replicate2)
-  }
+      vecCol: String = "embedding"): FanoutModel =
+    new FanoutModel(core.insert(newPoints, idCol, vecCol))
+
+  /** Live per-shard point counts (one int per shard row — driver-trivial
+    * at any corpus size). The observable [[rebalance]] acts on. */
+  def shardSizes: Array[Int] = core.shardSizes
 
   /** Shard-size REBALANCE for long-running mutation streams: hash routing
     * keeps expected sizes even, but a skewed insert stream (every batch
@@ -670,51 +492,9 @@ final class FanoutModel private[vamana] (
     * the membership fingerprint ([[VamanaPq]]) sees the new id arrays.
     * Scale shape: the driver sees only (shard, size) pairs; each split
     * runs inside its shard's task, working set = one shard. */
-  /** Live per-shard point counts (one int per shard row — driver-trivial
-    * at any corpus size). The observable [[rebalance]] acts on. */
-  def shardSizes: Array[Int] =
-    shards.map { case (_, idx) => idx.size }(Encoders.scalaInt).collect().sorted
-
   def rebalance(maxRatio: Double = 2.0, maxPasses: Int = 4): FanoutModel = {
-    require(maxRatio >= 1.0, "maxRatio < 1 would split forever")
-    val spark = shards.sparkSession
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val sizeEnc: Encoder[(Int, Int)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
-    val kp = params
-    var cur = shards
-    var pass = 0
-    var done = false
-    while (pass < maxPasses && !done) {
-      val sizes = cur.map { case (s, idx) => (s, idx.size) }(sizeEnc).collect()
-      val mean = sizes.map(_._2.toDouble).sum / sizes.length
-      val big = sizes.filter { case (_, n) => n > maxRatio * mean && n >= 2 }.map(_._1)
-      if (big.isEmpty) done = true
-      else {
-        val maxId = sizes.map(_._1).max
-        val freshIds = big.sorted.zipWithIndex
-          .map { case (s, i) => (s, maxId + 1 + i) }.toMap
-        val bcFresh = spark.sparkContext.broadcast(freshIds)
-        val next = cur.flatMap { case (s, idx) =>
-          bcFresh.value.get(s) match {
-            case None => Iterator.single((s, idx))
-            case Some(fresh) =>
-              val (a, b) = FanoutModel.splitMembership(idx)
-              Iterator(
-                (s, VamanaKernel.build(a.map(_._1), a.map(_._2),
-                  kp.copy(seed = kp.seed + s))),
-                (fresh, VamanaKernel.build(b.map(_._1), b.map(_._2),
-                  kp.copy(seed = kp.seed + fresh))))
-          }
-        }.cache()
-        next.count() // materialize; the old model stays independently usable
-        if (cur ne shards) cur.unpersist()
-        cur = next
-      }
-      pass += 1
-    }
-    if (cur eq shards) this else new FanoutModel(cur, params, numShardsFit, replicate2)
+    val next = core.rebalance(maxRatio, maxPasses)
+    if (next eq core) this else new FanoutModel(next)
   }
 
   /** Distributed index MERGE — the fanout twin of [[VamanaKernel.merge]]
@@ -730,97 +510,40 @@ final class FanoutModel private[vamana] (
     * fits' shard sizes differ wildly. Id sets must be disjoint (checked
     * distributed — one semi-join over the id frames); future inserts
     * route by THIS model's fitted key space. `ip` rejected: the two fits
-    * augmented different max norms. */
-  def merge(other: FanoutModel): FanoutModel = {
-    require(params.metric != "ip" && other.params.metric != "ip",
-      "merge is not defined for metric=ip (per-fit norm augmentation); refit instead")
-    require(params.metric == other.params.metric,
-      s"metric mismatch: ${params.metric} vs ${other.params.metric} — a cosine fit " +
-        "stores normalized kernel-space points, so unioning it with an l2 fit would " +
-        "serve the other side's differently-transformed points against queries " +
-        "prepared with this model's metric (mirrors VamanaKernel.merge's guard)")
-    require(params.dim == other.params.dim,
-      s"dimension mismatch: ${params.dim} vs ${other.params.dim}")
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val idEnc = Encoders.scalaLong
-    val myIds = shards.flatMap { case (_, idx) => idx.ids.iterator }(idEnc).toDF("id")
-    val otherIds = other.shards.flatMap { case (_, idx) => idx.ids.iterator }(idEnc).toDF("id")
-    require(myIds.join(otherIds, "id").isEmpty,
-      "id sets overlap; merge requires disjoint indexes (dedup first, or delete one side's copies)")
-    val sizeEnc = Encoders.scalaInt
-    val myMax = shards.map(_._1)(sizeEnc).collect().max
-    val otherMin = other.shards.map(_._1)(sizeEnc).collect().min
-    val offset = myMax + 1 - otherMin
-    val rekeyed = other.shards.map { case (s, idx) => (s + offset, idx) }
-    val merged = shards.union(rekeyed).cache()
-    merged.count() // materialize; both inputs stay independently usable
-    new FanoutModel(merged, params, numShardsFit, replicate2)
-  }
+    * augmented different max norms; a metric mismatch is rejected too (a
+    * cosine fit stores normalized kernel-space points, mirroring
+    * [[VamanaKernel.merge]]'s guard). */
+  def merge(other: FanoutModel): FanoutModel = new FanoutModel(core.merge(other.core))
 
   /** Distributed delete: each shard drops its own members via
     * [[VamanaKernel.delete]] (eager hole-repair + compaction, zero
     * rebuilds); a shard whose entire membership is deleted disappears.
+    * The fit-time shard count is retained: routing stays in the fitted
+    * key space even when a shard row disappeared (insert recreates it).
     * The delete batch is broadcast — bounded like any delete list. */
-  def delete(deleteIds: Array[Long]): FanoutModel = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val bc = spark.sparkContext.broadcast(deleteIds)
-    val updated = shards.flatMap { case (shard, idx) =>
-      val delSet = bc.value.toSet
-      val n = idx.ids.count(delSet.contains)
-      if (n == idx.size) Iterator.empty
-      else if (n == 0) Iterator.single((shard, idx))
-      else Iterator.single((shard, VamanaKernel.delete(idx, bc.value)))
-    }.cache()
-    updated.count()
-    // fit-time shard count is retained: routing stays in the fitted key
-    // space even when a shard row disappeared (insert recreates it)
-    new FanoutModel(updated, params, numShardsFit, replicate2)
-  }
+  def delete(deleteIds: Array[Long]): FanoutModel = new FanoutModel(core.delete(deleteIds))
 
   /** S3 for the fanout path: one parquet of per-shard model rows (vectors +
     * external-id adjacency + per-shard medoid/seed) plus a one-row global
     * params file. Written straight from the shard dataset — distributed. */
-  def save(path: String): Unit = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    shards.flatMap { case (shard, idx) =>
-      idx.ids.indices.iterator.map { pos =>
-        (shard, pos, idx.ids(pos), idx.points(pos), idx.graph(pos).map(idx.ids(_)),
-          idx.medoid, idx.params.seed)
-      }
-    }.toDF("shard", "pos", "id", "vec", "neighbors", "medoid_pos", "shard_seed")
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$path/shards")
-    val p = params
-    Seq((p.dim, p.maxDegree, p.beamWidth, p.alpha.toDouble, p.efSearch, p.seed,
-      p.paperPrune, p.metric, numShardsFit, replicate2))
-      .toDF("dim", "max_degree", "beam_width", "alpha", "ef_search", "seed",
-        "paper_prune", "metric", "num_shards", "replicate2")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-  }
+  def save(path: String): Unit =
+    core.save(path, Seq("num_shards" -> lit(numShardsFit), "replicate2" -> lit(replicate2)))
 }
 
 object FanoutModel {
 
-  /** The global merge of per-shard (query_id, id, dist) answers: dedup a
-    * point answered by several shards to its min dist, rank on the
-    * UNROUNDED distances, keep the first k, round only the emitted column
-    * (rounding first could order two points differently from the exact
-    * kNN the full-beam gates compare against when true distances differ
-    * only past 4 decimals at the rank-k boundary). */
-  private[vamana] def rankMerge(answers: DataFrame, k: Int): DataFrame = {
-    val merged = answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
-    merged
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id"),
-        (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+  /** Soft cap on a broadcast id set: 5M sorted longs ≈ 40 MB — the
+    * mid-selectivity band where per-shard filtering pays is exactly where
+    * the set still broadcasts. Above it selectivity is high enough that
+    * plain [[FanoutModel.search]] + post-filter keeps recall (the adaptive
+    * strategy's upper regime); below [[VamanaOps.ExactScanMaxAllowed]] the
+    * exact scan wins outright. */
+  val MaxBroadcastAllowed: Int = 5000000
+
+  /** Overfetch multiple for the beyond-broadcast post-filter branch: at
+    * the selectivity that reaches it (both filter sides > 5M) a k×8
+    * fetch retains recall while keeping the merge bounded. */
+  val PostFilterOverfetch: Int = 8
 
   /** Post-filter pools [[FanoutModel.postFilterSearch]] persists so the
     * survivor check and the returned frame share one fetch; bounded at
@@ -836,112 +559,28 @@ object FanoutModel {
     pinnedPools.clear()
   }
 
-  /** Deterministic locality-aware balanced split of one shard's
-    * membership for [[FanoutModel.rebalance]]: 2-means (seeded from point
-    * 0 and its farthest member — no RNG — then 3 Lloyd refinements), then
-    * a BALANCED MEDIAN CUT on the margin d²(p,c0) − d²(p,c1) with
-    * ascending-id tie-break: the ⌊n/2⌋ points most c0-side form one half.
-    * Locality of 2-means (graph quality of the rebuilt halves), size
-    * guarantee of the cut (raw 2-means can split 90/10 on skewed data —
-    * useless for a size rebalance). Each half is emitted sorted by id. */
-  private[vamana] def splitMembership(idx: LocalIndex)
-      : (Array[(Long, Array[Float])], Array[(Long, Array[Float])]) = {
-    val n = idx.size
-    val pts = idx.points
-    def d2(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < a.length) { val d = a(i).toDouble - b(i); s += d * d; i += 1 }
-      s
-    }
-    var c0 = pts(0)
-    var far = 0
-    var fd = -1.0
-    var i = 0
-    while (i < n) {
-      val d = d2(pts(i), c0)
-      if (d > fd) { fd = d; far = i }
-      i += 1
-    }
-    var c1 = pts(far)
-    var it = 0
-    while (it < 3) {
-      val s0 = new Array[Double](c0.length)
-      val s1 = new Array[Double](c0.length)
-      var n0 = 0
-      var n1 = 0
-      i = 0
-      while (i < n) {
-        val p = pts(i)
-        val toFirst = d2(p, c0) <= d2(p, c1)
-        val acc = if (toFirst) s0 else s1
-        var j = 0
-        while (j < p.length) { acc(j) += p(j); j += 1 }
-        if (toFirst) n0 += 1 else n1 += 1
-        i += 1
-      }
-      if (n0 > 0) c0 = s0.map(v => (v / n0).toFloat)
-      if (n1 > 0) c1 = s1.map(v => (v / n1).toFloat)
-      it += 1
-    }
-    val order = Array.range(0, n)
-      .sortBy(i => (d2(pts(i), c0) - d2(pts(i), c1), idx.ids(i)))
-    val half = n / 2
-    def toPairs(ix: Array[Int]) =
-      ix.map(i => (idx.ids(i), pts(i))).sortBy(_._1)
-    (toPairs(order.take(half)), toPairs(order.drop(half)))
-  }
-
   /** S2 for the fanout path: reassemble each shard kernel inside one task,
     * cache — searches after load run zero builds, zero per-query I/O. */
   def load(spark: SparkSession, path: String): FanoutModel = {
-    import spark.implicits._
-    val p = spark.read.parquet(s"$path/params").head()
-    val params = VamanaParams(
-      dim = p.getAs[Int]("dim"),
-      maxDegree = p.getAs[Int]("max_degree"),
-      beamWidth = p.getAs[Int]("beam_width"),
-      alpha = p.getAs[Double]("alpha").toFloat,
-      efSearch = p.getAs[Int]("ef_search"),
-      seed = p.getAs[Long]("seed"),
-      paperPrune = p.getAs[Boolean]("paper_prune"),
-      metric = p.getAs[String]("metric"))
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val rows = spark.read.parquet(s"$path/shards")
-      .select(col("shard").cast("int"), col("pos").cast("int"), col("id"),
-        col("vec").cast("array<float>"), col("neighbors"),
-        col("medoid_pos").cast("int"), col("shard_seed").cast("long"))
-      .as[(Int, Int, Long, Array[Float], Array[Long], Int, Long)]
-    val shards = rows.groupByKey(_._1).mapGroups { (shard, it) =>
-      val arr = it.toArray.sortBy(_._2)
-      val ids = arr.map(_._3)
-      val posOf = ids.zipWithIndex.toMap
-      val graph = arr.map(_._5.flatMap(posOf.get(_)))
-      (shard, new LocalIndex(ids, arr.map(_._4), graph, arr.head._6,
-        params.copy(seed = arr.head._7)))
-    }.cache()
-    shards.count() // materialize once, up front
+    val (params, row) = ShardCore.readParams(spark, path)
+    val shards = ShardCore.loadShards(spark, path, params)
     // num_shards/replicate2 entered the params schema after the first
     // checkpoint format shipped; older saves lack them, so fall back to
     // the observable shard count / non-replicated rather than failing.
-    val fields = p.schema.fieldNames.toSet
-    val numShardsFit =
-      if (fields.contains("num_shards")) p.getAs[Int]("num_shards")
-      else shards.count().toInt
-    val rep2 =
-      if (fields.contains("replicate2")) p.getAs[Boolean]("replicate2") else false
-    new FanoutModel(shards, params, numShardsFit, rep2)
+    new FanoutModel(shards, params,
+      ShardCore.paramOr(row, "num_shards", shards.count().toInt),
+      ShardCore.paramOr(row, "replicate2", false))
   }
 }
 
-/** Shard-fanout ANN fit/search — the beyond-broadcast scale path. */
+/** Shard-fanout ANN fit — the beyond-broadcast scale path. */
 object VamanaFanout {
 
   /** Build one Vamana kernel per shard (each point in exactly one shard),
     * distributed, materialized ONCE into the returned model's cache. Shard
     * builds use the batch-synchronous parallel kernel so a machine with
-    * more cores than shards isn't idle. */
+    * more cores than shards isn't idle. Serve with the returned model
+    * (e.g. [[VamanaOps]] caches it per dataset). */
   def fit(
       points: DataFrame,
       params: VamanaParams,
@@ -954,33 +593,9 @@ object VamanaFanout {
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .as[(Long, Array[Float])]
     val (ptsT, kParams) = VamanaIndexer.metricTransform(pts, params)
-    val seed = params.seed
-    val par = math.max(2, Runtime.getRuntime.availableProcessors() / math.max(1, numShards))
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val shards = ptsT
-      .groupByKey { case (id, _) => math.floorMod(MurmurHash3.productHash((id, seed)), numShards) }
-      .mapGroups { (shard, it) =>
-        val arr = it.toArray.sortBy(_._1)
-        (shard, VamanaKernel.buildParallel(arr.map(_._1), arr.map(_._2),
-          kParams.copy(seed = seed + shard), par))
-      }.cache()
-    shards.count() // force the builds NOW, exactly once
-    new FanoutModel(shards, params = kParams, numShards, replicate2 = false)
+    new FanoutModel(ShardCore.fit(ptsT, kParams, HashRouting(numShards, replicate2 = false),
+      ShardCore.threadsPerShard(numShards)))
   }
-
-  /** One-shot fit+search (round-1 signature, kept for callers that want a
-    * single ephemeral query batch; long-lived serving should hold the
-    * [[fit]] result — e.g. [[VamanaOps]] caches it per dataset). */
-  def search(
-      points: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      params: VamanaParams,
-      numShards: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    fit(points, params, numShards, idCol, vecCol).search(queries, k)
 }
 
 /** A fitted Vamana index. Under the size threshold it wraps a broadcastable
@@ -1028,7 +643,6 @@ final class VamanaModel private (
       vecCol: String = "embedding"): VamanaModel = localOpt match {
     case None =>
       val f = fanoutOpt.get.insert(newPoints, idCol, vecCol)
-      // regenerate the save-time frames from the UPDATED shards, lazily —
       // a save() of the new model must include the batch
       val spark = newPoints.sparkSession
       import spark.implicits._
@@ -1037,13 +651,7 @@ final class VamanaModel private (
         .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
         .as[(Long, Array[Float])]
       val (batchT, _) = VamanaIndexer.metricTransform(pts, old.params)
-      val allPts = old.points
-        .select(col("id").cast("long"), col("vec").cast("array<float>"))
-        .as[(Long, Array[Float])]
-        .union(batchT)
-      val graph = VamanaIndexer.mergeShardGraph(f.shards, allPts, old.params)
-      VamanaModel.distributed(
-        ModelFrames(allPts.toDF("id", "vec"), graph.toDF("id", "neighbors"), old.params), f)
+      VamanaModel.regenerated(old.points.union(batchT.toDF("id", "vec")), f, old.params)
     case Some(idx) =>
       require(idx.params.metric != "ip",
         "incremental insert is not defined for metric=ip (fit-time norm augmentation); refit instead")
@@ -1084,15 +692,7 @@ final class VamanaModel private (
       // fanout × fanout: shard-union merge + regenerated save-time frames
       val f = fanoutOpt.get.merge(other.fanoutOpt.get)
       val old = framesOpt.get
-      val oth = other.framesOpt.get
-      val spark = old.points.sparkSession
-      import spark.implicits._
-      val allPts = old.points.union(oth.points)
-        .select(col("id").cast("long"), col("vec").cast("array<float>"))
-        .as[(Long, Array[Float])]
-      val graph = VamanaIndexer.mergeShardGraph(f.shards, allPts, old.params)
-      VamanaModel.distributed(
-        ModelFrames(allPts.toDF("id", "vec"), graph.toDF("id", "neighbors"), old.params), f)
+      VamanaModel.regenerated(old.points.union(other.framesOpt.get.points), f, old.params)
     case _ => throw new IllegalStateException(
       "merge requires both models in the same regime (both broadcast or both fanout); " +
         "refit the smaller side, or insert its points instead")
@@ -1107,15 +707,8 @@ final class VamanaModel private (
     case None =>
       val f = fanoutOpt.get.delete(deleteIds)
       val old = framesOpt.get
-      val spark = old.points.sparkSession
-      import spark.implicits._
-      val ptsT = old.points
-        .where(!col("id").isInCollection(deleteIds.toSeq))
-        .select(col("id").cast("long"), col("vec").cast("array<float>"))
-        .as[(Long, Array[Float])]
-      val graph = VamanaIndexer.mergeShardGraph(f.shards, ptsT, old.params)
-      VamanaModel.distributed(
-        ModelFrames(ptsT.toDF("id", "vec"), graph.toDF("id", "neighbors"), old.params), f)
+      VamanaModel.regenerated(
+        old.points.where(!col("id").isInCollection(deleteIds.toSeq)), f, old.params)
   }
 
   def index: LocalIndex = localOpt.getOrElse(throw new IllegalStateException(
@@ -1251,26 +844,20 @@ final class VamanaModel private (
     * aggregate jobs (centroid argmin + id rank) — still no collect. */
   def describe(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    localOpt match {
-      case Some(idx) =>
-        val p = idx.params
-        Seq((p.dim, p.maxDegree, p.beamWidth, p.alpha.toDouble, p.efSearch, p.seed,
-          p.paperPrune, p.metric, idx.medoid, idx.size.toLong, maxLocalPoints))
-          .toDF("dim", "max_degree", "beam_width", "alpha", "ef_search", "seed",
-            "paper_prune", "metric", "medoid_pos", "data_size", "max_local_points")
+    val (p, medoidPos, n) = localOpt match {
+      case Some(idx) => (idx.params, idx.medoid, idx.size.toLong)
       case None =>
         val f = framesOpt.get
         val pts = f.points.select(col("id").cast("long"), col("vec").cast("array<float>"))
           .as[(Long, Array[Float])]
         val medoidId = VamanaIndexer.distributedMedoidId(pts)
         val medoidPos = pts.filter(_._1 < medoidId).count().toInt
-        val n = f.points.count()
-        val p = f.params
-        Seq((p.dim, p.maxDegree, p.beamWidth, p.alpha.toDouble, p.efSearch, p.seed,
-          p.paperPrune, p.metric, medoidPos, n, maxLocalPoints))
-          .toDF("dim", "max_degree", "beam_width", "alpha", "ef_search", "seed",
-            "paper_prune", "metric", "medoid_pos", "data_size", "max_local_points")
+        (f.params, medoidPos, f.points.count())
     }
+    ShardCore.paramsFrame(spark, p)
+      .withColumn("medoid_pos", lit(medoidPos))
+      .withColumn("data_size", lit(n))
+      .withColumn("max_local_points", lit(maxLocalPoints))
   }
 
   /** (pos, id, vec) for a distributed model with pos = 0-based rank of id,
@@ -1362,6 +949,17 @@ object VamanaModel {
   private[vamana] def distributed(frames: ModelFrames, fanout: FanoutModel): VamanaModel =
     new VamanaModel(None, Some(frames), Some(fanout), VamanaIndexer.DefaultMaxLocalPoints)
 
+  /** A distributed model over the mutated shards `f`, its save-time frames
+    * regenerated lazily from `points` (id, vec; kernel space) and `f`. */
+  private def regenerated(points: DataFrame, f: FanoutModel, params: VamanaParams): VamanaModel = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    val pts = points.select(col("id").cast("long"), col("vec").cast("array<float>"))
+      .as[(Long, Array[Float])]
+    distributed(ModelFrames(pts.toDF("id", "vec"),
+      VamanaIndexer.mergeShardGraph(f.shards, pts, params).toDF("id", "neighbors"), params), f)
+  }
+
   /** S2 (load, vamana.h:55-96): restore points/graph/params from parquet
     * into a broadcastable LocalIndex. Internal positions are persisted
     * explicitly, so the medoid and graph indices survive the roundtrip
@@ -1369,21 +967,10 @@ object VamanaModel {
     * path: [[FanoutModel.load]] never materializes a single index.) */
   def load(spark: SparkSession, path: String): VamanaModel = {
     import spark.implicits._
-    val p = spark.read.parquet(s"$path/params").head()
-    val params = VamanaParams(
-      dim = p.getAs[Int]("dim"),
-      maxDegree = p.getAs[Int]("max_degree"),
-      beamWidth = p.getAs[Int]("beam_width"),
-      alpha = p.getAs[Double]("alpha").toFloat,
-      efSearch = p.getAs[Int]("ef_search"),
-      seed = p.getAs[Long]("seed"),
-      paperPrune = p.getAs[Boolean]("paper_prune"),
-      metric = p.getAs[String]("metric"))
+    val (params, p) = ShardCore.readParams(spark, path)
     // max_local_points joined the params schema later; older saves fall
     // back to the default rather than failing (same policy as fanout load).
-    val maxLocal =
-      if (p.schema.fieldNames.contains("max_local_points")) p.getAs[Long]("max_local_points")
-      else VamanaIndexer.DefaultMaxLocalPoints
+    val maxLocal = ShardCore.paramOr(p, "max_local_points", VamanaIndexer.DefaultMaxLocalPoints)
     val pts = spark.read.parquet(s"$path/points")
       .select(col("pos"), col("id"), col("vec").cast("array<float>"))
       .as[(Int, Long, Array[Float])].collect().sortBy(_._1)

@@ -87,6 +87,11 @@ final class LocalIndex(
     val medoid: Int,
     val params: VamanaParams) extends Serializable {
   def size: Int = points.length
+
+  /** The same graph with beam = size: full-beam greedy search expands every
+    * node reachable from the medoid, so on a connected graph it returns the
+    * exact top-k (the regime of the hash-checked exactness gates). */
+  def withFullBeam: LocalIndex = new LocalIndex(ids, points, graph, medoid, params.copy(efSearch = size))
 }
 
 /** The Vamana kernel: plain Scala, no Spark dependency, heavily

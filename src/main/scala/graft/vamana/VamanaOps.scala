@@ -175,9 +175,7 @@ object VamanaOps {
     val merged = mergeCache.getOrElseUpdate(dir, {
       val a = VamanaIndexer.fit(emb.where(col("vec_id") % 2 === 0), defaultParams)
       val b = VamanaIndexer.fit(emb.where(col("vec_id") % 2 === 1), defaultParams)
-      val idx = a.merge(b).index
-      new VamanaModel(new LocalIndex(idx.ids, idx.points, idx.graph, idx.medoid,
-        idx.params.copy(efSearch = idx.size)))
+      new VamanaModel(a.merge(b).index.withFullBeam)
     })
     val q = Knn.queriesFromPoints(emb, 10)
     val ann = merged.search(q, k).select(col("query_id"), col("id"))
@@ -316,8 +314,7 @@ object VamanaOps {
       val idx = model(spark, dir).localIndex.getOrElse(sys.error(
         "vamana_search_overlap is a broadcast-scale exactness gate; " +
           "distributed models are recall-gated by vamana_recall instead"))
-      new VamanaModel(new LocalIndex(idx.ids, idx.points, idx.graph, idx.medoid,
-        idx.params.copy(efSearch = idx.size)))
+      new VamanaModel(idx.withFullBeam)
     })
 
   /** Hash-checked serving-path gate: per-query OVERLAP between the graph

@@ -118,11 +118,11 @@ object VamanaPq {
     VamanaKernel.topK(idx, poolIds, exact, kk, i => allowed(idx.ids(poolIds(i))))
   }
 
-  /** One shard's answers to one query as (query_id, id, dist) rows: ADC
-    * scores over the shard's m-byte code rows, then [[rerankTopK]]. */
-  private def shardAnswers(idx: LocalIndex, cb: PqCodebooks, codes: Array[Array[Byte]],
-      qid: Long, qv: Array[Float], k: Int, fullBeam: Boolean,
-      allowed: Long => Boolean = VamanaKernel.AnyId): Iterator[(Long, Long, Double)] = {
+  /** One shard's top-k for one query: ADC scores over the shard's m-byte
+    * code rows, then [[rerankTopK]]. */
+  private def shardTopK(idx: LocalIndex, cb: PqCodebooks, codes: Array[Array[Byte]],
+      qv: Array[Float], k: Int, fullBeam: Boolean,
+      allowed: Long => Boolean): Array[(Long, Float)] = {
     val lut = adcLut(qv, cb)
     val m = cb.m
     val score: Int => Float = { node =>
@@ -132,7 +132,7 @@ object VamanaPq {
       while (s < m) { d += lut(s)(row(s)); s += 1 }
       d
     }
-    rerankTopK(idx, score, qv, k, fullBeam, allowed).iterator.map { case (id, d) => (qid, id, d.toDouble) }
+    rerankTopK(idx, score, qv, k, fullBeam, allowed)
   }
 
   /** The fitted broadcast-regime PQ serving state (index + codebooks +
@@ -171,14 +171,19 @@ object VamanaPq {
     *    detector, set below the measured value like pq_gate's).
     * n_queries is oracle-recomputed from parquet; flags are invariants. */
   def gate(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 10,
-      recallFloor: Double = 0.5): DataFrame = {
+      recallFloor: Double = 0.5): DataFrame =
+    gateOver(spark, dir, nQueries, k, recallFloor)(fb => search(spark, dir, nQueries, k, fb))
+
+  /** The body of [[gate]] and [[gateFanout]] over one PQ search path
+    * (`search(fullBeam)`): full-beam overlap with exact kNN and the
+    * default-beam recall floor. */
+  private def gateOver(spark: SparkSession, dir: String, nQueries: Int, k: Int,
+      recallFloor: Double)(search: Boolean => DataFrame): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val exact = Knn.knnExact(emb, Knn.queriesFromPoints(emb, nQueries), k)
       .select(col("query_id"), col("id"))
-    val full = search(spark, dir, nQueries, k, fullBeam = true)
-      .select(col("query_id"), col("id"))
-    val approx = search(spark, dir, nQueries, k)
-      .select(col("query_id"), col("id"))
+    val full = search(true).select(col("query_id"), col("id"))
+    val approx = search(false).select(col("query_id"), col("id"))
     // left-join from the distinct exact query ids so a ZERO-overlap query
     // (which the inner-join+groupBy shape silently dropped) still votes:
     // its coalesced overlap of 0 flips the flag, and the query-count term
@@ -276,20 +281,25 @@ object VamanaPq {
     * unique tag per fitted model). */
   def searchFanoutModel(fm: FanoutModel, queriesDf: DataFrame, cacheKey: String,
       k: Int, fullBeam: Boolean): DataFrame = {
-    val spark = fm.shards.sparkSession
-    import spark.implicits._
     require(fm.params.metric == "l2",
       "PQ-guided fanout serving assumes the l2 (identity) reduction")
-    val queries = queriesDf
-      .select(col("query_id").cast("long"), col("query_vec").cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val bcQ = spark.sparkContext.broadcast(queries)
-    val dirKey = cacheKey
-    val answers = fm.shards.flatMap { case (shard, idx) =>
-      val (cb, codes) = shardPqState(dirKey, shard, idx)
-      bcQ.value.iterator.flatMap { case (qid, qv) => shardAnswers(idx, cb, codes, qid, qv, k, fullBeam) }
-    }.toDF("query_id", "id", "dist")
-    FanoutModel.rankMerge(answers, k)
+    shardTopKPq(fm.core, queriesDf, cacheKey, k, fullBeam)
+  }
+
+  /** The per-shard PQ search over any shard core: each shard that has
+    * queries trains (or reuses) its codes once, then answers its queries
+    * by ADC traversal + exact rerank over the `allowed` ids (all ids when
+    * `allowedIds` is None); the core scatters and rank-merges. */
+  private def shardTopKPq[R <: ShardRouting[R]](core: ShardCore[R], queriesDf: DataFrame,
+      cacheKey: String, k: Int, fullBeam: Boolean,
+      probe: Option[Array[Float] => Seq[Int]] = None,
+      allowedIds: Option[Array[Long]] = None): DataFrame = {
+    val pred = allowedIds.map(core.idPredicate(_, deny = false))
+    core.topK(core.prepare(queriesDf, "query_id", "query_vec"), k, probe) { (shard, idx) =>
+      val (cb, codes) = shardPqState(cacheKey, shard, idx)
+      val allowed = pred.fold(VamanaKernel.AnyId)(_())
+      q => shardTopK(idx, cb, codes, q._2, k, fullBeam, allowed)
+    }
   }
 
   /** PQ-guided ROUTED serving — the serving-matrix cell (clustered
@@ -298,45 +308,24 @@ object VamanaPq {
     * [[RoutedFanoutModel.searchRouted]], and each probed shard traverses
     * on ADC lookups with exact rerank exactly as [[searchFanoutModel]] —
     * per-request cost is nprobe ADC traversals, per-executor memory is
-    * m-byte codes. At full probe + full beam the pool is each shard's
-    * whole component, rerank is exact, and ε-closure covers every point,
-    * so the merge IS exact kNN (the routed gate's theorem composed with
-    * the PQ gate's). */
+    * m-byte codes, and an unprobed shard trains no codes. At full probe +
+    * full beam the pool is each shard's whole component, rerank is exact,
+    * and ε-closure covers every point, so the merge IS exact kNN (the
+    * routed gate's theorem composed with the PQ gate's). With `routeEps`
+    * the probe rule is the SAME adaptive band rule as the raw-vector path
+    * (nprobe then acts as maxProbe), completing the (PQ memory × adaptive
+    * routing) serving-matrix cell. */
   def searchRoutedModel(rm: RoutedFanoutModel, queriesDf: DataFrame, cacheKey: String,
       k: Int, nprobe: Int, fullBeam: Boolean,
       routeEps: Option[Double] = None): DataFrame = {
-    val spark = rm.shards.sparkSession
-    import spark.implicits._
     require(rm.params.metric == "l2",
       "PQ-guided routed serving assumes the l2 (identity) reduction")
-    val queries = queriesDf
-      .select(col("query_id").cast("long"), col("query_vec").cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val p = math.min(math.max(1, nprobe), rm.centroids.length)
-    // probe rule: fixed nprobe, or — with routeEps — the SAME adaptive
-    // band rule as the raw-vector path (nprobe then acts as maxProbe),
-    // completing the (PQ memory x adaptive routing) serving-matrix cell
-    val routed: Map[Int, Array[(Long, Array[Float])]] = queries
-      .flatMap { case (qid, qv) =>
-        val ds = VamanaRouted.sortedCentroidDists(rm.centroids, qv)
-        val sel = routeEps match {
-          case Some(eps) => VamanaRouted.adaptiveProbeShards(ds, eps, nprobe, rm.centroids.length)
-          case None => ds.take(p).map(_._2).toSeq
-        }
-        sel.map(si => (si, (qid, qv)))
-      }
-      .groupBy(_._1).map { case (si, xs) => (si, xs.map(_._2)) }
-    val bcR = spark.sparkContext.broadcast(routed)
-    val dirKey = cacheKey
-    val answers = rm.shards.flatMap { case (shard, idx) =>
-      val probes = bcR.value.getOrElse(shard, Array.empty[(Long, Array[Float])])
-      if (probes.isEmpty) Iterator.empty
-      else {
-        val (cb, codes) = shardPqState(dirKey, shard, idx)
-        probes.iterator.flatMap { case (qid, qv) => shardAnswers(idx, cb, codes, qid, qv, k, fullBeam) }
-      }
-    }.toDF("query_id", "id", "dist")
-    FanoutModel.rankMerge(answers, k)
+    val routing = rm.core.routing
+    val probe = routeEps match {
+      case Some(eps) => routing.adaptive(eps, nprobe)
+      case None => routing.nearest(nprobe)
+    }
+    shardTopKPq(rm.core, queriesDf, cacheKey, k, fullBeam, Some(probe))
   }
 
   /** FILTERED PQ-guided fanout search — the serving-matrix completion
@@ -352,26 +341,9 @@ object VamanaPq {
     * with the PQ gate. */
   def searchFanoutModelFiltered(fm: FanoutModel, queriesDf: DataFrame, cacheKey: String,
       allowedIds: Array[Long], k: Int, fullBeam: Boolean): DataFrame = {
-    val spark = fm.shards.sparkSession
-    import spark.implicits._
     require(fm.params.metric == "l2",
       "PQ-guided fanout serving assumes the l2 (identity) reduction")
-    val queries = queriesDf
-      .select(col("query_id").cast("long"), col("query_vec").cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val bcQ = spark.sparkContext.broadcast(queries)
-    val sorted = { val a = allowedIds.clone(); java.util.Arrays.sort(a); a }
-    val bcA = spark.sparkContext.broadcast(sorted)
-    val dirKey = cacheKey
-    val answers = fm.shards.flatMap { case (shard, idx) =>
-      val (cb, codes) = shardPqState(dirKey, shard, idx)
-      val allow = bcA.value
-      val pred = (id: Long) => java.util.Arrays.binarySearch(allow, id) >= 0
-      bcQ.value.iterator.flatMap { case (qid, qv) =>
-        shardAnswers(idx, cb, codes, qid, qv, k, fullBeam, pred)
-      }
-    }.toDF("query_id", "id", "dist")
-    FanoutModel.rankMerge(answers, k)
+    shardTopKPq(fm.core, queriesDf, cacheKey, k, fullBeam, allowedIds = Some(allowedIds))
   }
 
   /** Hash-checked gate for the filtered PQ fanout path — the
@@ -410,31 +382,8 @@ object VamanaPq {
     * invariant); default-beam PQ guidance clears the recall floor. Both
     * flags use the zero-overlap-safe left-join shape. */
   def gateFanout(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 10,
-      recallFloor: Double = 0.5): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val exact = Knn.knnExact(emb, Knn.queriesFromPoints(emb, nQueries), k)
-      .select(col("query_id"), col("id"))
-    val full = searchFanout(spark, dir, nQueries, k, fullBeam = true)
-      .select(col("query_id"), col("id"))
-    val approx = searchFanout(spark, dir, nQueries, k)
-      .select(col("query_id"), col("id"))
-    val perQuery = exact.select(col("query_id")).distinct()
-      .join(exact.join(full, Seq("query_id", "id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as("ov")),
-        Seq("query_id"), "left")
-      .select(col("query_id"), coalesce(col("ov"), lit(0L)).as("overlap"))
-    val exactOk = perQuery
-      .agg(count(lit(1)).as("n_queries"),
-        ((count(when(col("overlap") === k, 1)) === count(lit(1))) &&
-          (count(lit(1)) === nQueries)).as("overlap_exact_ok"))
-    val rec = exact.withColumn("in_exact", lit(1))
-      .join(approx.withColumn("in_approx", lit(1)), Seq("query_id", "id"), "full_outer")
-      .agg(count(col("in_exact")).as("n_exact"),
-        count(when(col("in_exact").isNotNull && col("in_approx").isNotNull, 1)).as("n_hit"))
-      .select((col("n_hit") >= col("n_exact") * recallFloor).as("recall_ok"))
-    exactOk.crossJoin(rec)
-      .select(col("n_queries"), col("overlap_exact_ok"), col("recall_ok"))
-  }
+      recallFloor: Double = 0.5): DataFrame =
+    gateOver(spark, dir, nQueries, k, recallFloor)(fb => searchFanout(spark, dir, nQueries, k, fb))
 
   /** Per-shard serving-memory ledger for the PQ fanout path: raw vector
     * bytes (n·dim·4) vs code bytes (n·m) — the DiskANN ratio ScaleBench

@@ -2,7 +2,7 @@ package graft.vamana
 
 import scala.util.hashing.MurmurHash3
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** CLUSTERED (routed) shard layout for ANN serving — the SPANN posture
@@ -192,38 +192,26 @@ object VamanaRouted {
       .orderBy(col("h"), col("v")(0))
       .limit(sampleSize)
       .select(col("v")).as[Array[Float]].collect()
-    val centroids = kmeans(sample, numShards, kmeansIters)
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val eps2 = eps2Of(closureEps)
-    val assigned = ptsT.flatMap { case (id, vec) =>
-      closureAssign(bcC.value, vec, eps2, maxReplicas).map(s => (s, id, vec))
-    }
-    val par = math.max(2, Runtime.getRuntime.availableProcessors() / math.max(1, centroids.length))
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val shards = assigned
-      .groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val arr = it.toArray.sortBy(_._2)
-        (shard, VamanaKernel.buildParallel(arr.map(_._2), arr.map(_._3),
-          kParams.copy(seed = seed + shard), par))
-      }.cache()
-    shards.count() // force the builds NOW, exactly once
-    new RoutedFanoutModel(shards, kParams, centroids, closureEps, maxReplicas)
+    val routing = CentroidRouting(kmeans(sample, numShards, kmeansIters), closureEps, maxReplicas)
+    new RoutedFanoutModel(ShardCore.fit(ptsT, kParams, routing,
+      ShardCore.threadsPerShard(routing.centroids.length)))
   }
 }
 
-/** The fitted routed layout: per-shard kernels (cached, distributed) plus
-  * the s×dim centroid routing table (driver-sized). The closure rule
-  * (`closureEps`, `maxReplicas`) is part of the fitted model — [[insert]]
-  * routes new points by the SAME rule the fit used, and [[save]] persists
-  * it, so no caller can silently drift the layout. */
+/** The fitted routed layout: centroid-routed shards over the [[ShardCore]]
+  * (per-shard kernels, cached, distributed) plus the s×dim centroid
+  * routing table (driver-sized). The closure rule (`closureEps`,
+  * `maxReplicas`) is part of the fitted model — [[insert]] routes new
+  * points by the SAME rule the fit used, and [[save]] persists it, so no
+  * caller can silently drift the layout. */
 final class RoutedFanoutModel private[vamana] (
-    private[vamana] val shards: Dataset[(Int, LocalIndex)],
-    val params: VamanaParams,
-    private[graft] val centroids: Array[Array[Float]],
-    val closureEps: Double = 0.15,
-    val maxReplicas: Int = 2) {
+    private[vamana] val core: ShardCore[CentroidRouting]) {
+
+  private[vamana] def shards: Dataset[(Int, LocalIndex)] = core.shards
+  def params: VamanaParams = core.params
+  private[graft] def centroids: Array[Array[Float]] = core.routing.centroids
+  def closureEps: Double = core.routing.closureEps
+  def maxReplicas: Int = core.routing.maxReplicas
 
   def numShards: Int = centroids.length
 
@@ -247,11 +235,13 @@ final class RoutedFanoutModel private[vamana] (
       k: Int,
       nprobe: Int,
       queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    val p = math.min(math.max(1, nprobe), centroids.length)
-    searchWithRouting(queries, k, queryIdCol, queryVecCol)(ds => ds.take(p).map(_._2))(
-      (idx, qv) => VamanaKernel.search(idx, qv, k))
-  }
+      queryVecCol: String = "query_vec"): DataFrame =
+    routedTopK(queries, k, queryIdCol, queryVecCol, core.routing.nearest(nprobe))
+
+  private def routedTopK(queries: DataFrame, k: Int, queryIdCol: String, queryVecCol: String,
+      probe: Array[Float] => Seq[Int]): DataFrame =
+    core.topK(core.prepare(queries, queryIdCol, queryVecCol), k, Some(probe))(
+      (_, idx) => q => VamanaKernel.search(idx, q._2, k))
 
   /** Query-ADAPTIVE routed top-k (SPANN §4.3, query-aware dynamic
     * pruning): instead of a fixed nprobe, each query probes exactly the
@@ -269,15 +259,7 @@ final class RoutedFanoutModel private[vamana] (
       maxProbe: Int = Int.MaxValue,
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec"): DataFrame =
-    searchWithRouting(queries, k, queryIdCol, queryVecCol)(
-      adaptiveProbes(_, routeEps, maxProbe))((idx, qv) => VamanaKernel.search(idx, qv, k))
-
-  /** The adaptive probe rule over one query's ascending (dist, shard)
-    * list — [[VamanaRouted.adaptiveProbeShards]], the function the
-    * streaming twin shares. */
-  private def adaptiveProbes(ds: Array[(Float, Int)], routeEps: Double,
-      maxProbe: Int): Seq[Int] =
-    VamanaRouted.adaptiveProbeShards(ds, routeEps, maxProbe, centroids.length)
+    routedTopK(queries, k, queryIdCol, queryVecCol, core.routing.adaptive(routeEps, maxProbe))
 
   /** Routing cost introspection for the adaptive rule: (query_id,
     * n_probes) per query — the fleet-cost fact ([[searchRoutedAdaptive]]'s
@@ -288,16 +270,17 @@ final class RoutedFanoutModel private[vamana] (
       routeEps: Double = 0.3,
       maxProbe: Int = Int.MaxValue,
       queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
+      queryVecCol: String = "query_vec"): DataFrame =
+    probeCounts(queries, queryIdCol, queryVecCol, core.routing.adaptive(routeEps, maxProbe))
+
+  private def probeCounts(queries: DataFrame, queryIdCol: String, queryVecCol: String,
+      probe: Array[Float] => Seq[Int]): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
-    prepareQueries(queries, queryIdCol, queryVecCol)
-      .map { case (qid, qv) => (qid, adaptiveProbes(centroidDists(qv), routeEps, maxProbe).size) }
+    core.prepare(queries, queryIdCol, queryVecCol)
+      .map(q => (q._1, probe(q._2).size))
       .toSeq.toDF("query_id", "n_probes").orderBy(col("query_id"))
   }
-
-  private def centroidDists(qv: Array[Float]): Array[(Float, Int)] =
-    VamanaRouted.sortedCentroidDists(centroids, qv)
 
   /** Collect the fitted layout into one broadcastable serving object for
     * the STREAMING twin ([[graft.streaming.StreamingOps
@@ -313,19 +296,6 @@ final class RoutedFanoutModel private[vamana] (
         s"exceed maxLocalPoints=$maxLocalPoints — serve with searchRouted/searchRoutedAdaptive " +
         "(distributed, shards never leave executors) instead, or raise the guard deliberately")
     RoutedLocalServing(shards.collect().sortBy(_._1), centroids, params.metric)
-  }
-
-  private def prepareQueries(queries: DataFrame, queryIdCol: String,
-      queryVecCol: String): Array[(Long, Array[Float])] = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val metric = params.metric
-    val prepared = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (id, v) => (id, MetricReduction.prepareQuery(v, metric)) }
-    require(prepared.length <= 10000, "routed fanout broadcasts the query batch; keep it bounded")
-    prepared
   }
 
   /** Squared ball radius per shard — max point-to-centroid squared
@@ -346,13 +316,13 @@ final class RoutedFanoutModel private[vamana] (
     }(Encoders.tuple(Encoders.scalaInt, Encoders.scalaFloat)).collect().toMap
   }
 
-  /** The ball-prune probe set for one query: shards whose centroid ball
+  /** The ball-prune probe rule for one radius: shards whose centroid ball
     * intersects the query ball — √d(q,c_s) ≤ √r + √R_s. Lossless by the
     * triangle inequality: any point within L2 radius √r of q is within
     * √R_s of its shard's centroid, so d(q,c_s) ≤ √r + √R_s for at least
-    * one shard holding it. */
-  private def rangeProbeShards(qv: Array[Float], radiusSq: Double,
-      radii: Map[Int, Float]): Seq[Int] =
+    * one shard holding it. Driver-side; the radii are read on first use. */
+  private def rangeProbe(radiusSq: Double): Array[Float] => Seq[Int] = qv => {
+    val radii = shardRadiiSq
     centroids.indices.filter { s =>
       radii.get(s).exists { r2 =>
         // relative ε so a point EXACTLY on the radius/ball boundary can't
@@ -362,20 +332,15 @@ final class RoutedFanoutModel private[vamana] (
           (math.sqrt(radiusSq) + math.sqrt(r2.toDouble)) * (1.0 + 1e-6)
       }
     }
+  }
 
   /** Probe counts of the ball-prune rule per query (query_id, n_probes) —
     * the introspection that proves range pruning PRUNES (top-k routing's
     * [[describeAdaptiveRouting]] twin). */
   def describeRangeRouting(queries: DataFrame, radiusSq: Double,
       queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val radii = shardRadiiSq
-    prepareQueries(queries, queryIdCol, queryVecCol)
-      .map { case (qid, qv) => (qid, rangeProbeShards(qv, radiusSq, radii).size) }
-      .toSeq.toDF("query_id", "n_probes").orderBy(col("query_id"))
-  }
+      queryVecCol: String = "query_vec"): DataFrame =
+    probeCounts(queries, queryIdCol, queryVecCol, rangeProbe(radiusSq))
 
   /** RANGE (radius) search on the routed layout with EXACT ball-bound
     * pruning — unlike top-k routing (approximate: the true k-th neighbor
@@ -390,31 +355,8 @@ final class RoutedFanoutModel private[vamana] (
       queries: DataFrame,
       radiusSq: Double,
       queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = {
-    require(params.metric == "l2", "range radius is a squared-L2 bound; fit with metric=l2")
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val prepared = prepareQueries(queries, queryIdCol, queryVecCol)
-    val radii = shardRadiiSq
-    val routed: Map[Int, Array[(Long, Array[Float])]] = prepared
-      .flatMap { case (qid, qv) =>
-        rangeProbeShards(qv, radiusSq, radii).map(si => (si, (qid, qv)))
-      }
-      .groupBy(_._1).map { case (si, xs) => (si, xs.map(_._2)) }
-    val bcR = spark.sparkContext.broadcast(routed)
-    val r = radiusSq.toFloat
-    val answers = shards.flatMap { case (sid, idx) =>
-      bcR.value.getOrElse(sid, Array.empty[(Long, Array[Float])]).iterator
-        .flatMap { case (qid, qvec) =>
-          VamanaKernel.rangeSearch(idx, qvec, r).iterator.map {
-            case (id, dist) => (qid, id, dist.toDouble)
-          }
-        }
-    }.toDF("query_id", "id", "dist")
-    answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-      .select(col("query_id"), col("id"), (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("id"))
-  }
+      queryVecCol: String = "query_vec"): DataFrame =
+    core.rangeUnion(queries, radiusSq, queryIdCol, queryVecCol, Some(rangeProbe(radiusSq)))
 
   /** FILTERED routed search — the (clustered routing × metadata
     * predicate) serving-matrix cell: route by fixed nprobe, then each
@@ -426,8 +368,9 @@ final class RoutedFanoutModel private[vamana] (
     * top-k — [[graft.vamana.VamanaOps.vamanaFanoutFilteredGate]]'s
     * theorem on the clustered cover, hash-checked by
     * `vamana_routed_filtered_gate`. The allowed set broadcasts sorted
-    * (binary-search predicate); corpus-sized filters belong on the
-    * fanout model's adaptive DataFrame path, which post-filters instead. */
+    * (binary-search predicate), up to [[FanoutModel.MaxBroadcastAllowed]];
+    * corpus-sized filters belong on the fanout model's adaptive DataFrame
+    * path, which post-filters instead. */
   def searchRoutedFiltered(
       queries: DataFrame,
       allowedIds: Array[Long],
@@ -436,58 +379,20 @@ final class RoutedFanoutModel private[vamana] (
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec",
       fullBeam: Boolean = false): DataFrame = {
-    require(allowedIds.length <= 5000000,
+    require(allowedIds.length <= FanoutModel.MaxBroadcastAllowed,
       "routed filtered search broadcasts the allowed set; beyond that use " +
         "FanoutModel.searchFiltered(DataFrame) whose adaptive branch post-filters")
-    val spark = shards.sparkSession
-    val sorted = { val a = allowedIds.clone(); java.util.Arrays.sort(a); a }
-    val bcA = spark.sparkContext.broadcast(sorted)
-    val p = math.min(math.max(1, nprobe), centroids.length)
-    searchWithRouting(queries, k, queryIdCol, queryVecCol)(
-      ds => ds.take(p).map(_._2)) { (idx, qvec) =>
-      val ids = bcA.value
-      val pred = (id: Long) => java.util.Arrays.binarySearch(ids, id) >= 0
-      VamanaKernel.searchFiltered(idx, qvec, k, pred, if (fullBeam) idx.size else 0)
-    }
-  }
-
-  /** Shared scatter core: route each prepared query to the shards chosen
-    * by `probe` (over its ascending (dist, shard) list), run `kernelSearch`
-    * only on those shards, min-dist merge + rank. Routing is computed on
-    * the driver over the already-bounded query batch: |queries|·s
-    * distances against an s×dim table — never a Spark job. */
-  private def searchWithRouting(queries: DataFrame, k: Int, queryIdCol: String,
-      queryVecCol: String)(probe: Array[(Float, Int)] => Seq[Int])(
-      kernelSearch: (LocalIndex, Array[Float]) => Array[(Long, Float)]): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val search = kernelSearch
-    val prepared = prepareQueries(queries, queryIdCol, queryVecCol)
-    val routed: Map[Int, Array[(Long, Array[Float])]] = prepared
-      .flatMap { case (qid, qv) => probe(centroidDists(qv)).map(si => (si, (qid, qv))) }
-      .groupBy(_._1).map { case (si, xs) => (si, xs.map(_._2)) }
-    val bcR = spark.sparkContext.broadcast(routed)
-    val answers = shards.flatMap { case (sid, idx) =>
-      bcR.value.getOrElse(sid, Array.empty[(Long, Array[Float])]).iterator
-        .flatMap { case (qid, qvec) =>
-          search(idx, qvec).iterator
-            .map { case (id, dist) => (qid, id, dist.toDouble) }
-        }
-    }.toDF("query_id", "id", "dist")
-    // ε-closure replication may answer a point twice
-    FanoutModel.rankMerge(answers, k)
+    core.filteredTopK(core.prepare(queries, queryIdCol, queryVecCol), allowedIds, deny = false,
+      k, fullBeam, Some(core.routing.nearest(nprobe)))
   }
 
   /** Live per-shard point counts (one int per shard row — driver-trivial
     * at any corpus size). The observable [[rebalance]] acts on. */
-  def shardSizes: Array[Int] =
-    shards.map { case (_, idx) => idx.size }(Encoders.scalaInt).collect().sorted
+  def shardSizes: Array[Int] = core.shardSizes
 
   /** Σ shard sizes — REPLICATED point count (ε-closure counts a boundary
     * point once per hosting shard), the capacity number. */
-  def totalPoints: Long =
-    shards.map { case (_, idx) => idx.size.toLong }(Encoders.scalaLong)
-      .reduce(_ + _)
+  def totalPoints: Long = core.storedPoints
 
   /** Shard-size REBALANCE for long-running insert streams on the CLUSTERED
     * layout. Hash fanout's skew is accidental (replication parity); routed
@@ -495,7 +400,7 @@ final class RoutedFanoutModel private[vamana] (
     * fitted centroid, so a hot data region grows one shard without bound
     * while the routing table stays frozen. Each pass splits every shard
     * larger than `maxRatio`× the mean into two locality-aware halves
-    * ([[FanoutModel.splitMembership]]'s deterministic 2-means median cut),
+    * ([[ShardCore.splitMembership]]'s deterministic 2-means median cut),
     * rebuilds each half's graph with the fit's kernel, and — the routed
     * twist — REFRESHES THE ROUTING TABLE: the split shard's centroid slot
     * is replaced by half A's own mean and half B publishes a fresh slot
@@ -514,62 +419,8 @@ final class RoutedFanoutModel private[vamana] (
     * Scale shape: the driver sees (shard, size) ints plus the refreshed
     * s×dim table; each split runs inside its shard's task. */
   def rebalance(maxRatio: Double = 2.0, maxPasses: Int = 4): RoutedFanoutModel = {
-    require(maxRatio >= 1.0, "maxRatio < 1 would split forever")
-    val spark = shards.sparkSession
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val sizeEnc: Encoder[(Int, Int)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
-    val centEnc: Encoder[(Int, Array[Float])] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[Array[Float]])
-    val kp = params
-    var curShards = shards
-    var curCents = centroids
-    var pass = 0
-    var done = false
-    while (pass < maxPasses && !done) {
-      val sizes = curShards.map { case (s, idx) => (s, idx.size) }(sizeEnc).collect()
-      val mean = sizes.map(_._2.toDouble).sum / sizes.length
-      val big = sizes.filter { case (_, n) => n > maxRatio * mean && n >= 2 }.map(_._1)
-      if (big.isEmpty) done = true
-      else {
-        // fresh slots appended past the current table, k-th split
-        // (ascending old id) -> slot base+k; every shard id stays a valid
-        // centroid index, the routed invariant
-        val base = curCents.length
-        val freshIds = big.sorted.zipWithIndex.map { case (s, i) => (s, base + i) }.toMap
-        val bcFresh = spark.sparkContext.broadcast(freshIds)
-        val next = curShards.flatMap { case (s, idx) =>
-          bcFresh.value.get(s) match {
-            case None => Iterator.single((s, idx))
-            case Some(fresh) =>
-              val (a, b) = FanoutModel.splitMembership(idx)
-              Iterator(
-                (s, VamanaKernel.build(a.map(_._1), a.map(_._2),
-                  kp.copy(seed = kp.seed + s))),
-                (fresh, VamanaKernel.build(b.map(_._1), b.map(_._2),
-                  kp.copy(seed = kp.seed + fresh))))
-          }
-        }.cache()
-        next.count() // materialize; the old model stays independently usable
-        // routing-table refresh: each half routes by its OWN kernel-space
-        // mean — a tiny (2·|splits|)×dim collect off the already-built rows
-        val affected = freshIds.flatMap { case (s, f) => Seq(s, f) }.toSet
-        val bcAff = spark.sparkContext.broadcast(affected)
-        val newCents = next
-          .filter(r => bcAff.value.contains(r._1))
-          .map { case (s, idx) => (s, RoutedFanoutModel.meanVec(idx.points)) }(centEnc)
-          .collect().toMap
-        curCents = Array.tabulate(base + big.length) { i =>
-          newCents.getOrElse(i, curCents(i))
-        }
-        if (curShards ne shards) curShards.unpersist()
-        curShards = next
-      }
-      pass += 1
-    }
-    if (curShards eq shards) this
-    else new RoutedFanoutModel(curShards, params, curCents, closureEps, maxReplicas)
+    val next = core.rebalance(maxRatio, maxPasses)
+    if (next eq core) this else new RoutedFanoutModel(next)
   }
 
   /** RECALL-TARGETED band calibration — the INVERSE of the eps → recall
@@ -663,16 +514,8 @@ final class RoutedFanoutModel private[vamana] (
     * full probe + full beam every shard returns its true in-shard top-k,
     * and since ε-closure places every point in ≥ 1 shard the global merge
     * IS exact kNN — the routed gate's theorem. */
-  private[graft] def withFullBeamShards(): RoutedFanoutModel = {
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val s2 = shards.map { case (s, idx) =>
-      (s, new LocalIndex(idx.ids, idx.points, idx.graph, idx.medoid,
-        idx.params.copy(efSearch = idx.size)))
-    }.cache()
-    s2.count()
-    new RoutedFanoutModel(s2, params, centroids, closureEps, maxReplicas)
-  }
+  private[graft] def withFullBeamShards(): RoutedFanoutModel =
+    new RoutedFanoutModel(core.withFullBeam())
 
   /** Shard-local incremental INSERT — [[FanoutModel.insert]]'s recipe on
     * the clustered layout: each new point routes by the SAME ε-closure
@@ -686,53 +529,18 @@ final class RoutedFanoutModel private[vamana] (
     * the batch: when the grown layout crosses maintainRatio × mean the
     * oversized shards split and the table learns the new slots, so a hot
     * insert stream cannot silently grow one shard without bound between
-    * human checks — the closed-loop posture a long-running ingest wants. */
+    * human checks — the closed-loop posture a long-running ingest wants.
+    * `ip` is rejected, as on [[FanoutModel.insert]]. */
   def insert(newPoints: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", autoMaintain: Boolean = false,
       maintainRatio: Double = 2.0, maintainPasses: Int = 4): RoutedFanoutModel = {
-    val grown = insertBatch(newPoints, idCol, vecCol)
+    val grown = new RoutedFanoutModel(core.insert(newPoints, idCol, vecCol))
     if (!autoMaintain) grown
     else {
       val kept = grown.maintain(maintainRatio, maintainPasses)
       if (kept ne grown) grown.unpersist()
       kept
     }
-  }
-
-  private def insertBatch(newPoints: DataFrame, idCol: String,
-      vecCol: String): RoutedFanoutModel = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val kp = params
-    val cents = centroids
-    val pts = newPoints
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])]
-    val (ptsT, _) = VamanaIndexer.metricTransform(pts, params)
-    val bcC = spark.sparkContext.broadcast(cents)
-    val eps2 = VamanaRouted.eps2Of(closureEps)
-    val mRep = maxReplicas
-    val assigned = ptsT.flatMap { case (id, vec) =>
-      VamanaRouted.closureAssign(bcC.value, vec, eps2, mRep).map(s => (s, id, vec))
-    }.groupByKey(_._1)
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val updated = shards.groupByKey(_._1)
-      .cogroup(assigned) { (shard, idxIt, newIt) =>
-        val batch = newIt.toArray.sortBy(_._2)
-        val idxs = idxIt.toArray
-        if (idxs.isEmpty) {
-          if (batch.isEmpty) Iterator.empty
-          else Iterator.single((shard, VamanaKernel.build(
-            batch.map(_._2), batch.map(_._3), kp.copy(seed = kp.seed + shard))))
-        } else idxs.iterator.map { case (_, idx) =>
-          (shard,
-            if (batch.isEmpty) idx
-            else VamanaKernel.insert(idx, batch.map(_._2), batch.map(_._3)))
-        }
-      }.cache()
-    updated.count() // materialize once; the old model stays independently usable
-    new RoutedFanoutModel(updated, params, centroids, closureEps, maxReplicas)
   }
 
   /** Distributed routed MERGE — [[FanoutModel.merge]]'s clustered twin,
@@ -756,52 +564,15 @@ final class RoutedFanoutModel private[vamana] (
     * defaults; each shard kernel keeps the params it was built with.
     * `ip` rejected: the two fits augmented different max norms (mirrors
     * [[FanoutModel.merge]]). */
-  def merge(other: RoutedFanoutModel): RoutedFanoutModel = {
-    require(params.metric != "ip" && other.params.metric != "ip",
-      "merge is not defined for metric=ip (per-fit norm augmentation); refit instead")
-    require(params.metric == other.params.metric,
-      s"metric mismatch: ${params.metric} vs ${other.params.metric} — differently " +
-        "transformed kernel spaces cannot serve one query preparation")
-    require(params.dim == other.params.dim,
-      s"dimension mismatch: ${params.dim} vs ${other.params.dim}")
-    require(closureEps == other.closureEps && maxReplicas == other.maxReplicas,
-      s"closure-rule mismatch: ($closureEps, $maxReplicas) vs " +
-        s"(${other.closureEps}, ${other.maxReplicas}) — future inserts route under " +
-        "ONE rule; merge layouts fitted under the same closure assignment")
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val idEnc = Encoders.scalaLong
-    val myIds = shards.flatMap { case (_, idx) => idx.ids.iterator }(idEnc).toDF("id")
-    val otherIds = other.shards.flatMap { case (_, idx) => idx.ids.iterator }(idEnc).toDF("id")
-    require(myIds.join(otherIds, "id").isEmpty,
-      "id sets overlap; merge requires disjoint indexes (dedup first, or delete one side's copies)")
-    val offset = centroids.length
-    val rekeyed = other.shards.map { case (s, idx) => (s + offset, idx) }
-    val merged = shards.union(rekeyed).cache()
-    merged.count() // materialize; both inputs stay independently usable
-    new RoutedFanoutModel(merged, params, centroids ++ other.centroids,
-      closureEps, maxReplicas)
-  }
+  def merge(other: RoutedFanoutModel): RoutedFanoutModel =
+    new RoutedFanoutModel(core.merge(other.core))
 
   /** Shard-local DELETE — [[FanoutModel.delete]]'s recipe: each shard
     * repairs its own graph around the removed ids (in-neighbor re-prune +
     * compaction); a fully-emptied shard row disappears, but the routing
     * table keeps its centroid so a later insert recreates it. */
-  def delete(deleteIds: Array[Long]): RoutedFanoutModel = {
-    val spark = shards.sparkSession
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val bc = spark.sparkContext.broadcast(deleteIds)
-    val updated = shards.flatMap { case (shard, idx) =>
-      val delSet = bc.value.toSet
-      val n = idx.ids.count(delSet.contains)
-      if (n == idx.size) Iterator.empty
-      else if (n == 0) Iterator.single((shard, idx))
-      else Iterator.single((shard, VamanaKernel.delete(idx, bc.value)))
-    }.cache()
-    updated.count()
-    new RoutedFanoutModel(updated, params, centroids, closureEps, maxReplicas)
-  }
+  def delete(deleteIds: Array[Long]): RoutedFanoutModel =
+    new RoutedFanoutModel(core.delete(deleteIds))
 
   /** Persist the routed layout: per-shard rows in [[FanoutModel.save]]'s
     * exact parquet shape (shard-partitioned, external-id neighbor lists)
@@ -811,25 +582,13 @@ final class RoutedFanoutModel private[vamana] (
   def save(path: String): Unit = {
     val spark = shards.sparkSession
     import spark.implicits._
-    shards.flatMap { case (shard, idx) =>
-      idx.ids.indices.iterator.map { pos =>
-        (shard, pos, idx.ids(pos), idx.points(pos), idx.graph(pos).map(idx.ids(_)),
-          idx.medoid, idx.params.seed)
-      }
-    }.toDF("shard", "pos", "id", "vec", "neighbors", "medoid_pos", "shard_seed")
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$path/shards")
     centroids.zipWithIndex.map { case (c, si) => (si, c) }.toSeq
       .toDF("shard", "centroid")
       .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val p = params
-    Seq((p.dim, p.maxDegree, p.beamWidth, p.alpha.toDouble, p.efSearch, p.seed,
-      p.paperPrune, p.metric, closureEps, maxReplicas))
-      .toDF("dim", "max_degree", "beam_width", "alpha", "ef_search", "seed",
-        "paper_prune", "metric", "closure_eps", "max_replicas")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/params")
+    core.save(path, Seq("closure_eps" -> lit(closureEps), "max_replicas" -> lit(maxReplicas)))
   }
 
-  def unpersist(): Unit = { val _ = shards.unpersist() }
+  def unpersist(): Unit = core.unpersist()
 }
 
 /** Result of [[RoutedFanoutModel.calibrateEps]]: the chosen band, its
@@ -861,61 +620,19 @@ final case class RoutedLocalServing(
 
 object RoutedFanoutModel {
 
-  /** Kernel-space mean of a shard's points — its refreshed routing
-    * centroid after a [[RoutedFanoutModel.rebalance]] split. */
-  private[vamana] def meanVec(pts: Array[Array[Float]]): Array[Float] = {
-    val dim = pts(0).length
-    val s = new Array[Double](dim)
-    var i = 0
-    while (i < pts.length) {
-      val p = pts(i)
-      var j = 0
-      while (j < dim) { s(j) += p(j); j += 1 }
-      i += 1
-    }
-    Array.tabulate(dim)(j => (s(j) / pts.length).toFloat)
-  }
-
   /** Reload a [[RoutedFanoutModel.save]] checkpoint: shard kernels rebuilt
     * from the frames (no graph builds — adjacency is persisted), routing
     * table from the centroids frame. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): RoutedFanoutModel = {
     import spark.implicits._
-    val p = spark.read.parquet(s"$path/params").head()
-    val params = VamanaParams(
-      dim = p.getAs[Int]("dim"),
-      maxDegree = p.getAs[Int]("max_degree"),
-      beamWidth = p.getAs[Int]("beam_width"),
-      alpha = p.getAs[Double]("alpha").toFloat,
-      efSearch = p.getAs[Int]("ef_search"),
-      seed = p.getAs[Long]("seed"),
-      paperPrune = p.getAs[Boolean]("paper_prune"),
-      metric = p.getAs[String]("metric"))
+    val (params, row) = ShardCore.readParams(spark, path)
     // the closure rule is part of the model; pre-rule checkpoints (no
     // columns) reload with the fit defaults they were written under
-    val closureEps =
-      if (p.schema.fieldNames.contains("closure_eps")) p.getAs[Double]("closure_eps") else 0.15
-    val maxReplicas =
-      if (p.schema.fieldNames.contains("max_replicas")) p.getAs[Int]("max_replicas") else 2
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .select(col("shard").cast("int"), col("centroid").cast("array<float>"))
-      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
-    implicit val shardEnc: Encoder[(Int, LocalIndex)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
-    val rows = spark.read.parquet(s"$path/shards")
-      .select(col("shard").cast("int"), col("pos").cast("int"), col("id"),
-        col("vec").cast("array<float>"), col("neighbors"),
-        col("medoid_pos").cast("int"), col("shard_seed").cast("long"))
-      .as[(Int, Int, Long, Array[Float], Array[Long], Int, Long)]
-    val shards = rows.groupByKey(_._1).mapGroups { (shard, it) =>
-      val arr = it.toArray.sortBy(_._2)
-      val ids = arr.map(_._3)
-      val posOf = ids.zipWithIndex.toMap
-      val graph = arr.map(_._5.flatMap(posOf.get(_)))
-      (shard, new LocalIndex(ids, arr.map(_._4), graph, arr.head._6,
-        params.copy(seed = arr.head._7)))
-    }.cache()
-    shards.count() // materialize once, up front
-    new RoutedFanoutModel(shards, params, centroids, closureEps, maxReplicas)
+    val routing = CentroidRouting(
+      spark.read.parquet(s"$path/centroids")
+        .select(col("shard").cast("int"), col("centroid").cast("array<float>"))
+        .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2),
+      ShardCore.paramOr(row, "closure_eps", 0.15), ShardCore.paramOr(row, "max_replicas", 2))
+    new RoutedFanoutModel(new ShardCore(ShardCore.loadShards(spark, path, params), params, routing))
   }
 }

@@ -93,10 +93,30 @@ class VamanaModelSpec extends AnyFunSuite {
     assert(got.count() == 25, "old-format fanout model must still load and search")
   }
 
+  test("routed load tolerates pre-closure_eps/max_replicas param saves (checkpoint back-compat)") {
+    val rm = VamanaRouted.fit(Tables.embeddings(spark, dir), params, numShards = 3)
+    val tmp = java.nio.file.Files.createTempDirectory("vamana_oldrouted").toString
+    rm.save(tmp)
+    // rewrite the params file the way the pre-closure-rule format wrote it
+    val old = spark.read.parquet(s"$tmp/params").drop("closure_eps", "max_replicas")
+    val tmp2 = java.nio.file.Files.createTempDirectory("vamana_oldrouted2").toString
+    spark.read.parquet(s"$tmp/shards").write.parquet(s"$tmp2/shards")
+    spark.read.parquet(s"$tmp/centroids").write.parquet(s"$tmp2/centroids")
+    old.repartition(1).write.parquet(s"$tmp2/params")
+    val loaded = RoutedFanoutModel.load(spark, tmp2)
+    assert(loaded.closureEps == 0.15 && loaded.maxReplicas == 2,
+      s"old-format routed model must reload with the fit defaults, got " +
+        s"(${loaded.closureEps}, ${loaded.maxReplicas})")
+    val q = perturbedQueries(10)
+    val a = rm.searchRouted(q, 10, nprobe = 2).collect().map(_.toSeq).toSeq
+    val b = loaded.searchRouted(q, 10, nprobe = 2).collect().map(_.toSeq).toSeq
+    assert(a == b, "old-format routed model must search identically")
+  }
+
   test("shard-fanout search reaches recall@10 >= 0.8 with 3 shards (no broadcast model)") {
     val queries = perturbedQueries(30).cache()
     val truth = Knn.knnExact(Tables.embeddings(spark, dir), queries, 10)
-    val got = VamanaFanout.search(Tables.embeddings(spark, dir), queries, 10, params, numShards = 3)
+    val got = VamanaFanout.fit(Tables.embeddings(spark, dir), params, numShards = 3).search(queries, 10)
     val r = Knn.recallAt(10, got, truth)
     assert(r >= 0.8, s"fanout recall@10 = $r below the 0.8 gate")
   }

@@ -1,7 +1,7 @@
 package graft.vamana
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, typedLit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
@@ -62,6 +62,16 @@ class AdaptiveFilterSpec extends AnyFunSuite {
     val viaDeniedPost = resultSet(model.adaptiveFiltered(
       q, deniedDf, deny = true, 10, fullBeam = true, band = 1))
     assert(viaDeniedPost == baseline, "denied post-filter branch diverged")
+  }
+
+  test("PQ fanout search rejects a query batch beyond the 10k broadcast bound") {
+    val model = VamanaFanout.fit(Tables.embeddings(spark, dir).where(col("vec_id") < 40),
+      params, numShards = 2)
+    val vec = Array.fill(params.dim)(0.5f)
+    val q = spark.range(10001).select(col("id").as("query_id"), typedLit(vec).as("query_vec"))
+    intercept[IllegalArgumentException] {
+      VamanaPq.searchFanoutModel(model, q, "adaptive_filter_spec_bound", 10, fullBeam = false)
+    }
   }
 
   test("PQ shard-code memo re-encodes when the shard changed under a reused cacheKey") {
