@@ -1,5 +1,6 @@
 package graft.vamana
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -83,7 +84,7 @@ object VamanaIndexer {
     } else {
       val s = effShards
       // deterministic 2-of-s overlap assignment per point id, then one
-      // kernel build per shard, kept as a cached dataset of shard indexes —
+      // kernel build per shard, kept as resident shard kernels —
       // reused (a) to extract edges for the global merge and (b) as the
       // beyond-broadcast fanout serving model. Never collected.
       val core = ShardCore.fit(ptsT, kParams, HashRouting(s, replicate2 = true), parallelism = 1)
@@ -116,14 +117,14 @@ object VamanaIndexer {
     * joins, nothing driver-side. Shared by the sharded fit and the
     * incremental-insert frame regeneration. */
   private[vamana] def mergeShardGraph(
-      shardIdx: Dataset[(Int, LocalIndex)],
+      shardIdx: RDD[(Int, LocalIndex)],
       ptsT: Dataset[(Long, Array[Float])],
       params: VamanaParams): Dataset[(Long, Array[Long])] = {
-    val spark = shardIdx.sparkSession
+    val spark = ptsT.sparkSession
     import spark.implicits._
     val shardAdj: Dataset[(Long, Array[Long])] = shardIdx.flatMap { case (_, idx) =>
       idx.graph.iterator.zipWithIndex.map { case (nbrs, i) => (idx.ids(i), nbrs.map(idx.ids(_))) }
-    }
+    }.toDS()
     val merged = shardAdj.groupByKey(_._1)
       .mapGroups { (id, it) => (id, it.flatMap(_._2).toArray.distinct) }
       .toDF("id", "nbrs")
@@ -180,27 +181,24 @@ object VamanaIndexer {
 final case class ModelFrames(points: DataFrame, graph: DataFrame, params: VamanaParams)
 
 /** A fitted shard-fanout serving model: hash-routed shards over the
-  * [[ShardCore]] (one cached [[LocalIndex]] per shard, built exactly once
-  * at fit/load time). Every search deserializes shard kernels partition-
-  * locally and answers the whole broadcast query batch; the global answer
-  * is the per-query merge of shard top-ks (a global top-k is contained in
-  * the union of per-shard top-ks). Nothing is collected to the driver and
-  * no single index must fit in one broadcast — the working set per task is
-  * one shard. */
+  * [[ShardCore]] (one resident [[LocalIndex]] per shard, built exactly
+  * once at fit/load time). Every search runs one job in which each
+  * shard answers the whole broadcast query batch; the global answer is
+  * the per-query merge of shard top-ks (a global top-k is contained in
+  * the union of per-shard top-ks), at most partitions × |Q| × k rows on
+  * the driver. No shard kernel is collected to the driver and no single
+  * index must fit in one broadcast — the working set per task is the
+  * shards of one partition. */
 final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[HashRouting]) {
   import FanoutModel._
 
-  private[vamana] def this(shards: Dataset[(Int, LocalIndex)], params: VamanaParams,
-      numShardsFit: Int, replicate2: Boolean) =
-    this(new ShardCore(shards, params, HashRouting(numShardsFit, replicate2)))
-
-  private[vamana] def shards: Dataset[(Int, LocalIndex)] = core.shards
+  private[vamana] def shards: RDD[(Int, LocalIndex)] = core.shards
 
   def params: VamanaParams = core.params
 
   /** See [[HashRouting]]: the fit-time shard count (insert routing
     * modulus) and whether the fit placed each point in two shards. */
-  private[vamana] def numShardsFit: Int = core.routing.numShardsFit
+  private[vamana] def numShardsFit: Int = core.routing.numShards
   private[vamana] def replicate2: Boolean = core.routing.replicate2
 
   /** Batch ANN top-k (same output shape as [[VamanaModel.search]]). Calling
@@ -211,8 +209,10 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
       k: Int,
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec"): DataFrame =
-    core.topK(core.prepare(queries, queryIdCol, queryVecCol), k)(
-      (_, idx) => q => VamanaKernel.search(idx, q._2, k))
+    searchPrepared(core.prepare(queries, queryIdCol, queryVecCol), k)
+
+  private def searchPrepared(prepared: Array[ShardCore.Query], k: Int): DataFrame =
+    core.topK(prepared, k)((_, idx) => q => VamanaKernel.search(idx, q._2, k))
 
   /** Q2 semantics on the fanout path: each shard resolves the start vector
     * to its own nearest stored point; the merge keeps the best answers. */
@@ -244,8 +244,7 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
   /** A new model over the SAME fitted shard graphs, with each kernel
     * re-parameterized to beam = shard size — the full-beam exactness
     * regime of the hash-checked gates, without a refit. The mapped
-    * dataset is cached (one kernel per shard, same footprint as the
-    * source shards). */
+    * kernels are resident (they share the source kernels' arrays). */
   private[graft] def withFullBeamShards(): FanoutModel = new FanoutModel(core.withFullBeam())
 
   /** Filtered Q1 on the fanout path — the beyond-broadcast story for
@@ -288,7 +287,7 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
   private def byIds(queries: DataFrame, ids: Array[Long], deny: Boolean, k: Int,
       queryIdCol: String, queryVecCol: String, fullBeam: Boolean): DataFrame =
     if (ids.length > MaxBroadcastAllowed) {
-      val spark = shards.sparkSession
+      val spark = core.spark
       import spark.implicits._
       postFilterSearch(queries, spark.createDataset(ids).toDF("id"),
         deny, k, queryIdCol, queryVecCol, fullBeam)
@@ -318,7 +317,7 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
   def searchStats(queries: DataFrame, k: Int, fullBeam: Boolean = false,
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec"): DataFrame = {
-    val spark = shards.sparkSession
+    val spark = core.spark
     import spark.implicits._
     core.scatter(core.prepare(queries, queryIdCol, queryVecCol), probe = None) { (_, idx) =>
       val beam = if (fullBeam) idx.size else 0
@@ -357,11 +356,14 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
       fullBeam: Boolean): DataFrame =
     adaptiveFiltered(queries, denied, deny = true, k, fullBeam)
 
-  /** `band` defaults to [[FanoutModel.MaxBroadcastAllowed]]; the test hook
-    * narrows it so the complement and post-filter branches are exercised
-    * at spec scale instead of only beyond 5M ids. */
+  /** `band` defaults to [[FanoutModel.MaxBroadcastAllowed]] and
+    * `mergeLimit` to [[ShardCore.MaxMergeRows]]; the test hooks narrow
+    * them so the complement and post-filter branches, and the post-filter
+    * escalation's stop, are exercised at spec scale instead of only
+    * beyond 5M ids. */
   private[vamana] def adaptiveFiltered(queries: DataFrame, filter: DataFrame, deny: Boolean,
-      k: Int, fullBeam: Boolean, band: Int = MaxBroadcastAllowed): DataFrame = {
+      k: Int, fullBeam: Boolean, band: Int = MaxBroadcastAllowed,
+      mergeLimit: Long = ShardCore.MaxMergeRows): DataFrame = {
     // distinct BEFORE counting: duplicate ids in the caller's frame would
     // inflate n (wrongly skipping the exact broadcast branch), corrupt the
     // complement arithmetic (totalPoints - n could go negative), and ride
@@ -378,41 +380,47 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
       // on the driver.
       searchIdFiltered(queries, collectIds(idsDF.join(ids, Seq("id"), "left_anti")),
         !deny, k, "query_id", "query_vec", fullBeam)
-    else postFilterSearch(queries, ids, deny, k, "query_id", "query_vec", fullBeam)
+    else postFilterSearch(queries, ids, deny, k, "query_id", "query_vec", fullBeam, mergeLimit)
   }
 
   /** The beyond-broadcast branch with ESCALATING overfetch: fetch k×mult,
     * post-filter with a distributed semi/anti-join, and — instead of
     * silently returning short or inexact results when fewer than k
     * survivors land in the overfetched pool — re-fetch the batch at 8×
-    * the multiple until every query holds k survivors or the fetch covers
+    * the multiple until every query holds k survivors, the fetch covers
     * the whole index (at which point the full-beam form is provably exact
-    * filtered kNN and a still-short query truly has < k allowed ids).
-    * Escalation is geometric, so the worst case is log₈(n/k) passes, and
-    * the expected case at the selectivity that reaches this branch (both
-    * filter sides beyond the broadcast band) is the single ×8 pass. Each
-    * attempt's filtered pool is persisted so the survivor check and the
-    * returned frame share one fetch. */
+    * filtered kNN and a still-short query truly has < k allowed ids), or
+    * one more fetch would bring more than `mergeLimit` answers to the
+    * driver's rank merge (a still-short query then keeps the survivors
+    * of the largest fetch the bound allows). Escalation is geometric, so
+    * the worst case is log₈(n/k) passes, and the expected case at the
+    * selectivity that reaches this branch (both filter sides beyond the
+    * broadcast band) is the single ×8 pass. Each attempt's filtered pool
+    * is persisted so the survivor check and the returned frame share one
+    * fetch. */
   private def postFilterSearch(queries: DataFrame, filterIds: DataFrame, deny: Boolean,
-      k: Int, queryIdCol: String, queryVecCol: String, fullBeam: Boolean): DataFrame = {
-    val nQueries = queries.select(col(queryIdCol)).distinct().count()
+      k: Int, queryIdCol: String, queryVecCol: String, fullBeam: Boolean,
+      mergeLimit: Long = ShardCore.MaxMergeRows): DataFrame = {
+    val prepared = core.prepare(queries, queryIdCol, queryVecCol)
+    val nQueries = prepared.iterator.map(_._1).distinct.size.toLong
     val total = totalPoints
+    // never below k: a k the bound rejects is rejected like a plain search
+    val maxFetch = math.max(k.toLong, mergeLimit / core.mergeRows(math.max(1, prepared.length), 1))
     var mult = PostFilterOverfetch.toLong
     var result: DataFrame = null
     var prev: DataFrame = null
     while (result == null) {
-      val fetchK = math.min(math.min(k.toLong * mult, total), Int.MaxValue.toLong).toInt
+      val fetchK = Seq(k.toLong * mult, total, maxFetch, Int.MaxValue.toLong).min.toInt
       // the fetch stage: plain search, or the full-beam form of the
       // filtered core with an empty deny set
       val fetched =
-        if (!fullBeam) search(queries, fetchK, queryIdCol, queryVecCol)
-        else searchIdFiltered(queries, Array.empty[Long], deny = true, fetchK,
-          queryIdCol, queryVecCol, fullBeam = true)
+        if (!fullBeam) searchPrepared(prepared, fetchK)
+        else core.filteredTopK(prepared, Array.empty[Long], deny = true, fetchK, fullBeam = true)
       val kept = FanoutModel.pinPool(
         fetched.join(filterIds, Seq("id"), if (deny) "left_anti" else "left_semi")
           .persist())
       if (prev != null) { prev.unpersist(blocking = false); prev = null }
-      val exhaustive = fetchK >= total
+      val exhaustive = fetchK >= total || fetchK >= maxFetch
       val satisfied =
         if (exhaustive) true
         else {
@@ -445,9 +453,9 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
       k: Int, queryIdCol: String, queryVecCol: String, fullBeam: Boolean): DataFrame =
     core.filteredTopK(core.prepare(queries, queryIdCol, queryVecCol), filterIds, deny, k, fullBeam)
 
-  /** Release the cached shard dataset (cache-lifecycle surface for tests
-    * and long-lived services; searching after this rebuilds nothing but
-    * re-reads whatever produced the shards). */
+  /** Release the resident shard kernels (cache-lifecycle surface for tests
+    * and long-lived services; runs no job). The model serves nothing
+    * afterwards; models derived from it keep serving. */
   def unpersist(): Unit = core.unpersist()
 
   /** Distributed incremental insert — the daily-embedding-batch shape at
@@ -559,17 +567,18 @@ object FanoutModel {
     pinnedPools.clear()
   }
 
-  /** S2 for the fanout path: reassemble each shard kernel inside one task,
-    * cache — searches after load run zero builds, zero per-query I/O. */
+  /** S2 for the fanout path: reassemble each shard kernel in its own
+    * partition, resident — searches after load run zero builds, zero
+    * per-query I/O. */
   def load(spark: SparkSession, path: String): FanoutModel = {
     val (params, row) = ShardCore.readParams(spark, path)
-    val shards = ShardCore.loadShards(spark, path, params)
     // num_shards/replicate2 entered the params schema after the first
     // checkpoint format shipped; older saves lack them, so fall back to
     // the observable shard count / non-replicated rather than failing.
-    new FanoutModel(shards, params,
-      ShardCore.paramOr(row, "num_shards", shards.count().toInt),
-      ShardCore.paramOr(row, "replicate2", false))
+    val numShards = ShardCore.paramOr(row, "num_shards",
+      spark.read.parquet(s"$path/shards").select(col("shard")).distinct().count().toInt)
+    new FanoutModel(ShardCore.load(spark, path, params,
+      HashRouting(numShards, ShardCore.paramOr(row, "replicate2", false))))
   }
 }
 
@@ -577,10 +586,10 @@ object FanoutModel {
 object VamanaFanout {
 
   /** Build one Vamana kernel per shard (each point in exactly one shard),
-    * distributed, materialized ONCE into the returned model's cache. Shard
-    * builds use the batch-synchronous parallel kernel so a machine with
-    * more cores than shards isn't idle. Serve with the returned model
-    * (e.g. [[VamanaOps]] caches it per dataset). */
+    * distributed, materialized ONCE into the returned model's resident
+    * kernels. Shard builds use the batch-synchronous parallel kernel so a
+    * machine with more cores than shards isn't idle. Serve with the
+    * returned model (e.g. [[VamanaOps]] caches it per dataset). */
   def fit(
       points: DataFrame,
       params: VamanaParams,
@@ -630,8 +639,9 @@ final class VamanaModel private (
     * local and distributed models alike. */
   def params: VamanaParams = localOpt.map(_.params).getOrElse(framesOpt.get.params)
 
-  /** Release any cached state a distributed model holds (the fanout shard
-    * dataset); local models hold nothing cached. */
+  /** Release any cached state a distributed model holds (the resident
+    * fanout shard kernels, which its frames are also read from); local
+    * models hold nothing cached. */
   def unpersist(): Unit = fanoutOpt.foreach(_.unpersist())
 
   /** Incremental insert (FreshDiskANN semantics — the reference can only

@@ -128,6 +128,27 @@ object VamanaOps {
     m.search(q, 10)
   }
 
+  /** Per-query overlap of `ann` with `exact` (both (query_id, id)), one
+    * row per distinct query id of `queryIds`: left-joined, so a query
+    * with no hit, or no answer at all, still votes with overlap 0 — the
+    * zero-overlap-safe gate shape. */
+  private[vamana] def overlapPerQuery(queryIds: DataFrame, exact: DataFrame,
+      ann: DataFrame): DataFrame =
+    queryIds.select(col("query_id")).distinct()
+      .join(exact.join(ann, Seq("query_id", "id"))
+          .groupBy(col("query_id")).agg(count(lit(1)).as("ov")),
+        Seq("query_id"), "left")
+      .select(col("query_id"), coalesce(col("ov"), lit(0L)).as("overlap"))
+
+  /** One row, `recall_ok`: `approx` holds at least `floor` × |exact| of
+    * `exact`'s (query_id, id) pairs. */
+  private[vamana] def recallOk(exact: DataFrame, approx: DataFrame, floor: Double): DataFrame =
+    exact.withColumn("in_exact", lit(1))
+      .join(approx.withColumn("in_approx", lit(1)), Seq("query_id", "id"), "full_outer")
+      .agg(count(col("in_exact")).as("n_exact"),
+        count(when(col("in_exact").isNotNull && col("in_approx").isNotNull, 1)).as("n_hit"))
+      .select((col("n_hit") >= col("n_exact") * floor).as("recall_ok"))
+
   /** Hash-checked gate over [[vamanaInsertSearch]]: every inserted vector
     * must find ITSELF at rank 1 (FreshDiskANN insert correctness), and the
     * post-insert results must clear a recall floor vs exact kNN over the
@@ -145,15 +166,10 @@ object VamanaOps {
     val self = res.where(col("rank") === 1)
       .agg(count(lit(1)).as("nq"),
         count(when(col("id") === col("query_id") + cut, 1)).as("nself"))
-    val rec = exact.withColumn("in_exact", lit(1))
-      .join(res.select(col("query_id"), col("id")).withColumn("in_approx", lit(1)),
-        Seq("query_id", "id"), "full_outer")
-      .agg(count(col("in_exact")).as("n_exact"),
-        count(when(col("in_exact").isNotNull && col("in_approx").isNotNull, 1)).as("n_hit"))
-    self.crossJoin(rec).select(
+    self.crossJoin(recallOk(exact, res.select(col("query_id"), col("id")), recallFloor)).select(
       col("nq").as("n_inserted"),
       (col("nself") === col("nq")).as("self_found"),
-      (col("n_hit") >= col("n_exact") * recallFloor).as("recall_ok"))
+      col("recall_ok"))
   }
 
   /** Index-merge gate (`vamana_merge_gate`) — the remaining quarter of
@@ -221,13 +237,8 @@ object VamanaOps {
     val self = res.where(col("rank") === 1)
       .agg(count(lit(1)).as("nq"),
         count(when(col("id") === col("query_id") + cut, 1)).as("nself"))
-    val perQ = exact.select(col("query_id")).distinct()
-      .join(exact.join(res.select(col("query_id"), col("id")), Seq("query_id", "id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as("ov")),
-        Seq("query_id"), "left")
-      .select(coalesce(col("ov"), lit(0L)).as("ov"))
-    val overlap = perQ.agg(
-      (count(when(col("ov") === k, 1)) === count(lit(1))).as("overlap_exact_ok"))
+    val overlap = overlapPerQuery(exact, exact, res.select(col("query_id"), col("id"))).agg(
+      (count(when(col("overlap") === k, 1)) === count(lit(1))).as("overlap_exact_ok"))
     self.crossJoin(overlap).select(
       col("nq").as("n_inserted"),
       (col("nself") === col("nq")).as("self_found"),
@@ -264,13 +275,8 @@ object VamanaOps {
     val exact = Knn.knnExact(surviving, q, k).select(col("query_id"), col("id"))
     val g = res.agg(countDistinct(col("query_id")).as("nq"),
       count(when(col("id") >= cut, 1)).as("nghost"))
-    val perQ = exact.select(col("query_id")).distinct()
-      .join(exact.join(res.select(col("query_id"), col("id")), Seq("query_id", "id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as("ov")),
-        Seq("query_id"), "left")
-      .select(coalesce(col("ov"), lit(0L)).as("ov"))
-    val overlap = perQ.agg(
-      (count(when(col("ov") === k, 1)) === count(lit(1))).as("overlap_exact_ok"))
+    val overlap = overlapPerQuery(exact, exact, res.select(col("query_id"), col("id"))).agg(
+      (count(when(col("overlap") === k, 1)) === count(lit(1))).as("overlap_exact_ok"))
     g.crossJoin(overlap).select(
       col("nq").as("n_queries"),
       (col("nghost") === 0).as("no_ghosts"),
@@ -293,14 +299,10 @@ object VamanaOps {
     val g = res.agg(
       countDistinct(col("query_id")).as("nq"),
       count(when(col("id") < nDel, 1)).as("nghost"))
-    val rec = exact.withColumn("in_exact", lit(1))
-      .join(res.withColumn("in_approx", lit(1)), Seq("query_id", "id"), "full_outer")
-      .agg(count(col("in_exact")).as("n_exact"),
-        count(when(col("in_exact").isNotNull && col("in_approx").isNotNull, 1)).as("n_hit"))
-    g.crossJoin(rec).select(
+    g.crossJoin(recallOk(exact, res, recallFloor)).select(
       col("nq").as("n_queries"),
       (col("nghost") === 0).as("no_ghosts"),
-      (col("n_hit") >= col("n_exact") * recallFloor).as("recall_ok"))
+      col("recall_ok"))
   }
 
   /** The serving model's graph re-parameterized to a FULL beam (efSearch =
@@ -971,12 +973,8 @@ object VamanaOps {
       .select(col("query_id"), coalesce(col("nr"), lit(0L)).as("nr"))
     val rowsOk = perQ.agg(count(lit(1)).as("n_queries"),
       (count(when(col("nr") === k, 1)) === count(lit(1))).as("rows_ok"))
-    val rec = exact.withColumn("in_exact", lit(1))
-      .join(ann.withColumn("in_approx", lit(1)), Seq("query_id", "id"), "full_outer")
-      .agg(count(col("in_exact")).as("n_exact"),
-        count(when(col("in_exact").isNotNull && col("in_approx").isNotNull, 1)).as("n_hit"))
-      .select((col("n_hit") >= col("n_exact") * recallFloor).as("recall_ok"))
-    rowsOk.crossJoin(rec).select(col("n_queries"), col("rows_ok"), col("recall_ok"))
+    rowsOk.crossJoin(recallOk(exact, ann, recallFloor))
+      .select(col("n_queries"), col("rows_ok"), col("recall_ok"))
   }
 
   /** Hard-negative mining SERVED through the fitted fanout index — the

@@ -184,25 +184,14 @@ object VamanaPq {
       .select(col("query_id"), col("id"))
     val full = search(true).select(col("query_id"), col("id"))
     val approx = search(false).select(col("query_id"), col("id"))
-    // left-join from the distinct exact query ids so a ZERO-overlap query
-    // (which the inner-join+groupBy shape silently dropped) still votes:
-    // its coalesced overlap of 0 flips the flag, and the query-count term
-    // makes an empty/short result flip it too instead of passing vacuously.
-    val perQuery = exact.select(col("query_id")).distinct()
-      .join(exact.join(full, Seq("query_id", "id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as("ov")),
-        Seq("query_id"), "left")
-      .select(col("query_id"), coalesce(col("ov"), lit(0L)).as("overlap"))
-    val exactOk = perQuery
+    // a ZERO-overlap query still votes (its overlap of 0 flips the flag),
+    // and the query-count term makes an empty/short result flip it too
+    // instead of passing vacuously.
+    val exactOk = VamanaOps.overlapPerQuery(exact, exact, full)
       .agg(count(lit(1)).as("n_queries"),
         ((count(when(col("overlap") === k, 1)) === count(lit(1))) &&
           (count(lit(1)) === nQueries)).as("overlap_exact_ok"))
-    val rec = exact.withColumn("in_exact", lit(1))
-      .join(approx.withColumn("in_approx", lit(1)), Seq("query_id", "id"), "full_outer")
-      .agg(count(col("in_exact")).as("n_exact"),
-        count(when(col("in_exact").isNotNull && col("in_approx").isNotNull, 1)).as("n_hit"))
-      .select((col("n_hit") >= col("n_exact") * recallFloor).as("recall_ok"))
-    exactOk.crossJoin(rec)
+    exactOk.crossJoin(VamanaOps.recallOk(exact, approx, recallFloor))
       .select(col("n_queries"), col("overlap_exact_ok"), col("recall_ok"))
   }
 
@@ -366,14 +355,8 @@ object VamanaPq {
     val exact = Knn.knnExact(
         emb.join(allowedDf.withColumnRenamed("doc_id", "vec_id"), "vec_id"), q, k)
       .select(col("query_id"), col("id"))
-    // zero-overlap-safe: left-join from the query fixture so a dropped
-    // query coalesces to overlap 0 instead of vanishing
-    q.select(col("query_id")).distinct()
-      .join(ann.join(exact, Seq("query_id", "id"))
-          .groupBy(col("query_id")).agg(count(lit(1)).as("ov")),
-        Seq("query_id"), "left")
-      .select(col("query_id"), coalesce(col("ov"), lit(0L)).as("overlap"))
-      .orderBy(col("query_id"))
+    // a query the search dropped still appears, with overlap 0
+    VamanaOps.overlapPerQuery(q, exact, ann).orderBy(col("query_id"))
   }
 
   /** [[gate]]'s fanout twin (`vamana_pq_fanout_gate`): full-beam per-shard
@@ -392,7 +375,7 @@ object VamanaPq {
     fanoutCodeMemoryModel(VamanaOps.fanoutModel(spark, dir))
 
   def fanoutCodeMemoryModel(fm: FanoutModel): DataFrame = {
-    val spark = fm.shards.sparkSession
+    val spark = fm.core.spark
     import spark.implicits._
     fm.shards.map { case (shard, idx) =>
       val dim = if (idx.size == 0) 0 else idx.points(0).length

@@ -2,7 +2,8 @@ package graft.vamana
 
 import scala.util.hashing.MurmurHash3
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CLUSTERED (routed) shard layout for ANN serving — the SPANN posture
@@ -199,7 +200,7 @@ object VamanaRouted {
 }
 
 /** The fitted routed layout: centroid-routed shards over the [[ShardCore]]
-  * (per-shard kernels, cached, distributed) plus the s×dim centroid
+  * (per-shard kernels, resident, distributed) plus the s×dim centroid
   * routing table (driver-sized). The closure rule (`closureEps`,
   * `maxReplicas`) is part of the fitted model — [[insert]] routes new
   * points by the SAME rule the fit used, and [[save]] persists it, so no
@@ -207,7 +208,7 @@ object VamanaRouted {
 final class RoutedFanoutModel private[vamana] (
     private[vamana] val core: ShardCore[CentroidRouting]) {
 
-  private[vamana] def shards: Dataset[(Int, LocalIndex)] = core.shards
+  private[vamana] def shards: RDD[(Int, LocalIndex)] = core.shards
   def params: VamanaParams = core.params
   private[graft] def centroids: Array[Array[Float]] = core.routing.centroids
   def closureEps: Double = core.routing.closureEps
@@ -275,7 +276,7 @@ final class RoutedFanoutModel private[vamana] (
 
   private def probeCounts(queries: DataFrame, queryIdCol: String, queryVecCol: String,
       probe: Array[Float] => Seq[Int]): DataFrame = {
-    val spark = shards.sparkSession
+    val spark = core.spark
     import spark.implicits._
     core.prepare(queries, queryIdCol, queryVecCol)
       .map(q => (q._1, probe(q._2).size))
@@ -300,7 +301,7 @@ final class RoutedFanoutModel private[vamana] (
 
   /** Squared ball radius per shard — max point-to-centroid squared
     * distance of the shard's fitted points, the exact-prune bound for
-    * [[rangeSearch]]. One distributed pass over the cached kernels,
+    * [[rangeSearch]]. One distributed pass over the resident kernels,
     * memoized on the model (s floats on the driver). */
   private lazy val shardRadiiSq: Map[Int, Float] = {
     val cents = centroids
@@ -313,7 +314,7 @@ final class RoutedFanoutModel private[vamana] (
         i += 1
       }
       (s, m)
-    }(Encoders.tuple(Encoders.scalaInt, Encoders.scalaFloat)).collect().toMap
+    }.collect().toMap
   }
 
   /** The ball-prune probe rule for one radius: shards whose centroid ball
@@ -498,11 +499,13 @@ final class RoutedFanoutModel private[vamana] (
     }
   }
 
-  /** Routing/layout introspection: per-shard point count plus the global
-    * ε-closure replication factor (Σ shard sizes / distinct points) —
-    * the balance and redundancy facts a capacity planner reads. */
+  /** Routing/layout introspection: one row per live shard, (shard,
+    * n_points), ordered by shard — the balance fact a capacity planner
+    * reads. The frame carries no replication column: the ε-closure
+    * replication factor is Σ `n_points` over the distinct ids, i.e.
+    * [[totalPoints]] / the number of distinct points the layout holds. */
   def describeRouting(): DataFrame = {
-    val spark = shards.sparkSession
+    val spark = core.spark
     import spark.implicits._
     shards.map { case (sid, idx) => (sid, idx.size.toLong) }
       .toDF("shard", "n_points")
@@ -580,7 +583,7 @@ final class RoutedFanoutModel private[vamana] (
     * part of the model, so a reloaded index serves routed queries without
     * re-clustering. */
   def save(path: String): Unit = {
-    val spark = shards.sparkSession
+    val spark = core.spark
     import spark.implicits._
     centroids.zipWithIndex.map { case (c, si) => (si, c) }.toSeq
       .toDF("shard", "centroid")
@@ -588,6 +591,8 @@ final class RoutedFanoutModel private[vamana] (
     core.save(path, Seq("closure_eps" -> lit(closureEps), "max_replicas" -> lit(maxReplicas)))
   }
 
+  /** Release the resident shard kernels; runs no job. The model serves
+    * nothing afterwards; models derived from it keep serving. */
   def unpersist(): Unit = core.unpersist()
 }
 
@@ -620,9 +625,9 @@ final case class RoutedLocalServing(
 
 object RoutedFanoutModel {
 
-  /** Reload a [[RoutedFanoutModel.save]] checkpoint: shard kernels rebuilt
-    * from the frames (no graph builds — adjacency is persisted), routing
-    * table from the centroids frame. */
+  /** Reload a [[RoutedFanoutModel.save]] checkpoint: shard kernels
+    * reassembled from the frames (no graph builds — adjacency is
+    * persisted), routing table from the centroids frame. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): RoutedFanoutModel = {
     import spark.implicits._
     val (params, row) = ShardCore.readParams(spark, path)
@@ -633,6 +638,6 @@ object RoutedFanoutModel {
         .select(col("shard").cast("int"), col("centroid").cast("array<float>"))
         .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2),
       ShardCore.paramOr(row, "closure_eps", 0.15), ShardCore.paramOr(row, "max_replicas", 2))
-    new RoutedFanoutModel(new ShardCore(ShardCore.loadShards(spark, path, params), params, routing))
+    new RoutedFanoutModel(ShardCore.load(spark, path, params, routing))
   }
 }

@@ -1,10 +1,15 @@
 package graft.vamana
 
+import scala.collection.mutable
+import scala.reflect.ClassTag
 import scala.util.hashing.MurmurHash3
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Where a sharded layout puts points and which shard ids it mints — the
   * ONLY thing [[FanoutModel]] (hash) and [[RoutedFanoutModel]] (centroid)
@@ -16,46 +21,47 @@ private[vamana] sealed trait ShardRouting[R <: ShardRouting[R]] {
   /** The shards each kernel-space point goes to, on fit and on insert. */
   def assign(pts: Dataset[(Long, Array[Float])], seed: Long): Dataset[(Int, Long, Array[Float])]
 
+  /** The shard count the routing knows; a fit or load hashes the shard
+    * rows into at most this many partitions. */
+  def numShards: Int
+
   /** The first fresh id a rebalance split publishes a second half under. */
   def freshBase(shardIds: Array[Int]): Int
 
   /** The routing after a split pass (`fresh`: split shard → new id). */
-  def afterSplit(next: Dataset[(Int, LocalIndex)], fresh: Map[Int, Int]): R
+  def afterSplit(next: RDD[(Int, LocalIndex)], fresh: Map[Int, Int]): R
 
   /** Merge: the offset that re-keys `other`'s rows clear of `mine`, and
     * the merged routing; rejects layouts that cannot share one rule. */
-  def merged(other: R, mine: Dataset[(Int, LocalIndex)],
-      theirs: Dataset[(Int, LocalIndex)]): (Int, R)
+  def merged(other: R, mine: RDD[(Int, LocalIndex)], theirs: RDD[(Int, LocalIndex)]): (Int, R)
 }
 
 /** Hash routing: point `id` lives in shard hash(id, seed) mod
-  * `numShardsFit`, plus a second distinct shard when `replicate2`.
-  * `numShardsFit` is the FIT's shard count — the insert modulus even after
+  * `numShards`, plus a second distinct shard when `replicate2`.
+  * `numShards` is the FIT's shard count — the insert modulus even after
   * a delete removed a whole shard row. `replicate2` is true for the 2-of-s
   * merged-graph build of [[VamanaIndexer.fit]], false for the 1-of-s
   * [[VamanaFanout.fit]]. New ids (split halves, merged-in rows) go past the
   * live maximum, where insert routing can never target them. */
-private[vamana] final case class HashRouting(numShardsFit: Int, replicate2: Boolean)
+private[vamana] final case class HashRouting(numShards: Int, replicate2: Boolean)
     extends ShardRouting[HashRouting] {
 
   def assign(pts: Dataset[(Long, Array[Float])], seed: Long): Dataset[(Int, Long, Array[Float])] = {
     val spark = pts.sparkSession
     import spark.implicits._
-    val s = numShardsFit
+    val s = numShards
     val rep2 = replicate2 && s >= 2
     pts.flatMap { case (id, vec) => HashRouting.shardsOf(id, seed, s, rep2).map(sh => (sh, id, vec)) }
   }
 
   def freshBase(shardIds: Array[Int]): Int = shardIds.max + 1
 
-  def afterSplit(next: Dataset[(Int, LocalIndex)], fresh: Map[Int, Int]): HashRouting = this
+  def afterSplit(next: RDD[(Int, LocalIndex)], fresh: Map[Int, Int]): HashRouting = this
 
   /** Future inserts route by THIS side's fitted key space. */
-  def merged(other: HashRouting, mine: Dataset[(Int, LocalIndex)],
-      theirs: Dataset[(Int, LocalIndex)]): (Int, HashRouting) = {
-    val keyEnc = Encoders.scalaInt
-    (mine.map(_._1)(keyEnc).collect().max + 1 - theirs.map(_._1)(keyEnc).collect().min, this)
-  }
+  def merged(other: HashRouting, mine: RDD[(Int, LocalIndex)],
+      theirs: RDD[(Int, LocalIndex)]): (Int, HashRouting) =
+    (mine.keys.max() + 1 - theirs.keys.min(), this)
 }
 
 private[vamana] object HashRouting {
@@ -105,26 +111,26 @@ private[vamana] final case class CentroidRouting(
       VamanaRouted.sortedCentroidDists(cs, qv), routeEps, maxProbe, cs.length)
   }
 
+  def numShards: Int = centroids.length
+
   /** Every shard id stays a valid centroid index — the routed invariant. */
   def freshBase(shardIds: Array[Int]): Int = centroids.length
 
   /** Each half of a split routes by its OWN kernel-space mean — a tiny
     * (2·|splits|)×dim collect off the rebuilt rows. */
-  def afterSplit(next: Dataset[(Int, LocalIndex)], fresh: Map[Int, Int]): CentroidRouting = {
+  def afterSplit(next: RDD[(Int, LocalIndex)], fresh: Map[Int, Int]): CentroidRouting = {
     val affected = fresh.flatMap { case (s, f) => Seq(s, f) }.toSet
-    val bcAff = next.sparkSession.sparkContext.broadcast(affected)
-    val centEnc = Encoders.tuple(Encoders.scalaInt, Encoders.kryo[Array[Float]])
     val means = next
-      .filter(r => bcAff.value.contains(r._1))
-      .map { case (s, idx) => (s, CentroidRouting.meanVec(idx.points)) }(centEnc)
+      .filter(r => affected.contains(r._1))
+      .map { case (s, idx) => (s, CentroidRouting.meanVec(idx.points)) }
       .collect().toMap
     val old = centroids
     copy(centroids = Array.tabulate(old.length + fresh.size)(i => means.getOrElse(i, old(i))))
   }
 
   /** The centroid tables concatenate; the closure rule must match. */
-  def merged(other: CentroidRouting, mine: Dataset[(Int, LocalIndex)],
-      theirs: Dataset[(Int, LocalIndex)]): (Int, CentroidRouting) = {
+  def merged(other: CentroidRouting, mine: RDD[(Int, LocalIndex)],
+      theirs: RDD[(Int, LocalIndex)]): (Int, CentroidRouting) = {
     require(closureEps == other.closureEps && maxReplicas == other.maxReplicas,
       s"closure-rule mismatch: ($closureEps, $maxReplicas) vs " +
         s"(${other.closureEps}, ${other.maxReplicas}) — future inserts route under " +
@@ -151,20 +157,27 @@ private[vamana] object CentroidRouting {
 }
 
 /** The shard core under [[FanoutModel]] and [[RoutedFanoutModel]]: one
-  * [[LocalIndex]] per shard in a CACHED dataset of kryo-serialized kernels,
-  * built once at fit/load time, plus the layout's [[ShardRouting]]. Nothing
-  * is collected to the driver; the working set per task is one shard. Every
-  * operation returns a new core and leaves this one serving. */
+  * [[LocalIndex]] per shard, RESIDENT — an RDD of deserialized kernels,
+  * hash-partitioned by shard id, persisted once by the operation that
+  * made it (fit, load, insert, delete, merge, rebalance, full beam) and
+  * cut from that operation's lineage ([[ShardCore.resident]]) — plus the
+  * layout's [[ShardRouting]]. A top-k call is one narrow job over the
+  * resident kernels whose per-partition answers rank-merge on the driver
+  * ([[ShardCore.rankMerge]]); the working set per task is the shards of
+  * its partition. Every operation returns a new core and leaves this one
+  * serving; after [[unpersist]] a core serves nothing. */
 private[vamana] final class ShardCore[R <: ShardRouting[R]](
-    val shards: Dataset[(Int, LocalIndex)],
+    val spark: SparkSession,
+    val shards: RDD[(Int, LocalIndex)],
     val params: VamanaParams,
     val routing: R) {
   import ShardCore._
 
-  private val spark: SparkSession = shards.sparkSession
+  require(shards.partitioner.isDefined,
+    "shard rows must be hash-partitioned by shard id (ShardCore.fit/load build them so)")
 
-  private def withShards(next: Dataset[(Int, LocalIndex)], r: R = routing): ShardCore[R] =
-    new ShardCore(next, params, r)
+  private def withShards(next: RDD[(Int, LocalIndex)], r: R = routing): ShardCore[R] =
+    new ShardCore(spark, resident(next), params, r)
 
   /** The query batch sorted by id, prepared in the index metric, with its
     * start vectors (null without `startVecCol`). Bounded: it is broadcast. */
@@ -187,12 +200,13 @@ private[vamana] final class ShardCore[R <: ShardRouting[R]](
     }
   }
 
-  /** The one scatter. Without `probe` the batch is broadcast and every
-    * shard answers all of it; with a probe rule (run on the driver) one
-    * shard→queries map is broadcast. `perShard` runs once per shard row
-    * that has queries, so a shard nothing was routed to pays no set-up. */
-  def scatter[T: Encoder](prepared: Array[Query], probe: Option[Array[Float] => Seq[Int]])(
-      perShard: (Int, LocalIndex) => Query => Iterator[T]): Dataset[T] = {
+  /** The one scatter, narrow over the resident kernels. Without `probe`
+    * the batch is broadcast and every shard answers all of it; with a
+    * probe rule (run on the driver) one shard→queries map is broadcast.
+    * `perShard` runs once per shard row that has queries, so a shard
+    * nothing was routed to pays no set-up. */
+  def scatter[T: ClassTag](prepared: Array[Query], probe: Option[Array[Float] => Seq[Int]])(
+      perShard: (Int, LocalIndex) => Query => Iterator[T]): RDD[T] = {
     val sc = spark.sparkContext
     val forShard: Int => Array[Query] = probe match {
       case None =>
@@ -211,16 +225,26 @@ private[vamana] final class ShardCore[R <: ShardRouting[R]](
     }
   }
 
-  /** [[scatter]] a per-shard top-k search, then [[rankMerge]]. */
+  /** [[scatter]] a per-shard top-k search, then [[ShardCore.rankMerge]]:
+    * one job, answered as a local frame. Rejected before any job when
+    * the driver could receive more than [[ShardCore.MaxMergeRows]]
+    * answers (partitions × |Q| × k). */
   def topK(prepared: Array[Query], k: Int, probe: Option[Array[Float] => Seq[Int]] = None)(
       search: (Int, LocalIndex) => Query => Array[(Long, Float)]): DataFrame = {
-    import spark.implicits._
-    val answers = scatter(prepared, probe) { (s, idx) =>
+    val rows = mergeRows(prepared.length, k)
+    require(rows <= MaxMergeRows,
+      s"a top-k call over ${shards.getNumPartitions} shard partitions × ${prepared.length} " +
+        s"queries × k=$k may bring $rows rows to the driver, above $MaxMergeRows; " +
+        "split the query batch or lower k")
+    rankMerge(spark, scatter(prepared, probe) { (s, idx) =>
       val f = search(s, idx)
       q => f(q).iterator.map { case (id, dist) => (q._1, id, dist.toDouble) }
-    }.toDF("query_id", "id", "dist")
-    rankMerge(answers, k)
+    }, k)
   }
+
+  /** The most answers a top-k call brings to the driver: each partition
+    * sends at most k per query. */
+  def mergeRows(numQueries: Long, k: Long): Long = shards.getNumPartitions * numQueries * k
 
   /** Broadcasts `ids` sorted; the result, called on an executor, is the
     * membership (with `deny`, non-membership) predicate. */
@@ -246,7 +270,8 @@ private[vamana] final class ShardCore[R <: ShardRouting[R]](
   }
 
   /** Range search: the union of per-shard range sets, deduped by min dist
-    * (see [[FanoutModel.rangeSearch]]). */
+    * (see [[FanoutModel.rangeSearch]]). The merge stays distributed: its
+    * size depends on the data, not on |Q| × k. */
   def rangeUnion(queries: DataFrame, radiusSq: Double, queryIdCol: String, queryVecCol: String,
       probe: Option[Array[Float] => Seq[Int]] = None): DataFrame = {
     require(params.metric == "l2", "range radius is a squared-L2 bound; fit with metric=l2")
@@ -269,23 +294,20 @@ private[vamana] final class ShardCore[R <: ShardRouting[R]](
   }
 
   /** Live per-shard point counts, ascending. */
-  def shardSizes: Array[Int] =
-    shards.map { case (_, idx) => idx.size }(Encoders.scalaInt).collect().sorted
+  def shardSizes: Array[Int] = shards.map { case (_, idx) => idx.size }.collect().sorted
 
   /** Σ shard sizes — replicated points count once per hosting shard. */
-  def storedPoints: Long =
-    shards.map { case (_, idx) => idx.size.toLong }(Encoders.scalaLong).reduce(_ + _)
+  def storedPoints: Long = shards.map { case (_, idx) => idx.size.toLong }.reduce(_ + _)
 
   /** The same graphs with beam = shard size (see
     * [[FanoutModel.withFullBeamShards]]). */
-  def withFullBeam(): ShardCore[R] = {
-    val s2 = shards.map { case (s, idx) => (s, idx.withFullBeam) }.cache()
-    s2.count()
-    withShards(s2)
-  }
+  def withFullBeam(): ShardCore[R] = withShards(shards.mapValues(_.withFullBeam))
 
   /** Shard-local insert routed by [[ShardRouting.assign]] (see
-    * [[FanoutModel.insert]]). */
+    * [[FanoutModel.insert]]). The routed batch is partitioned like the
+    * resident kernels, so only the batch moves: each partition inserts
+    * into its own kernels and rebuilds, from the batch alone, a routed
+    * shard whose row a full-membership delete removed. */
   def insert(newPoints: DataFrame, idCol: String, vecCol: String): ShardCore[R] = {
     require(params.metric != "ip",
       "incremental insert is not defined for metric=ip (fit-time norm augmentation); refit instead")
@@ -295,41 +317,39 @@ private[vamana] final class ShardCore[R <: ShardRouting[R]](
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .as[(Long, Array[Float])]
     val (ptsT, _) = VamanaIndexer.metricTransform(pts, kp)
-    val assigned = routing.assign(ptsT, kp.seed).groupByKey(_._1)
-    val updated = shards.groupByKey(_._1)
-      .cogroup(assigned) { (shard, idxIt, newIt) =>
-        val batch = newIt.toArray.sortBy(_._2)
-        val idxs = idxIt.toArray
-        if (idxs.isEmpty) {
-          // shard row gone (full-membership delete): rebuild it from the batch
-          if (batch.isEmpty) Iterator.empty
-          else Iterator.single((shard, buildShard(shard, batch.map(_._2), batch.map(_._3), kp)))
-        } else idxs.iterator.map { case (_, idx) =>
-          (shard,
-            if (batch.isEmpty) idx
-            else VamanaKernel.insert(idx, batch.map(_._2), batch.map(_._3)))
-        }
-      }.cache()
-    updated.count() // materialize once; the old core stays independently usable
-    withShards(updated)
+    val batch = routing.assign(ptsT, kp.seed).rdd
+      .map { case (s, id, vec) => (s, (id, vec)) }
+      .partitionBy(shards.partitioner.get)
+    withShards(shards.zipPartitions(batch, preservesPartitioning = true) { (here, routed) =>
+      val bySh = routed.toArray.groupBy(_._1).map { case (s, xs) => (s, xs.map(_._2).sortBy(_._1)) }
+      val kept = here.map { case (s, idx) =>
+        (s, bySh.get(s).fold(idx)(b => VamanaKernel.insert(idx, b.map(_._1), b.map(_._2))))
+      }.toArray
+      val present = kept.map(_._1).toSet
+      kept.iterator ++ bySh.iterator.filterNot(e => present(e._1)).map { case (s, b) =>
+        (s, buildShard(s, b.map(_._1), b.map(_._2), kp))
+      }
+    })
   }
 
-  /** Shard-local delete (see [[FanoutModel.delete]]). */
+  /** Shard-local delete (see [[FanoutModel.delete]]), a narrow map over
+    * the resident kernels. */
   def delete(deleteIds: Array[Long]): ShardCore[R] = {
     val bc = spark.sparkContext.broadcast(deleteIds)
-    val updated = shards.flatMap { case (shard, idx) =>
+    withShards(shards.mapPartitions({ it =>
       val delSet = bc.value.toSet
-      val n = idx.ids.count(delSet.contains)
-      if (n == idx.size) Iterator.empty
-      else if (n == 0) Iterator.single((shard, idx))
-      else Iterator.single((shard, VamanaKernel.delete(idx, bc.value)))
-    }.cache()
-    updated.count()
-    withShards(updated)
+      it.flatMap { case (shard, idx) =>
+        val n = idx.ids.count(delSet.contains)
+        if (n == idx.size) Iterator.empty
+        else if (n == 0) Iterator.single((shard, idx))
+        else Iterator.single((shard, VamanaKernel.delete(idx, bc.value)))
+      }
+    }, preservesPartitioning = true))
   }
 
   /** Zero-build merge: `other`'s rows re-key clear of this key space and
-    * union (see [[FanoutModel.merge]]). */
+    * join this core's partitions; only `other`'s kernels move (see
+    * [[FanoutModel.merge]]). */
   def merge(other: ShardCore[R]): ShardCore[R] = {
     require(params.metric != "ip" && other.params.metric != "ip",
       "merge is not defined for metric=ip (per-fit norm augmentation); refit instead")
@@ -341,10 +361,9 @@ private[vamana] final class ShardCore[R <: ShardRouting[R]](
     val (offset, merged) = routing.merged(other.routing, shards, other.shards)
     require(idsDF.join(other.idsDF, "id").isEmpty,
       "id sets overlap; merge requires disjoint indexes (dedup first, or delete one side's copies)")
-    val rekeyed = other.shards.map { case (s, idx) => (s + offset, idx) }
-    val union = shards.union(rekeyed).cache()
-    union.count() // materialize; both inputs stay independently usable
-    withShards(union, merged)
+    val theirs = other.shards.map { case (s, idx) => (s + offset, idx) }
+      .partitionBy(shards.partitioner.get)
+    withShards(shards.zipPartitions(theirs, preservesPartitioning = true)(_ ++ _), merged)
   }
 
   /** Split every shard over `maxRatio`× the mean into two halves rebuilt
@@ -352,22 +371,21 @@ private[vamana] final class ShardCore[R <: ShardRouting[R]](
     * [[FanoutModel.rebalance]]); this core when nothing is oversized. */
   def rebalance(maxRatio: Double, maxPasses: Int): ShardCore[R] = {
     require(maxRatio >= 1.0, "maxRatio < 1 would split forever")
-    val sizeEnc: Encoder[(Int, Int)] = Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
     val kp = params
-    var cur = shards
-    var rt = routing
+    var cur = this
     var pass = 0
     var done = false
     while (pass < maxPasses && !done) {
-      val sizes = cur.map { case (s, idx) => (s, idx.size) }(sizeEnc).collect()
+      val sizes = cur.shards.map { case (s, idx) => (s, idx.size) }.collect()
       val mean = sizes.map(_._2.toDouble).sum / sizes.length
       val big = sizes.filter { case (_, n) => n > maxRatio * mean && n >= 2 }.map(_._1)
       if (big.isEmpty) done = true
       else {
-        val base = rt.freshBase(sizes.map(_._1))
+        val base = cur.routing.freshBase(sizes.map(_._1))
         val freshIds = big.sorted.zipWithIndex.map { case (s, i) => (s, base + i) }.toMap
         val bcFresh = spark.sparkContext.broadcast(freshIds)
-        val next = cur.flatMap { case (s, idx) =>
+        // a fresh half hashes to another partition: the split rows re-partition
+        val next = resident(cur.shards.flatMap { case (s, idx) =>
           bcFresh.value.get(s) match {
             case None => Iterator.single((s, idx))
             case Some(fresh) =>
@@ -376,15 +394,13 @@ private[vamana] final class ShardCore[R <: ShardRouting[R]](
                 (s, buildShard(s, a.map(_._1), a.map(_._2), kp)),
                 (fresh, buildShard(fresh, b.map(_._1), b.map(_._2), kp)))
           }
-        }.cache()
-        next.count() // materialize; the old core stays independently usable
-        rt = rt.afterSplit(next, freshIds)
-        if (cur ne shards) cur.unpersist()
-        cur = next
+        }.partitionBy(shards.partitioner.get))
+        if (cur ne this) cur.unpersist()
+        cur = new ShardCore(spark, next, params, cur.routing.afterSplit(next, freshIds))
       }
       pass += 1
     }
-    if (cur eq shards) this else withShards(cur, rt)
+    cur
   }
 
   /** One parquet of per-point shard rows (vector, external-id adjacency,
@@ -403,6 +419,8 @@ private[vamana] final class ShardCore[R <: ShardRouting[R]](
       .repartition(1).write.mode("overwrite").parquet(s"$path/params")
   }
 
+  /** Releases the resident kernels; runs no job. The core cannot serve
+    * afterwards: its lineage was cut when they were built. */
   def unpersist(): Unit = { val _ = shards.unpersist() }
 }
 
@@ -414,27 +432,49 @@ private[vamana] object ShardCore {
   /** Largest query batch one call broadcasts. */
   val MaxQueries = 10000
 
-  /** The one encoder for shard rows: the kernel travels kryo-serialized. */
-  implicit val shardEncoder: Encoder[(Int, LocalIndex)] =
-    Encoders.tuple(Encoders.scalaInt, Encoders.kryo[LocalIndex])
+  /** Most answers one top-k call may bring to the driver (partitions ×
+    * |Q| × k): 10M rows travel as 240 MB of primitive arrays, under
+    * Spark's default 1 GB `spark.driver.maxResultSize`. */
+  val MaxMergeRows: Long = 10000000L
 
   /** One shard's kernel, seeded by shard id. */
   def buildShard(shard: Int, ids: Array[Long], pts: Array[Array[Float]], kp: VamanaParams,
       parallelism: Int = 1): LocalIndex =
     VamanaKernel.buildParallel(ids, pts, kp.copy(seed = kp.seed + shard), parallelism)
 
+  /** The partitioning of every core's shard rows: hash of shard id over
+    * min(shards, default parallelism) partitions. */
+  private def partitioner(spark: SparkSession, numShards: Int): HashPartitioner =
+    new HashPartitioner(math.max(1, math.min(numShards, spark.sparkContext.defaultParallelism)))
+
+  /** Persists `rows` deserialized, builds them now, exactly once, and
+    * cuts their lineage (a local checkpoint over the persisted blocks):
+    * every update derives the next core from this one, so without the
+    * cut each insert or delete would stack one more layer on the plan
+    * every later search task deserializes, and a lost block would replay
+    * every update since the fit. The blocks are the only copy: a lost
+    * executor's shards fail the call instead of being recomputed. */
+  private def resident(rows: RDD[(Int, LocalIndex)]): RDD[(Int, LocalIndex)] = {
+    rows.persist(StorageLevel.MEMORY_AND_DISK)
+    rows.localCheckpoint()
+    rows.count()
+    rows
+  }
+
   /** Fit: route `pts` (kernel space) by `routing`, build one kernel per
     * shard (members sorted by id) on `parallelism` threads, and
-    * materialize the cached shard dataset once. */
+    * materialize the resident kernels once. */
   def fit[R <: ShardRouting[R]](pts: Dataset[(Long, Array[Float])], kp: VamanaParams,
       routing: R, parallelism: Int): ShardCore[R] = {
-    val shards = routing.assign(pts, kp.seed).groupByKey(_._1)(Encoders.scalaInt)
-      .mapGroups { (shard, it) =>
-        val arr = it.toArray.sortBy(_._2)
-        (shard, buildShard(shard, arr.map(_._2), arr.map(_._3), kp, parallelism))
-      }.cache()
-    shards.count() // force the builds NOW, exactly once
-    new ShardCore(shards, kp, routing)
+    val spark = pts.sparkSession
+    val shards = routing.assign(pts, kp.seed).rdd
+      .map { case (s, id, vec) => (s, (id, vec)) }
+      .groupByKey(partitioner(spark, routing.numShards))
+      .mapPartitions(_.map { case (shard, it) =>
+        val arr = it.toArray.sortBy(_._1)
+        (shard, buildShard(shard, arr.map(_._1), arr.map(_._2), kp, parallelism))
+      }, preservesPartitioning = true)
+    new ShardCore(spark, resident(shards), kp, routing)
   }
 
   /** Build threads per shard when `numShards` shards build at once, so a
@@ -442,21 +482,91 @@ private[vamana] object ShardCore {
   def threadsPerShard(numShards: Int): Int =
     math.max(2, Runtime.getRuntime.availableProcessors() / math.max(1, numShards))
 
-  /** The global merge of per-shard (query_id, id, dist) answers: dedup a
-    * point answered by several shards to its min dist, rank on the
-    * UNROUNDED distances, keep the first k, round only the emitted column
+  /** The schema of every ranked top-k frame (`dist` nullable, as the SQL
+    * division that rounds it declares it). */
+  private val RankedSchema: StructType = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("rank", LongType, nullable = false),
+    StructField("id", LongType, nullable = false),
+    StructField("dist", DoubleType, nullable = true)))
+
+  /** The global merge of per-shard (query_id, id, dist) answers, in one
+    * job: each partition keeps its queries' [[bestK]] and sends them as
+    * primitive arrays; the driver folds each partition's answers, in
+    * partition order, into its running best k per query (so it holds
+    * that plus the partitions that arrived early, never a map of every
+    * row), and the ranks return as a local frame sorted by (query_id,
+    * rank). A partition holding a point's min dist ranks it no lower
+    * than the global merge does, so the pre-merge drops nothing, and
+    * an answer a fold drops stays behind k better ones. Ranking is on
+    * the UNROUNDED distances; only the emitted column is rounded
     * (rounding first could order two points differently from the exact
     * kNN the full-beam gates compare against when true distances differ
     * only past 4 decimals at the rank-k boundary). */
-  def rankMerge(answers: DataFrame, k: Int): DataFrame = {
-    val merged = answers.groupBy(col("query_id"), col("id")).agg(min(col("dist")).as("dist"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("id").asc)
-    merged
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id"),
-        (expr("rint(dist * 10000)") / 1e4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
+  def rankMerge(spark: SparkSession, answers: RDD[(Long, Long, Double)], k: Int): DataFrame = {
+    val n = answers.getNumPartitions
+    val arrived = new Array[Packed](n)
+    var next = 0
+    var best = Array.empty[(Long, Long, Double)]
+    // the handler runs on the scheduler's one event thread, one call per partition
+    spark.sparkContext.runJob(answers, (it: Iterator[(Long, Long, Double)]) => pack(bestK(it, k)),
+      (i: Int, p: Packed) => {
+        arrived(i) = p
+        while (next < n && arrived(next) != null) {
+          best = bestK(best.iterator ++ unpack(arrived(next)), k)
+          arrived(next) = null
+          next += 1
+        }
+      })
+    val rows = new java.util.ArrayList[Row](best.length)
+    var i = 0
+    var rank = 0L
+    while (i < best.length) {
+      val (q, id, d) = best(i)
+      rank = if (i > 0 && best(i - 1)._1 == q) rank + 1 else 1L
+      rows.add(Row(q, rank, id, math.rint(d * 10000) / 1e4))
+      i += 1
+    }
+    spark.createDataFrame(rows, RankedSchema)
+  }
+
+  /** One partition's best answers as (query ids, ids, dists). */
+  private type Packed = (Array[Long], Array[Long], Array[Double])
+
+  private def pack(a: Array[(Long, Long, Double)]): Packed =
+    (a.map(_._1), a.map(_._2), a.map(_._3))
+
+  private def unpack(p: Packed): Iterator[(Long, Long, Double)] =
+    Iterator.range(0, p._1.length).map(i => (p._1(i), p._2(i), p._3(i)))
+
+  /** Each query's best k answers: a point answered several times keeps
+    * its min dist, then ascending (dist, id) under Spark's double
+    * ordering. Sorted by query id, then rank. */
+  private def bestK(answers: Iterator[(Long, Long, Double)],
+      k: Int): Array[(Long, Long, Double)] = {
+    val byQuery = mutable.HashMap.empty[Long, mutable.HashMap[Long, Double]]
+    answers.foreach { case (q, id, d) =>
+      val m = byQuery.getOrElseUpdate(q, mutable.HashMap.empty[Long, Double])
+      m.get(id) match {
+        case Some(old) if compareDoubles(old, d) <= 0 =>
+        case _ => m(id) = d
+      }
+    }
+    byQuery.toArray.sortBy(_._1).flatMap { case (q, m) =>
+      m.toArray.sorted(DistThenId).iterator.take(k).map { case (id, d) => (q, id, d) }
+    }
+  }
+
+  /** Spark SQL's double comparison: -0.0 equals 0.0, NaN equals NaN and
+    * sorts above every other value. */
+  private def compareDoubles(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  private val DistThenId: Ordering[(Long, Double)] = new Ordering[(Long, Double)] {
+    def compare(a: (Long, Double), b: (Long, Double)): Int = {
+      val c = compareDoubles(a._2, b._2)
+      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+    }
   }
 
   /** The params row every checkpoint starts with. */
@@ -486,25 +596,28 @@ private[vamana] object ShardCore {
   def paramOr[T](row: Row, name: String, default: => T): T =
     if (row.schema.fieldNames.contains(name)) row.getAs[T](name) else default
 
-  /** Reassemble each shard kernel of a [[ShardCore.save]] checkpoint in one
-    * task (no graph builds: adjacency is persisted), cached. */
-  def loadShards(spark: SparkSession, path: String, params: VamanaParams): Dataset[(Int, LocalIndex)] = {
+  /** Reload a [[ShardCore.save]] checkpoint under `routing`: each shard
+    * kernel reassembles in its own partition (no graph builds: adjacency
+    * is persisted), resident. */
+  def load[R <: ShardRouting[R]](spark: SparkSession, path: String, params: VamanaParams,
+      routing: R): ShardCore[R] = {
     import spark.implicits._
     val rows = spark.read.parquet(s"$path/shards")
       .select(col("shard").cast("int"), col("pos").cast("int"), col("id"),
         col("vec").cast("array<float>"), col("neighbors"),
         col("medoid_pos").cast("int"), col("shard_seed").cast("long"))
       .as[(Int, Int, Long, Array[Float], Array[Long], Int, Long)]
-    val shards = rows.groupByKey(_._1).mapGroups { (shard, it) =>
-      val arr = it.toArray.sortBy(_._2)
-      val ids = arr.map(_._3)
-      val posOf = ids.zipWithIndex.toMap
-      val graph = arr.map(_._5.flatMap(posOf.get(_)))
-      (shard, new LocalIndex(ids, arr.map(_._4), graph, arr.head._6,
-        params.copy(seed = arr.head._7)))
-    }.cache()
-    shards.count() // materialize once, up front
-    shards
+    val shards = rows.rdd.map(r => (r._1, r))
+      .groupByKey(partitioner(spark, routing.numShards))
+      .mapPartitions(_.map { case (shard, it) =>
+        val arr = it.toArray.sortBy(_._2)
+        val ids = arr.map(_._3)
+        val posOf = ids.zipWithIndex.toMap
+        val graph = arr.map(_._5.flatMap(posOf.get(_)))
+        (shard, new LocalIndex(ids, arr.map(_._4), graph, arr.head._6,
+          params.copy(seed = arr.head._7)))
+      }, preservesPartitioning = true)
+    new ShardCore(spark, resident(shards), params, routing)
   }
 
   /** Deterministic locality-aware balanced split of one shard's

@@ -72,7 +72,8 @@ class FanoutInsertSpec extends AnyFunSuite {
     assert(copies(insOne).values.toSet == Set(1),
       "1-of-s fit: inserted points get exactly one shard copy")
     // same shards, declared as a 2-of-s (merged-graph) fit
-    val twoOf = new FanoutModel(oneOf.shards, oneOf.params, 3, replicate2 = true)
+    val twoOf = new FanoutModel(
+      new ShardCore(spark, oneOf.shards, oneOf.params, HashRouting(3, replicate2 = true)))
     val insTwo = twoOf.insert(newPts)
     val c2 = copies(insTwo)
     assert(c2.keySet == newIds && c2.values.toSet == Set(2),
