@@ -58,6 +58,46 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
+  /** One query's median over `iters` timed runs, after one untimed
+    * warm-up when `iters > 1`; `Left(error)` when any run throws — a
+    * query that fails is reported as failed, never as a fast time. */
+  private[graft] def timeMedian(iters: Int)(run: () => Unit): Either[String, Double] = {
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      run()
+      (System.nanoTime() - t0) / 1e9
+    }
+    try {
+      if (iters > 1) once()
+      val ts = Array.fill(iters)(once()).sorted
+      Right(ts(ts.length / 2))
+    } catch { case e: Throwable => Left(e.toString) }
+  }
+
+  /** The files a run writes its per-query map to: always the cpu-suffixed
+    * twin (`BENCH_FULL_c8.json`), and the unsuffixed `benchOut` only when
+    * the run uses every host CPU. A round benches at full width and again
+    * at 8 cores for scaling; the 8-core run must not overwrite the
+    * full-width map the unsuffixed file carries. */
+  private[graft] def outputPaths(benchOut: String, cpus: String, hostCpus: Int): Seq[String] = {
+    val dot = benchOut.lastIndexOf('.')
+    val suffixed =
+      if (dot > benchOut.lastIndexOf('/')) benchOut.substring(0, dot) + s"_c$cpus" + benchOut.substring(dot)
+      else benchOut + s"_c$cpus"
+    if (cpus == hostCpus.toString) Seq(benchOut, suffixed) else Seq(suffixed)
+  }
+
+  /** `{"name":"text",...}` with JSON string escaping. */
+  private[graft] def jsonStrings(m: Iterable[(String, String)]): String = {
+    def esc(t: String): String = t.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    }
+    m.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -117,11 +157,6 @@ object Bench {
       try graft.core.Tables.table(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
     def r4(v: Double): Double = math.round(v * 10000).toDouble / 10000
     // cached-storage footprint (MB) across all persisted RDDs — recorded
     // per query so a BENCH_FULL reader can see cache pressure next to the
@@ -129,6 +164,7 @@ object Bench {
     def storageMb(): Double =
       r4(spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / 1e6)
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val storage = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val familyStorage = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     for ((family, entries) <- SparkEntry.families) {
@@ -139,9 +175,10 @@ object Bench {
         // median, and the attribution wanders between rounds as the query
         // set evolves. With the warm-up, medians are steady-state and stable
         // across consecutive runs.
-        if (iters > 1) timeOnce(fn)
-        val ts = Array.fill(iters)(timeOnce(fn)).sorted
-        results(name) = r4(ts(ts.length / 2))
+        timeMedian(iters)(() => fn(spark, sfDir).count()) match {
+          case Right(secs) => results(name) = r4(secs)
+          case Left(err) => failed(name) = err
+        }
         storage(name) = storageMb()
       }
       familyStorage(family) = storageMb()
@@ -191,20 +228,14 @@ object Bench {
       }
     val drifts = driftEntries.mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"storage_mb_after":$st,"family_storage_mb":$fs,"regressions":$regressions,"drifts_vs_committed":$drifts,"sf":"$sfDir","iters":$iters,"loadavg_start":${r4(loadStart)},"loadavg_end":${r4(loadEnd)},"host_cpus":${Runtime.getRuntime.availableProcessors()}}"""
-    // Write the per-query map to BOTH the mutable default file AND a
-    // cpu-suffixed twin (BENCH_FULL_c32.json / BENCH_FULL_c8.json): the
-    // driver benches twice per round (32-core, then 8-core for scaling),
-    // and both runs writing the ONE file left the 32-core per-query map
-    // unrecoverable (PERF_r17 got n_common=0 and an empty scaling block
-    // because the 8-core run overwrote it). The suffixed file survives the
-    // second run; the short stdout line points at it.
-    val benchOutCpu = {
-      val dot = benchOut.lastIndexOf('.')
-      if (dot > benchOut.lastIndexOf('/')) benchOut.substring(0, dot) + s"_c$cpus" + benchOut.substring(dot)
-      else benchOut + s"_c$cpus"
-    }
-    for (path <- Seq(benchOut, benchOutCpu)) {
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":${jsonStrings(failed)},"storage_mb_after":$st,"family_storage_mb":$fs,"regressions":$regressions,"drifts_vs_committed":$drifts,"sf":"$sfDir","iters":$iters,"loadavg_start":${r4(loadStart)},"loadavg_end":${r4(loadEnd)},"host_cpus":${Runtime.getRuntime.availableProcessors()}}"""
+    // The per-query map goes to a cpu-suffixed file (BENCH_FULL_c32.json,
+    // BENCH_FULL_c8.json), and to the unsuffixed default file only from a
+    // run that uses every host CPU: a round benches twice (full width,
+    // then 8 cores for scaling), and when both runs wrote the
+    // one file the full-width map was lost (PERF_r17/r18 got n_common=0).
+    val paths = outputPaths(benchOut, cpus, Runtime.getRuntime.availableProcessors())
+    for (path <- paths) {
       try {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(path),
@@ -212,7 +243,7 @@ object Bench {
       } catch { case _: Throwable => () }
     }
     val shortLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_regressions":${regressionEntries.size},"sf":"$sfDir","iters":$iters,"loadavg":${r4(loadStart)},"queries_file":"${benchOutCpu.split('/').last}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"n_regressions":${regressionEntries.size},"sf":"$sfDir","iters":$iters,"loadavg":${r4(loadStart)},"queries_file":"${paths.last.split('/').last}"}"""
     spark.stop()
     // the short JSON goes out AFTER spark.stop(), as the process's final
     // stdout line: the driver parses a tail capture, and executor/log

@@ -103,11 +103,9 @@ object Knn {
       col(vecCol).cast("array<double>").as("va"),
       dotNative(spark, col(vecCol), col(vecCol)).as("sq"))
     val nt = withSq.agg(count(lit(1)).cast("double").as("n"), sum(col("sq")).as("t"))
-    val svec = points
+    val svec = inPosOrder(points
       .select(posexplode(col(vecCol).cast("array<double>")).as(Seq("pos", "x")))
-      .groupBy(col("pos")).agg(sum(col("x")).as("sx"))
-      .orderBy(col("pos"))
-      .agg(collect_list(col("sx")).as("svec"))
+      .groupBy(col("pos")).agg(sum(col("x")).as("sx")), "sx", "svec")
     withSq.crossJoin(broadcast(nt)).crossJoin(broadcast(svec))
       .select(col("id_a"),
         (col("n") * col("sq")
@@ -119,16 +117,22 @@ object Knn {
       .select(col("id_a").as("medoid_id"), round(col("total_dist"), 2).as("total_dist"))
   }
 
+  /** One row holding `valCol` of every (pos, value) row as an array in
+    * `pos` order. The order comes from sorting the collected structs, not
+    * from an `orderBy` before `collect_list`: Spark does not specify the
+    * order in which a global aggregate merges its partitions. */
+  private def inPosOrder(rows: DataFrame, valCol: String, as: String): DataFrame =
+    rows.agg(collect_list(struct(col("pos"), col(valCol))).as("entries"))
+      .select(transform(array_sort(col("entries")), e => e.getField(valCol)).as(as))
+
   /** Scalable medoid approximation: per-dimension mean (one pass, one small
     * shuffle of dim×numPartitions partial sums) then nearest point to that
     * centroid (one more pass). O(n·dim) vs the exact form's O(n²·dim). */
   def centroidNearest(points: DataFrame, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centroidRow = points
+    val centroidRow = inPosOrder(points
       .select(posexplode(col(vecCol)).as(Seq("pos", "v")))
       .groupBy(col("pos"))
-      .agg(avg(col("v")).as("m"))
-      .orderBy(col("pos"))
-      .agg(collect_list(col("m")).as("centroid"))
+      .agg(avg(col("v")).as("m")), "m", "centroid")
     points
       .crossJoin(broadcast(centroidRow))
       .select(col(idCol).as("medoid_id"), l2n(points.sparkSession, col(vecCol), col("centroid")).as("dist_to_centroid"))

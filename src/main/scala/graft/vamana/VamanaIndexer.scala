@@ -1,5 +1,7 @@
 package graft.vamana
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -639,10 +641,35 @@ final class VamanaModel private (
     * local and distributed models alike. */
   def params: VamanaParams = localOpt.map(_.params).getOrElse(framesOpt.get.params)
 
-  /** Release any cached state a distributed model holds (the resident
-    * fanout shard kernels, which its frames are also read from); local
-    * models hold nothing cached. */
-  def unpersist(): Unit = fanoutOpt.foreach(_.unpersist())
+  /** The broadcast of the local index and the context it belongs to, made
+    * by the first search form that needs it and reused by every later one
+    * until [[unpersist]]. */
+  @transient private var shipped: (SparkContext, Broadcast[LocalIndex]) = _
+
+  private def broadcastIndex(spark: SparkSession, idx: LocalIndex): Broadcast[LocalIndex] = synchronized {
+    val sc = spark.sparkContext
+    if (shipped == null || (shipped._1 ne sc)) shipped = (sc, sc.broadcast(idx))
+    shipped._2
+  }
+
+  /** Id of the index broadcast this model holds now, if any. */
+  private[vamana] def broadcastId: Option[Long] = synchronized(Option(shipped).map(_._2.id))
+
+  /** Release any cached state the model holds: a distributed model's
+    * resident fanout shard kernels, which its frames are also read from,
+    * and a local model's index broadcast. The broadcast is unpersisted,
+    * not destroyed: executors drop their copies, frames already returned
+    * still collect (executors fetch the index again), and the next search
+    * broadcasts anew. */
+  def unpersist(): Unit = {
+    fanoutOpt.foreach(_.unpersist())
+    synchronized {
+      if (shipped != null) {
+        if (!shipped._1.isStopped) shipped._2.unpersist()
+        shipped = null
+      }
+    }
+  }
 
   /** Incremental insert (FreshDiskANN semantics — the reference can only
     * rebuild): returns a NEW model containing the batch; this model keeps
@@ -725,9 +752,11 @@ final class VamanaModel private (
     "model exceeds maxLocalPoints and was never collected to the driver; " +
       "serve via search() (fanout) or save() the frames"))
 
-  /** Batch ANN top-k: broadcast the index, search per query partition-local —
-    * no shuffle at all; output shape matches [[graft.operators.Knn.knnExact]]
-    * so recall joins line up. Distributed models route to fanout serving. */
+  /** Batch ANN top-k: search per query partition-local against the index,
+    * broadcast once per model and reused by every later call and search
+    * form until [[unpersist]] — no shuffle at all; output shape matches
+    * [[graft.operators.Knn.knnExact]] so recall joins line up. Distributed
+    * models route to fanout serving. */
   def search(
       queries: DataFrame,
       k: Int,
@@ -737,7 +766,7 @@ final class VamanaModel private (
     case Some(idx) =>
       val spark = queries.sparkSession
       import spark.implicits._
-      val bc = spark.sparkContext.broadcast(idx)
+      val bc = broadcastIndex(spark, idx)
       queries
         .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
         .as[(Long, Array[Float])]
@@ -772,7 +801,7 @@ final class VamanaModel private (
       "searchStats reads the broadcast kernel; distributed models report per shard"))
     val spark = queries.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(idx)
+    val bc = broadcastIndex(spark, idx)
     val bo = beamOverride
     queries
       .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
@@ -803,7 +832,7 @@ final class VamanaModel private (
       require(idx.params.metric == "l2", "range radius is a squared-L2 bound; fit with metric=l2")
       val spark = queries.sparkSession
       import spark.implicits._
-      val bc = spark.sparkContext.broadcast(idx)
+      val bc = broadcastIndex(spark, idx)
       val r = radiusSq.toFloat
       queries
         .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
@@ -829,7 +858,7 @@ final class VamanaModel private (
     case Some(idx) =>
       val spark = queries.sparkSession
       import spark.implicits._
-      val bc = spark.sparkContext.broadcast(idx)
+      val bc = broadcastIndex(spark, idx)
       queries
         .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"),
           col(startVecCol).cast("array<float>"))

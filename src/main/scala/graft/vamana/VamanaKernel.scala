@@ -96,10 +96,12 @@ final class LocalIndex(
 
 /** The Vamana kernel: plain Scala, no Spark dependency, heavily
   * unit-tested. One beam walk, one top-k step, one prune rule and one
-  * back-edge step serve every build, update and search entry point. The
-  * distributed build ([[VamanaIndexer]]) runs it per shard inside
-  * `mapPartitions`; the serving path broadcasts a [[LocalIndex]] and runs
-  * [[search]] per query.
+  * back-edge step serve every build, update and search entry point; their
+  * bookkeeping (visited marks, beam, pool, heap, sort keys) lives in
+  * primitive arrays reused per thread, so a search allocates little more
+  * than its answer. The distributed build ([[VamanaIndexer]]) runs it per
+  * shard inside `mapPartitions`; a broadcast [[VamanaModel]] ships its
+  * [[LocalIndex]] once and runs [[search]] per query against it.
   *
   * Algorithm follows the reference semantics (SURVEY.md §2a G1-G4, Q1):
   * random R-regular init graph, two passes (alpha=1 then alpha=user) of
@@ -194,8 +196,12 @@ object VamanaKernel {
       graph: Array[Array[Int]],
       start: Int,
       query: Array[Float],
-      beamL: Int): (Array[Int], Array[Float], Long) =
-    walk(graph, start, beamL, node => l2sq(points(node), query))
+      beamL: Int): (Array[Int], Array[Float], Long) = {
+    val s = scratch.get()
+    walk(graph, start, beamL, node => l2sq(points(node), query), s)
+    val (ids, dists) = s.poolCopy
+    (ids, dists, s.comps)
+  }
 
   /** [[greedySearch]] with a PLUGGABLE node score — the traversal
     * skeleton the DiskANN disk design needs: beam ordering and eviction run
@@ -211,19 +217,149 @@ object VamanaKernel {
       graph: Array[Array[Int]],
       start: Int,
       beamL: Int): (Array[Int], Array[Float]) = {
-    val (ids, dists, _) = walk(graph, start, beamL, score)
-    (ids, dists)
+    val s = scratch.get()
+    walk(graph, start, beamL, score, s)
+    s.poolCopy
   }
 
-  /** The one beam walk behind every search, build and update step. Returns
-    * the visited pool (ids, scores) in expansion order and the number of
-    * nodes scored. */
+  /** Per-thread working memory of the walk, the top-k step and the prune,
+    * reused from call to call so that a query allocates little more than
+    * its answer. Arrays grow to the largest index the thread has walked and
+    * serve smaller ones unchanged. The walk fills the beam and the pool,
+    * the top-k step uses `heap`, the prune its own buffers and `setMarks`,
+    * so a prune over the pool the walk just left reads it intact. */
+  private[vamana] final class Scratch {
+    /** Nodes the walk has scored. */
+    val walkMarks = new Marks
+    /** Dedup marks of the prune and of the candidate lists of delete and merge. */
+    val setMarks = new Marks
+    // the beam: slots ascending by (dist, node), `done` = expanded
+    var beamIds = new Array[Int](0)
+    var beamDists = new Array[Float](0)
+    var beamDone = new Array[Boolean](0)
+    var beamSize = 0
+    /** Every beam slot below it is expanded. */
+    var cursor = 0
+    // the visited pool, in expansion order
+    var poolIds = new Array[Int](256)
+    var poolDists = new Array[Float](256)
+    var poolLen = 0
+    var comps = 0L
+    var heap = new Array[Int](0)
+    // prune buffers
+    var keys = new Array[Long](0)
+    var candIds = new Array[Int](0)
+    var candDists = new Array[Float](0)
+    var alive = new Array[Boolean](0)
+    var out = new Array[Int](0)
+    // candidate lists of delete and the back-edge step, with their distances
+    var listIds = new Array[Int](0)
+    var listDists = new Array[Float](0)
+    var listLen = 0
+
+    def startBeam(beamL: Int): Unit = {
+      if (beamIds.length < beamL) {
+        beamIds = new Array[Int](beamL); beamDists = new Array[Float](beamL); beamDone = new Array[Boolean](beamL)
+      }
+      beamSize = 0
+      cursor = 0
+    }
+
+    /** Inserts (node, dist) in order unless the beam is full and it ranks
+      * last; the slots it passes shift one right and the last falls off. */
+    def beamInsert(node: Int, dist: Float, beamL: Int): Unit = {
+      if (beamSize == beamL && dist >= beamDists(beamSize - 1)) return
+      var lo = 0
+      var hi = beamSize
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (beamDists(mid) < dist || (beamDists(mid) == dist && beamIds(mid) < node)) lo = mid + 1
+        else hi = mid
+      }
+      val moved = math.min(beamSize, beamL - 1) - lo
+      if (moved > 0) {
+        System.arraycopy(beamIds, lo, beamIds, lo + 1, moved)
+        System.arraycopy(beamDists, lo, beamDists, lo + 1, moved)
+        System.arraycopy(beamDone, lo, beamDone, lo + 1, moved)
+      }
+      beamIds(lo) = node; beamDists(lo) = dist; beamDone(lo) = false
+      if (beamSize < beamL) beamSize += 1
+      if (lo < cursor) cursor = lo
+    }
+
+    def poolAdd(node: Int, dist: Float): Unit = {
+      if (poolLen == poolIds.length) {
+        poolIds = java.util.Arrays.copyOf(poolIds, poolLen * 2)
+        poolDists = java.util.Arrays.copyOf(poolDists, poolLen * 2)
+      }
+      poolIds(poolLen) = node; poolDists(poolLen) = dist; poolLen += 1
+    }
+
+    def poolCopy: (Array[Int], Array[Float]) =
+      (java.util.Arrays.copyOf(poolIds, poolLen), java.util.Arrays.copyOf(poolDists, poolLen))
+
+    /** Empties the candidate list and makes room for `m` entries. */
+    def startList(m: Int): Unit = {
+      if (listIds.length < m) { listIds = new Array[Int](m); listDists = new Array[Float](m) }
+      listLen = 0
+    }
+
+    def listAdd(node: Int, dist: Float): Unit = {
+      if (listLen == listIds.length) {
+        listIds = java.util.Arrays.copyOf(listIds, math.max(16, listLen * 2))
+        listDists = java.util.Arrays.copyOf(listDists, listIds.length)
+      }
+      listIds(listLen) = node; listDists(listLen) = dist; listLen += 1
+    }
+
+    def heapOf(m: Int): Array[Int] = { if (heap.length < m) heap = new Array[Int](m); heap }
+
+    def pruneBuffers(m: Int, r: Int): Unit = {
+      if (keys.length < m) {
+        keys = new Array[Long](m); candIds = new Array[Int](m)
+        candDists = new Array[Float](m); alive = new Array[Boolean](m)
+      }
+      if (out.length < r) out = new Array[Int](r)
+    }
+  }
+
+  /** A set of non-negative ints below a bound, cleared in O(1) (hnswlib's
+    * visited list): `i` is in the set when `stamp(i) == epoch`, so [[reset]]
+    * only bumps the epoch. When the epoch reaches Int.MaxValue the stamps
+    * are zeroed once and it restarts at 1. */
+  private[vamana] final class Marks {
+    private var stamp = new Array[Int](0)
+    private[vamana] var epoch = 0
+
+    /** Empties the set for members below `n`. */
+    def reset(n: Int): Unit = {
+      if (stamp.length < n) stamp = new Array[Int](n)
+      if (epoch == Int.MaxValue) { java.util.Arrays.fill(stamp, 0); epoch = 0 }
+      epoch += 1
+    }
+
+    /** Adds `i`; false when it was already in the set. */
+    def add(i: Int): Boolean =
+      if (stamp(i) == epoch) false else { stamp(i) = epoch; true }
+  }
+
+  private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
+
+  /** This thread's scratch, for specs that drive its epochs. */
+  private[vamana] def threadScratch: Scratch = scratch.get()
+
+  /** The one beam walk behind every search, build and update step. Leaves
+    * the visited pool (ids, scores) in expansion order in `s.poolIds` /
+    * `s.poolDists` (`s.poolLen` long) and the number of nodes scored in
+    * `s.comps`. `score` must not call back into the kernel on this thread. */
   private def walk(
       graph: Array[Array[Int]],
       start: Int,
       beamL: Int,
-      score: Int => Float): (Array[Int], Array[Float], Long) = {
+      score: Int => Float,
+      s: Scratch): Unit = {
     val n = graph.length
+    s.poolLen = 0
     // FULL-BEAM regime (beamL >= n): the beam can never evict, so graph
     // traversal would score every REACHABLE node at O(n) distance cost —
     // make it every node, period, at the same cost. This removes the
@@ -236,72 +372,43 @@ object VamanaKernel {
       // skip null slots: insert() searches mid-batch against a grown array
       // whose not-yet-filled tail is null (those slots are unreachable by
       // graph traversal too, so the regimes agree)
-      val ids = new mutable.ArrayBuffer[Int](n)
-      val dists = new mutable.ArrayBuffer[Float](n)
       var i = 0
       while (i < n) {
-        if (graph(i) != null) { ids += i; dists += score(i) }
+        if (graph(i) != null) s.poolAdd(i, score(i))
         i += 1
       }
-      return (ids.toArray, dists.toArray, ids.length.toLong)
+      s.comps = s.poolLen
+      return
     }
-    // beam: fixed-size sorted arrays of (dist, node), ascending by dist
-    val beamIds = new Array[Int](beamL + 1)
-    val beamDists = new Array[Float](beamL + 1)
-    var beamSize = 0
-    val inBeamVisited = new Array[Boolean](beamL + 1) // parallel to beam slots
-    val seen = new java.util.HashSet[Integer](beamL * 4)
-    val poolIds = new mutable.ArrayBuffer[Int](beamL * 4)
-    val poolDists = new mutable.ArrayBuffer[Float](beamL * 4)
-
-    def beamInsert(node: Int, dist: Float): Unit = {
-      if (beamSize == beamL && dist >= beamDists(beamSize - 1)) return
-      var lo = 0
-      var hi = beamSize
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (beamDists(mid) < dist || (beamDists(mid) == dist && beamIds(mid) < node)) lo = mid + 1
-        else hi = mid
-      }
-      var k = math.min(beamSize, beamL - 1)
-      while (k > lo) {
-        beamIds(k) = beamIds(k - 1); beamDists(k) = beamDists(k - 1); inBeamVisited(k) = inBeamVisited(k - 1)
-        k -= 1
-      }
-      beamIds(lo) = node; beamDists(lo) = dist; inBeamVisited(lo) = false
-      if (beamSize < beamL) beamSize += 1
-    }
-
+    val seen = s.walkMarks
+    seen.reset(n)
+    s.startBeam(beamL)
     seen.add(start)
-    beamInsert(start, score(start))
-    var done = false
-    while (!done) {
+    var comps = 1L
+    s.beamInsert(start, score(start), beamL)
+    val done = s.beamDone
+    while ({
+      while (s.cursor < s.beamSize && done(s.cursor)) s.cursor += 1
+      s.cursor < s.beamSize
+    }) {
       // nearest unvisited beam entry
-      var idx = -1
-      var i = 0
-      while (idx < 0 && i < beamSize) {
-        if (!inBeamVisited(i)) idx = i
-        i += 1
-      }
-      if (idx < 0) done = true
-      else {
-        inBeamVisited(idx) = true
-        val node = beamIds(idx)
-        poolIds += node
-        poolDists += beamDists(idx)
-        val nbrs = graph(node)
-        var j = 0
-        while (j < nbrs.length) {
-          val nb = nbrs(j)
-          if (nb >= 0 && nb < n && !seen.contains(nb)) {
-            seen.add(nb)
-            beamInsert(nb, score(nb))
-          }
-          j += 1
+      val idx = s.cursor
+      done(idx) = true
+      s.cursor = idx + 1
+      val node = s.beamIds(idx)
+      s.poolAdd(node, s.beamDists(idx))
+      val nbrs = graph(node)
+      var j = 0
+      while (j < nbrs.length) {
+        val nb = nbrs(j)
+        if (nb >= 0 && nb < n && seen.add(nb)) {
+          comps += 1
+          s.beamInsert(nb, score(nb), beamL)
         }
+        j += 1
       }
     }
-    (poolIds.toArray, poolDists.toArray, seen.size.toLong)
+    s.comps = comps
   }
 
   /** Robust prune (G3, vamana.h:722-760). Candidates are (internal id, dist
@@ -323,38 +430,65 @@ object VamanaKernel {
       candDists: Array[Float],
       alpha: Float,
       r: Int,
-      paperPrune: Boolean): Array[Int] = {
-    // dedup + drop self, sort by (dist, id)
-    val order = candIds.indices.toArray.sortBy(i => (candDists(i), candIds(i)))
-    val seen = new mutable.HashSet[Int]
-    val ids = new mutable.ArrayBuffer[Int](order.length)
-    val dists = new mutable.ArrayBuffer[Float](order.length)
-    for (i <- order) {
-      val c = candIds(i)
-      if (c != p && !seen.contains(c)) { seen += c; ids += c; dists += candDists(i) }
+      paperPrune: Boolean): Array[Int] =
+    prune(points, p, candIds, candDists, candIds.length, alpha, r, paperPrune, scratch.get())
+
+  /** [[robustPrune]] over the first `m` candidates. */
+  private def prune(points: Array[Array[Float]], p: Int, candIds: Array[Int], candDists: Array[Float],
+      m: Int, alpha: Float, r: Int, paperPrune: Boolean, s: Scratch): Array[Int] = {
+    // sort by (dist, id): a long whose high half orders as
+    // java.lang.Float.compare orders the dist and whose low half is the id
+    s.pruneBuffers(m, math.max(r, 1))
+    val keys = s.keys
+    var i = 0
+    while (i < m) {
+      keys(i) = (orderBits(java.lang.Float.floatToIntBits(candDists(i))).toLong << 32) |
+        (candIds(i) & 0xffffffffL)
+      i += 1
     }
-    if (ids.isEmpty) return Array.empty
-    val out = new mutable.ArrayBuffer[Int](r)
+    java.util.Arrays.sort(keys, 0, m)
+    // dedup (first = nearest copy) + drop self
+    val seen = s.setMarks
+    seen.reset(points.length)
+    val ids = s.candIds
+    val dists = s.candDists
+    var cnt = 0
+    i = 0
+    while (i < m) {
+      val c = keys(i).toInt
+      if (c != p && seen.add(c)) {
+        ids(cnt) = c
+        dists(cnt) = java.lang.Float.intBitsToFloat(orderBits((keys(i) >> 32).toInt))
+        cnt += 1
+      }
+      i += 1
+    }
+    if (cnt == 0) return Array.emptyIntArray
+    val out = s.out
+    var len = 0
     if (!paperPrune) {
       val pStar = ids(0)
-      out += pStar
+      out(0) = pStar
+      len = 1
       val pStarVec = points(pStar)
-      var i = 1
-      while (i < ids.length && out.length < r) {
+      i = 1
+      while (i < cnt && len < r) {
         val c = ids(i)
-        if (alpha * l2sq(pStarVec, points(c)) >= dists(i)) out += c
+        if (alpha * l2sq(pStarVec, points(c)) >= dists(i)) { out(len) = c; len += 1 }
         i += 1
       }
     } else {
-      val alive = Array.fill(ids.length)(true)
-      var i = 0
-      while (i < ids.length && out.length < r) {
+      val alive = s.alive
+      java.util.Arrays.fill(alive, 0, cnt, true)
+      i = 0
+      while (i < cnt && len < r) {
         if (alive(i)) {
           val added = ids(i)
-          out += added
+          out(len) = added
+          len += 1
           val addedVec = points(added)
           var j = i + 1
-          while (j < ids.length) {
+          while (j < cnt) {
             if (alive(j) && alpha * l2sq(addedVec, points(ids(j))) <= dists(j)) alive(j) = false
             j += 1
           }
@@ -362,8 +496,13 @@ object VamanaKernel {
         i += 1
       }
     }
-    out.toArray
+    java.util.Arrays.copyOf(out, len)
   }
+
+  /** Maps a float's `floatToIntBits` to an int that orders as
+    * java.lang.Float.compare orders the floats (-0.0 below 0.0, NaN above
+    * +Inf), and back: the map is its own inverse. */
+  private def orderBits(b: Int): Int = b ^ ((b >> 31) & 0x7fffffff)
 
   /** [[robustPrune]] over external-id candidates with inline vectors — used
     * by the distributed merge step, where the full point array isn't in
@@ -424,8 +563,10 @@ object VamanaKernel {
     try {
       def pass(alpha: Float): Unit = {
         def outList(node: Int): Array[Int] = {
-          val (poolIds, poolDists) = greedySearch(points, graph, medoid, points(node), params.beamWidth)
-          robustPrune(points, node, poolIds, poolDists, alpha, params.maxDegree, params.paperPrune)
+          val s = scratch.get()
+          val q = points(node)
+          walk(graph, medoid, params.beamWidth, c => l2sq(points(c), q), s)
+          prune(points, node, s.poolIds, s.poolDists, s.poolLen, alpha, params.maxDegree, params.paperPrune, s)
         }
         rng.shuffle((0 until n).toVector).grouped(BuildBatch).foreach { batch =>
           // BARRIER: all searches finish against the snapshot before any
@@ -439,9 +580,10 @@ object VamanaKernel {
               })).map(_.get())
           }
           // serial update in permutation order -> deterministic
+          val s = scratch.get()
           batch.lazyZip(outLists).foreach { (node, out) =>
             graph(node) = out
-            addBackEdges(points, graph, node, alpha, params)
+            addBackEdges(points, graph, node, alpha, params, s)
           }
         }
       }
@@ -456,17 +598,34 @@ object VamanaKernel {
     * that grows past R is robust-pruned at `alpha`. Lists are replaced,
     * never mutated, so copy-on-write callers keep their source graph. */
   private def addBackEdges(points: Array[Array[Float]], graph: Array[Array[Int]], node: Int,
-      alpha: Float, params: VamanaParams): Unit =
-    for (nb <- graph(node)) {
+      alpha: Float, params: VamanaParams, s: Scratch): Unit = {
+    val out = graph(node)
+    var i = 0
+    while (i < out.length) {
+      val nb = out(i)
       val cur = graph(nb)
-      if (!cur.contains(node)) {
-        val cand = cur :+ node
+      if (!contains(cur, node)) {
+        val cand = java.util.Arrays.copyOf(cur, cur.length + 1)
+        cand(cur.length) = node
         graph(nb) =
           if (cand.length <= params.maxDegree) cand
-          else robustPrune(points, nb, cand, cand.map(c => l2sq(points(nb), points(c))),
-            alpha, params.maxDegree, params.paperPrune)
+          else {
+            s.startList(cand.length)
+            val nbVec = points(nb)
+            var j = 0
+            while (j < cand.length) { s.listDists(j) = l2sq(nbVec, points(cand(j))); j += 1 }
+            prune(points, nb, cand, s.listDists, cand.length, alpha, params.maxDegree, params.paperPrune, s)
+          }
       }
+      i += 1
     }
+  }
+
+  private def contains(xs: Array[Int], x: Int): Boolean = {
+    var i = 0
+    while (i < xs.length && xs(i) != x) i += 1
+    i < xs.length
+  }
 
   /** FreshDiskANN-style incremental insert — ABSENT in the reference, which
     * can only rebuild from scratch (vamana.h has no add-point API): each new
@@ -492,19 +651,20 @@ object VamanaKernel {
     val points = java.util.Arrays.copyOf(index.points, n)
     val ids = java.util.Arrays.copyOf(index.ids, n)
     val graph = java.util.Arrays.copyOf(index.graph, n)
-    val existing = mutable.HashSet.from(index.ids)
+    val existing = LongSet.of(index.ids, newIds.length)
+    val s = scratch.get()
     var i = 0
     while (i < newIds.length) {
       val pos = n0 + i
       require(existing.add(newIds(i)), s"id ${newIds(i)} already indexed")
-      points(pos) = newPoints(i)
+      val q = newPoints(i)
+      points(pos) = q
       ids(pos) = newIds(i)
       graph(pos) = Array.empty
       // pool from the CURRENT graph — later inserts see earlier ones
-      val (poolIds, poolDists) =
-        greedySearch(points, graph, index.medoid, newPoints(i), math.max(p.beamWidth, p.efSearch))
-      graph(pos) = robustPrune(points, pos, poolIds, poolDists, p.alpha, p.maxDegree, p.paperPrune)
-      addBackEdges(points, graph, pos, p.alpha, p)
+      walk(graph, index.medoid, math.max(p.beamWidth, p.efSearch), c => l2sq(points(c), q), s)
+      graph(pos) = prune(points, pos, s.poolIds, s.poolDists, s.poolLen, p.alpha, p.maxDegree, p.paperPrune, s)
+      addBackEdges(points, graph, pos, p.alpha, p, s)
       i += 1
     }
     new LocalIndex(ids, points, graph, index.medoid, p)
@@ -546,7 +706,7 @@ object VamanaKernel {
     val points = java.util.Arrays.copyOf(a.points, n)
     val ids = java.util.Arrays.copyOf(a.ids, n)
     val graph = java.util.Arrays.copyOf(a.graph, n)
-    val existing = mutable.HashSet.from(a.ids)
+    val existing = LongSet.of(a.ids, b.size)
     var i = 0
     while (i < b.size) {
       require(existing.add(b.ids(i)), s"id ${b.ids(i)} is indexed on both sides")
@@ -555,22 +715,25 @@ object VamanaKernel {
       graph(n0 + i) = Array.empty
       i += 1
     }
+    val s = scratch.get()
     i = 0
     while (i < b.size) {
       val pos = n0 + i
-      val (poolIds, poolDists) =
-        greedySearch(points, graph, a.medoid, b.points(i), math.max(p.beamWidth, p.efSearch))
-      val inPool = new java.util.HashSet[Integer](poolIds.length * 2)
-      poolIds.foreach(c => inPool.add(c))
+      val q = b.points(i)
+      walk(graph, a.medoid, math.max(p.beamWidth, p.efSearch), c => l2sq(points(c), q), s)
       // union the intra-side neighbor list AND any back-edges earlier
       // smaller-side inserts already accumulated on this node (graph(pos));
-      // overwriting would silently discard that bidirectional structure
-      val carried = (b.graph(i).map(_ + n0) ++ graph(pos)).distinct
-        .filter(c => c != pos && !inPool.contains(c))
-      val candIds = poolIds ++ carried
-      val candDists = poolDists ++ carried.map(c => l2sq(b.points(i), points(c)))
-      graph(pos) = robustPrune(points, pos, candIds, candDists, p.alpha, p.maxDegree, p.paperPrune)
-      addBackEdges(points, graph, pos, p.alpha, p)
+      // overwriting would silently discard that bidirectional structure.
+      // Each carried node not in the pool joins it once.
+      val inPool = s.setMarks
+      inPool.reset(n)
+      var j = 0
+      while (j < s.poolLen) { inPool.add(s.poolIds(j)); j += 1 }
+      def carry(c: Int): Unit = if (c != pos && inPool.add(c)) s.poolAdd(c, l2sq(q, points(c)))
+      b.graph(i).foreach(c => carry(c + n0))
+      graph(pos).foreach(carry)
+      graph(pos) = prune(points, pos, s.poolIds, s.poolDists, s.poolLen, p.alpha, p.maxDegree, p.paperPrune, s)
+      addBackEdges(points, graph, pos, p.alpha, p, s)
       i += 1
     }
     new LocalIndex(ids, points, graph, a.medoid, p)
@@ -587,47 +750,67 @@ object VamanaKernel {
     * serving. Unknown ids are ignored; deleting every point is an error. */
   def delete(index: LocalIndex, deleteIds: Array[Long]): LocalIndex = {
     val p = index.params
-    val del = mutable.HashSet.from(deleteIds)
-    val delPos = new mutable.HashSet[Int]
+    val n = index.size
+    val del = LongSet.of(deleteIds, 0)
+    val gone = new Array[Boolean](n)
+    var nGone = 0
     var i = 0
-    while (i < index.size) {
-      if (del.contains(index.ids(i))) delPos += i
+    while (i < n) {
+      if (del.contains(index.ids(i))) { gone(i) = true; nGone += 1 }
       i += 1
     }
-    if (delPos.isEmpty) return index
-    require(delPos.size < index.size, "cannot delete every point")
+    if (nGone == 0) return index
+    require(nGone < n, "cannot delete every point")
     // repair surviving nodes that point into the hole
-    val repaired = new Array[Array[Int]](index.size)
+    val s = scratch.get()
+    val repaired = new Array[Array[Int]](n)
     i = 0
-    while (i < index.size) {
-      if (!delPos.contains(i)) {
+    while (i < n) {
+      if (!gone(i)) {
         val nbrs = index.graph(i)
-        if (nbrs.exists(delPos.contains)) {
-          val cand = new mutable.ArrayBuffer[Int](nbrs.length * 2)
-          for (nb <- nbrs) {
-            if (!delPos.contains(nb)) cand += nb
-            else for (nn <- index.graph(nb) if !delPos.contains(nn) && nn != i) cand += nn
+        if (nbrs.exists(nb => gone(nb))) {
+          // distinct candidates: surviving neighbors, then the surviving
+          // neighbors of deleted ones
+          val inList = s.setMarks
+          inList.reset(n)
+          val pVec = index.points(i)
+          s.startList(0)
+          var j = 0
+          while (j < nbrs.length) {
+            val nb = nbrs(j)
+            if (!gone(nb)) {
+              if (inList.add(nb)) s.listAdd(nb, l2sq(pVec, index.points(nb)))
+            } else {
+              val second = index.graph(nb)
+              var t = 0
+              while (t < second.length) {
+                val nn = second(t)
+                if (!gone(nn) && nn != i && inList.add(nn)) s.listAdd(nn, l2sq(pVec, index.points(nn)))
+                t += 1
+              }
+            }
+            j += 1
           }
-          val candArr = cand.distinct.toArray
-          repaired(i) = robustPrune(index.points, i, candArr,
-            candArr.map(c => l2sq(index.points(i), index.points(c))),
-            p.alpha, p.maxDegree, p.paperPrune)
+          repaired(i) = prune(index.points, i, s.listIds, s.listDists, s.listLen,
+            p.alpha, p.maxDegree, p.paperPrune, s)
         } else repaired(i) = nbrs
       }
       i += 1
     }
     // compact + remap to new positions
-    val keep = (0 until index.size).filterNot(delPos.contains).toArray
-    val newPos = new Array[Int](index.size)
-    java.util.Arrays.fill(newPos, -1)
-    keep.zipWithIndex.foreach { case (old, nw) => newPos(old) = nw }
-    val ids = keep.map(index.ids)
-    val points = keep.map(index.points)
-    val graph = keep.map(old => repaired(old).collect {
-      case nb if newPos(nb) >= 0 => newPos(nb)
-    })
+    val newPos = new Array[Int](n)
+    val keep = new Array[Int](n - nGone)
+    var m = 0
+    i = 0
+    while (i < n) {
+      if (gone(i)) newPos(i) = -1 else { newPos(i) = m; keep(m) = i; m += 1 }
+      i += 1
+    }
+    val ids = keep.map(old => index.ids(old))
+    val points = keep.map(old => index.points(old))
+    val graph = keep.map(old => repaired(old).filter(nb => !gone(nb)).map(nb => newPos(nb)))
     val medoid =
-      if (delPos.contains(index.medoid)) centroidMedoid(points)
+      if (gone(index.medoid)) centroidMedoid(points)
       else newPos(index.medoid)
     new LocalIndex(ids, points, graph, medoid, p)
   }
@@ -694,8 +877,10 @@ object VamanaKernel {
     var done = false
     while (!done) {
       val atCap = beam >= index.size
-      val (poolIds, poolDists) = greedySearch(index.points, index.graph, index.medoid, query, beam)
-      res = topK(index, poolIds, poolDists, poolIds.length, i => poolDists(i) <= radiusSq)
+      val s = scratch.get()
+      walk(index.graph, index.medoid, beam, c => l2sq(index.points(c), query), s)
+      val dists = s.poolDists
+      res = topK(index, s.poolIds, dists, s.poolLen, s.poolLen, i => dists(i) <= radiusSq, s)
       if (res.length == prevCount || atCap) done = true
       else { prevCount = res.length; beam = math.min(index.size, beam * 2) }
     }
@@ -711,20 +896,126 @@ object VamanaKernel {
     val kk = math.min(k, index.size)                    // clamp k<=n (vamana.h:498)
     val beamL = math.max(                               // ef>=k clamp (vamana.h:502-503)
       if (beamOverride > 0) beamOverride else index.params.efSearch, kk)
-    val (poolIds, poolDists, comps) = greedySearchCounted(index.points, index.graph, start, query, beamL)
-    (topK(index, poolIds, poolDists, kk, i => allowed(index.ids(poolIds(i)))), poolIds.length.toLong, comps)
+    val s = scratch.get()
+    walk(index.graph, start, beamL, c => l2sq(index.points(c), query), s)
+    (poolTopK(index, kk, allowed, s), s.poolLen.toLong, s.comps)
   }
 
-  /** The one top-k step every search path ends in: the pool slots `i` that
-    * pass `accept(i)`, ascending by (dist, external id), the first `k`, as
-    * (external id, dist). */
-  private[vamana] def topK(index: LocalIndex, poolIds: Array[Int], poolDists: Array[Float], k: Int,
-      accept: Int => Boolean): Array[(Long, Float)] =
-    poolIds.indices.toArray
-      .filter(accept)
-      .sortBy(i => (poolDists(i), index.ids(poolIds(i))))
-      .take(k)
-      .map(i => (index.ids(poolIds(i)), poolDists(i)))
+  /** The walk with a node score (e.g. PQ's ADC lookup) from the medoid,
+    * the visited pool re-scored with exact distances to `query`, then the
+    * top-k step over the allowed ids — the per-index body of every PQ
+    * search path. */
+  private[vamana] def rerankTopK(index: LocalIndex, score: Int => Float, beamL: Int,
+      query: Array[Float], k: Int, allowed: Long => Boolean): Array[(Long, Float)] = {
+    val s = scratch.get()
+    walk(index.graph, index.medoid, beamL, score, s)
+    var i = 0
+    while (i < s.poolLen) { s.poolDists(i) = l2sq(index.points(s.poolIds(i)), query); i += 1 }
+    poolTopK(index, k, allowed, s)
+  }
+
+  private def poolTopK(index: LocalIndex, k: Int, allowed: Long => Boolean, s: Scratch): Array[(Long, Float)] = {
+    val pool = s.poolIds
+    val ids = index.ids
+    topK(index, pool, s.poolDists, s.poolLen, k, i => allowed(ids(pool(i))), s)
+  }
+
+  /** The one top-k step every search path ends in: of the first `len` pool
+    * slots, those that pass `accept(i)`, the `k` least by (dist, external
+    * id) — dists compared as java.lang.Float.compare does, and equal keys
+    * kept in pool order — ascending, as (external id, dist). One bounded
+    * max-heap of slot indices serves every k, up to the whole pool (range
+    * search, full-beam gates). */
+  private def topK(index: LocalIndex, poolIds: Array[Int], poolDists: Array[Float], len: Int,
+      k: Int, accept: Int => Boolean, s: Scratch): Array[(Long, Float)] = {
+    if (k <= 0 || len == 0) return Array.empty
+    val ext = index.ids
+    // slot a ranks after slot b
+    def after(a: Int, b: Int): Boolean = {
+      val c = java.lang.Float.compare(poolDists(a), poolDists(b))
+      if (c != 0) c > 0
+      else {
+        val ea = ext(poolIds(a))
+        val eb = ext(poolIds(b))
+        if (ea != eb) ea > eb else a > b
+      }
+    }
+    val heap = s.heapOf(math.min(k, len))
+    // put x at the root of heap(0 until size) and sift it down
+    def siftDown(x: Int, size: Int): Unit = {
+      var at = 0
+      var child = 1
+      while (child < size) {
+        if (child + 1 < size && after(heap(child + 1), heap(child))) child += 1
+        if (after(heap(child), x)) { heap(at) = heap(child); at = child; child = 2 * at + 1 }
+        else child = size
+      }
+      heap(at) = x
+    }
+    var size = 0
+    var i = 0
+    while (i < len) {
+      if (accept(i)) {
+        if (size < k) {
+          var at = size
+          size += 1
+          while (at > 0 && after(i, heap((at - 1) >>> 1))) { heap(at) = heap((at - 1) >>> 1); at = (at - 1) >>> 1 }
+          heap(at) = i
+        } else if (after(heap(0), i)) siftDown(i, size)
+      }
+      i += 1
+    }
+    val res = new Array[(Long, Float)](size)
+    while (size > 0) {
+      val top = heap(0)
+      size -= 1
+      res(size) = (ext(poolIds(top)), poolDists(top))
+      if (size > 0) siftDown(heap(size), size)
+    }
+    res
+  }
+
+  /** Open-addressing set of longs, for the id checks of insert, merge and
+    * delete. */
+  private final class LongSet(capacity: Int) {
+    private val slots = {
+      var c = 16
+      while (c < capacity * 2) c <<= 1
+      c
+    }
+    private val keys = new Array[Long](slots)
+    private val used = new Array[Boolean](slots)
+    private var size = 0
+
+    private def slotOf(x: Long): Int = {
+      var h = ((x * 0x9E3779B97F4A7C15L) >>> 32).toInt & (slots - 1)
+      while (used(h) && keys(h) != x) h = (h + 1) & (slots - 1)
+      h
+    }
+
+    def contains(x: Long): Boolean = used(slotOf(x))
+
+    /** Adds `x`; false when it was already in the set. */
+    def add(x: Long): Boolean = {
+      val h = slotOf(x)
+      if (used(h)) false
+      else {
+        require(size < slots / 2, "LongSet is full")
+        keys(h) = x; used(h) = true; size += 1
+        true
+      }
+    }
+  }
+
+  private object LongSet {
+    /** The set of `xs`, with room for `more` further adds. */
+    def of(xs: Array[Long], more: Int): LongSet = {
+      val set = new LongSet(xs.length + more)
+      var i = 0
+      while (i < xs.length) { set.add(xs(i)); i += 1 }
+      set
+    }
+  }
 
   /** Degree invariant over ALL nodes (fixes the reference's dead 10-node
     * healthCheck, vamana.h:705-720). */

@@ -108,14 +108,13 @@ object VamanaPq {
 
   /** ADC traversal over one index (the broadcast index or one shard),
     * exact rerank of the visited pool, then the kernel's top-k step over
-    * the allowed ids — the per-index body of every PQ search path. */
+    * the allowed ids ([[VamanaKernel.rerankTopK]]) — the per-index body of
+    * every PQ search path. */
   private def rerankTopK(idx: LocalIndex, score: Int => Float, qv: Array[Float], k: Int,
       fullBeam: Boolean, allowed: Long => Boolean): Array[(Long, Float)] = {
     val kk = math.min(k, idx.size)
     val beamL = if (fullBeam) idx.size else math.max(idx.params.efSearch, kk)
-    val (poolIds, _) = VamanaKernel.greedySearchScored(score, idx.graph, idx.medoid, beamL)
-    val exact = poolIds.map(p => VamanaKernel.l2sq(idx.points(p), qv))
-    VamanaKernel.topK(idx, poolIds, exact, kk, i => allowed(idx.ids(poolIds(i))))
+    VamanaKernel.rerankTopK(idx, score, beamL, qv, kk, allowed)
   }
 
   /** One shard's top-k for one query: ADC scores over the shard's m-byte

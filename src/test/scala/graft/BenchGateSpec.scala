@@ -125,4 +125,28 @@ class BenchGateSpec extends AnyFunSuite {
       Seq("substring_dedup" -> 5.9898, "winnow_overlap" -> 3.7426))
     assert(flagged.map(_._1) == Seq("substring_dedup", "winnow_overlap"))
   }
+
+  test("a query that throws is reported failed, not timed") {
+    var calls = 0
+    val boom = Bench.timeMedian(3) { () =>
+      calls += 1
+      throw new IllegalStateException("query failed on purpose")
+    }
+    assert(boom == Left("java.lang.IllegalStateException: query failed on purpose"))
+    assert(calls == 1, "the failing warm-up ends the query")
+    // a failure in a later timed run fails the query too
+    var n = 0
+    assert(Bench.timeMedian(3) { () => n += 1; if (n == 3) sys.error("third run") }.isLeft)
+    val ok = Bench.timeMedian(3)(() => Thread.sleep(2))
+    assert(ok.exists(_ >= 0.002))
+    assert(Bench.jsonStrings(Seq("q\"1" -> "java.lang.RuntimeException: a\\b\nc")) ==
+      "{\"q\\\"1\":\"java.lang.RuntimeException: a\\\\b\\u000ac\"}")
+  }
+
+  test("only a run on every host CPU writes the unsuffixed BENCH_FULL.json") {
+    assert(Bench.outputPaths("/r/BENCH_FULL.json", "32", 32) ==
+      Seq("/r/BENCH_FULL.json", "/r/BENCH_FULL_c32.json"))
+    assert(Bench.outputPaths("/r/BENCH_FULL.json", "8", 32) == Seq("/r/BENCH_FULL_c8.json"))
+    assert(Bench.outputPaths("/r.d/out", "4", 4) == Seq("/r.d/out", "/r.d/out_c4"))
+  }
 }
