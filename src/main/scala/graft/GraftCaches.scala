@@ -1,38 +1,25 @@
 package graft
 
 /** One-call lifecycle surface for every per-dataset memo the engine keeps
-  * (cached tables, fitted ANN models, shingle/pair frames, function-registry
-  * memos). The memos make repeated queries over one dataset cheap, but a
-  * long-lived service that cycles through MANY datasets — or stops and
-  * recreates sessions — should call [[clearAll]] between datasets so cached
-  * frames are unpersisted and stopped sessions become collectable.
+  * (cached tables, fitted ANN models, shingle/pair frames, on-disk layouts,
+  * function-registry memos). The memos live in [[core.Memo]]'s registry;
+  * they make repeated queries over one dataset cheap, but a long-lived
+  * service that cycles through MANY datasets — or stops and recreates
+  * sessions — should call [[clearAll]] between datasets so cached frames
+  * are unpersisted and stopped sessions become collectable.
   */
 object GraftCaches {
 
-  /** Evict every session-scoped OPERATOR memo (pair frames, thumbnails,
-    * fitted models, term counts, winnow/PQ indexes) while keeping the base
-    * table cache and function registrations. This is the bench-harness
-    * shape: between query families the JVM sheds the previous family's
-    * resident memos — which otherwise accumulate across 200+ queries and
-    * distort heavy queries' wall-clock charges (round-12 `embed_dim_cov`:
-    * 25.6 s charged vs 1.7 s isolated) — while the warmed input tables
-    * stay resident so per-query attribution is unchanged. Memos rebuild on
-    * demand; each query's untimed warm-up run absorbs that. */
-  def clearMemos(): Unit = {
-    operators.Dedup.clearCaches()
-    operators.CorpusPipeline.clearCaches()
-    operators.Multimodal.clearCaches()
-    operators.TextAnalysis.clearCaches()
-    operators.SparseRetrieval.clearCaches()
-    operators.Similarity.clearCaches()
-    operators.Clustering.clearCaches()
-    operators.DocClassifier.clearCaches()
-    operators.Formats.clearCaches()
-    operators.LangClassifier.clearCaches()
-    vamana.VamanaOps.clearCaches()
-    vamana.VamanaPq.clearCaches()
-    streaming.StreamingOps.clearCaches()
-  }
+  /** Release every registered memo and pin ([[core.Memo.releaseAll]]) while
+    * keeping the base table cache and function registrations. This is the
+    * bench-harness shape: between query families the JVM sheds the previous
+    * family's resident memos — which otherwise accumulate across 200+
+    * queries and distort heavy queries' wall-clock charges (round-12
+    * `embed_dim_cov`: 25.6 s charged vs 1.7 s isolated) — while the warmed
+    * input tables stay resident so per-query attribution is unchanged.
+    * Memos rebuild on demand; each query's untimed warm-up run absorbs
+    * that. */
+  def clearMemos(): Unit = core.Memo.releaseAll()
 
   def clearAll(): Unit = {
     core.Tables.clearCache()

@@ -346,7 +346,7 @@ object ScaleBench {
         s""""n_required_min":${ledger.getLong(0)},"n_required_max":${ledger.getLong(1)},""" +
         s""""fetch_frac_avg":${math.rint(ledger.getDouble(2) * 1e6) / 1e6}}""")
       res.unpersist(); we.unpersist()
-      Similarity.clearCaches()
+      graft.core.Memo.release(Similarity)
     }
     spark.stop()
   }

@@ -38,12 +38,13 @@ object Tables {
   private val cacheableTables =
     Set("region", "nation", "customer", "supplier", "part", "documents", "embeddings")
 
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+  /** Made with `new`, outside [[Memo]]'s registry: the per-dataset memo
+    * sweep keeps the warmed base tables; only [[clearCache]] drops them. */
+  private val memo = new Memo[(SparkSession, String, String), DataFrame](_.unpersist())
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (cacheTables && cacheableTables.contains(name))
-      memo.getOrElseUpdate((spark, dir, name), load(spark, dir, name).cache())
+      memo((spark, dir, name))(load(spark, dir, name).cache())
     else load(spark, dir, name)
 
   /** Names of the tables the multi-query mains should pre-materialize before
@@ -53,10 +54,7 @@ object Tables {
   /** Unpersist and drop every memoized table — long-lived multi-dataset
     * drivers otherwise pin executor storage for the life of the JVM (and a
     * stopped session's frames would never be released). */
-  def clearCache(): Unit = {
-    for ((_, df) <- memo) scala.util.Try(df.unpersist())
-    memo.clear()
-  }
+  def clearCache(): Unit = memo.clear()
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

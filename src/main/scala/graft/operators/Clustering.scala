@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import graft.functions.NativeVectorFunctions.l2sqLongNative
 
 /** Distributed Lloyd's k-means over the embeddings table — the clustering
@@ -49,17 +49,13 @@ object Clustering {
   /** Memoized fitted centroid matrices per (session, dir, init, k, iters) —
     * six registered queries consume the same Lloyd fixpoint; without the
     * memo each refits it (five redundant corpus-scan loops per sweep).
-    * The matrix is k·dim longs, so the memo is driver-memory-trivial;
-    * cleared by [[clearCaches]] via [[graft.GraftCaches.clearAll]]. */
+    * The matrix is k·dim longs, so the memo is driver-memory-trivial. */
   private val fitCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String, Int, Int), Array[Array[Long]]]
+    Memo[(SparkSession, String, String, Int, Int), Array[Array[Long]]](this)
 
   private def cachedFit(spark: SparkSession, dir: String, init: String,
       k: Int, iters: Int)(build: => Array[Array[Long]]): Array[Array[Long]] =
-    fitCache.getOrElseUpdate((spark, dir, init, k, iters), build)
-
-  /** Lifecycle hook for [[graft.GraftCaches.clearAll]]. */
-  def clearCaches(): Unit = fitCache.clear()
+    fitCache((spark, dir, init, k, iters))(build)
 
   /** The best-centroid struct (d = exact long squared distance, c = cluster
     * id) for a quantized `q` column against broadcast centroid literals —

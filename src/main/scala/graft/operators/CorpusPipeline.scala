@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 
 /** Corpus-level pipeline operators (SURVEY.md §2b north star): reproducible
   * sampling and the composed clean-corpus selection a training-data pipeline
@@ -269,33 +269,22 @@ object CorpusPipeline {
     * in the main join (Catalyst does not share subtrees across jobs;
     * measured 4.7 s → ~half on the full bench). The cached frame is two
     * narrow columns (doc_id, lang), corpus-row-bounded — the lexTermCounts
-    * shape, not a corpus blow-up. Cleared by [[clearCaches]]. */
-  private val webSurvCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Per-invocation pinned RDDs (packSequences' two-pass input) — tracked
-    * so [[clearCaches]] releases them, the Multimodal `pinned` pattern. */
-  private val pinnedRdds =
-    scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-
-  private def pinnedRdd[T](r: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] =
-    pinnedRdds.synchronized {
-      pinnedRdds += r
-      r.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    * shape, not a corpus blow-up. Released with the memos
+    * ([[graft.core.Memo]]). */
+  private val webSurvCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   /** Pinned pack-sequences inputs MEMOIZED by canonicalized input lineage
     * (the webSurvCache pattern): repeated packs of the same frame in one
     * session previously pinned a fresh MEMORY_AND_DISK copy per invocation
     * with no reuse — N bench iterations held N identical copies until
-    * family-end eviction. One pin per distinct input; [[clearCaches]]
-    * releases them with the rest of the memos. */
-  private val pinnedSortCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      org.apache.spark.rdd.RDD[(Long, Long)]]
+    * family-end eviction. One pin per distinct input, released with the
+    * rest of the memos. */
+  private val pinnedSortCache = Memo[
+    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
+    org.apache.spark.rdd.RDD[(Long, Long)]](this, _.unpersist(blocking = false))
 
   private[graft] def webCleanSurvivors(spark: SparkSession, dir: String): DataFrame =
-    webSurvCache.getOrElseUpdate((spark, dir), {
+    webSurvCache((spark, dir)) {
       val docs = Tables.documents(spark, dir)
       val urlKept = docs
         .select(col("doc_id"), canonicalizeUrl(syntheticUrl(col("doc_id"))).as("curl"))
@@ -306,20 +295,7 @@ object CorpusPipeline {
       docs.join(urlKept, "doc_id").join(clean, "doc_id")
         .select(col("doc_id"), col("lang"))
         .persist()
-    })
-
-  /** Unpersist + drop the per-dataset corpus-pipeline memos (the
-    * Dedup.clearCaches twin, reachable through
-    * [[graft.GraftCaches.clearMemos]]). */
-  def clearCaches(): Unit = {
-    for ((_, df) <- webSurvCache) scala.util.Try(df.unpersist())
-    webSurvCache.clear()
-    pinnedRdds.synchronized {
-      pinnedRdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-      pinnedRdds.clear()
     }
-    pinnedSortCache.clear()
-  }
 
   /** [[pipelineWeb]]'s final stage over a survivor frame: temperature
     * rates computed on the survivors, broadcast back, id-hash keep. */
@@ -621,13 +597,13 @@ object CorpusPipeline {
     // pass — without it the whole UPSTREAM (for pipeline_full: the
     // cleanCorpus scan + survivorship join + mixture filter) executes once
     // per pass. Two longs per surviving doc — the lexTermCounts size
-    // class; released by [[clearCaches]] (the Multimodal pinned pattern).
-    val sorted = pinnedSortCache.getOrElseUpdate(
-      (spark, toks.queryExecution.analyzed.canonicalized),
-      pinnedRdd(toks
+    // class; released with the memos.
+    val sorted = pinnedSortCache((spark, toks.queryExecution.analyzed.canonicalized))(
+      toks
         .repartitionByRange(parts, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
-        .as[(Long, Long)].rdd))
+        .as[(Long, Long)].rdd
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val partTotals = sorted
       .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.map(_._2).sum)) }
       .collect().sortBy(_._1).map(_._2)

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import graft.functions.NativeVectorFunctions.{dotNative, normNative}
 
 /** Deduplication operators over the `documents` (text) and `embeddings`
@@ -44,11 +44,10 @@ object Dedup {
   /** doc_id + distinct-shingle array for all docs with >=3 tokens — cached
     * per (session, dir): five dedup queries share it, so the tokenize+
     * shingle pass runs once per dataset instead of once per query. */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val shingleCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   private def shingled(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrElseUpdate((spark, dir),
+    shingleCache((spark, dir))(
       Tables.documents(spark, dir)
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .where(size(col("toks")) >= 3)
@@ -60,11 +59,10 @@ object Dedup {
     * the minhash signatures both consume it, so the explode+md5 pass (the
     * dominant hash cost) runs once per dataset, and everything downstream
     * shuffles fixed-width longs. */
-  private val surrogateCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val surrogateCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   private def surrogates(spark: SparkSession, dir: String): DataFrame =
-    surrogateCache.getOrElseUpdate((spark, dir),
+    surrogateCache((spark, dir))(
       shingled(spark, dir)
         .select(col("doc_id"), explode(col("sh")).as("sstr"))
         .select(col("doc_id"),
@@ -102,14 +100,14 @@ object Dedup {
     * component graph from exactly these pairs), so it's cached per
     * (session, dir, threshold, maxDf) like the shingle frame. */
   private val ngramPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Double, Int), DataFrame]
+    Memo[(SparkSession, String, Double, Int), DataFrame](this, _.unpersist())
 
   def dedupNgramJaccard(spark: SparkSession, dir: String, threshold: Double = 0.2,
       maxDf: Int = DefaultMaxShingleDf): DataFrame =
-    ngramPairsCache.getOrElseUpdate((spark, dir, threshold, maxDf), {
+    ngramPairsCache((spark, dir, threshold, maxDf)) {
       val counts = shingled(spark, dir).select(col("doc_id"), size(col("sh")).as("n"))
       ngramJaccardPairsImpl(surrogates(spark, dir), counts, threshold, maxDf).cache()
-    })
+    }
 
   /** The same pair join over any (doc_id, sh: array<string>) frame — spec
     * surface for skew behavior. The join/aggregation key is a 60-bit md5
@@ -294,10 +292,10 @@ object Dedup {
     * + both count sides), so without the cache the tokenize+window+shingle
     * pass runs 4× per query (the same reasoning as [[shingled]]). */
   private val paraShingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
+    Memo[(SparkSession, String, Int), DataFrame](this, _.unpersist())
 
   private def paraShingled(spark: SparkSession, dir: String, paraTokens: Int): DataFrame =
-    paraShingleCache.getOrElseUpdate((spark, dir, paraTokens),
+    paraShingleCache((spark, dir, paraTokens))(
       Tables.documents(spark, dir)
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .select(col("doc_id"),
@@ -324,13 +322,13 @@ object Dedup {
     * (r18): [[dedupParagraph]] AND [[dedupParagraphSurvivors]] both
     * consume these pairs, and without the memo the paragraph explode +
     * md5 + pair join re-ran per query (twice per plan where the planner
-    * broadcasts the self-join's b side). Cleared by [[clearCaches]]. */
-  private val paraPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Double, Int, Int), DataFrame]
+    * broadcasts the self-join's b side). Released with the memos. */
+  private val paraPairsCache =
+    Memo[(SparkSession, String, Double, Int, Int), DataFrame](this, _.unpersist())
 
   private def paraPairs(spark: SparkSession, dir: String, threshold: Double,
       paraTokens: Int, maxDf: Int): DataFrame =
-    paraPairsCache.getOrElseUpdate((spark, dir, threshold, paraTokens, maxDf),
+    paraPairsCache((spark, dir, threshold, paraTokens, maxDf))(
       ngramJaccardPairs(paraShingled(spark, dir, paraTokens), threshold, maxDf)
         .cache())
 
@@ -453,13 +451,13 @@ object Dedup {
   def duplicatedWindowIndex(spark: SparkSession, dir: String, w: Int = 8): DataFrame =
     duplicatedWindowIndexOf(Tables.documents(spark, dir), w)
 
-  /** The collected standing index for the frozen-probe deployment —
-    * memoized per (session, dir, w) because it IS a standing asset
-    * (yesterday's offline build): without the memo every serving call
-    * would re-run the index build it exists to avoid. Cleared by
-    * [[clearCaches]]. */
+  /** The collected standing index for the frozen-probe deployment, or
+    * None when it exceeds the size budget — memoized per (session, dir, w,
+    * budget) because it IS a standing asset (yesterday's offline build):
+    * without the memo every serving call would re-run the index build it
+    * exists to avoid. */
   private val dupWindowSetCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), Array[Long]]
+    Memo[(SparkSession, String, Int, Int), Option[Array[Long]]](this)
 
   /** Default ceiling on the driver-collected frozen probe set: 5×10⁷
     * 60-bit surrogates ≈ 400 MB on the driver — the last size where a
@@ -473,24 +471,24 @@ object Dedup {
 
   /** Collect the index iff it fits under `maxSize`, in ONE job (take of
     * maxSize+1 rows — no separate count that would re-run the aggregate). */
-  private def tryCollectWindowSet(spark: SparkSession, dir: String, w: Int,
-      maxSize: Int): Option[Array[Long]] = {
-    val lim = math.min(maxSize.toLong + 1, Int.MaxValue.toLong).toInt
-    val rows = duplicatedWindowIndex(spark, dir, w).take(lim)
-    if (rows.length > maxSize) None else Some(rows.map(_.getLong(0)))
-  }
+  private def windowSetWithin(spark: SparkSession, dir: String, w: Int,
+      maxSize: Int): Option[Array[Long]] =
+    dupWindowSetCache((spark, dir, w, maxSize)) {
+      val lim = math.min(maxSize.toLong + 1, Int.MaxValue.toLong).toInt
+      val rows = duplicatedWindowIndex(spark, dir, w).take(lim)
+      if (rows.length > maxSize) None else Some(rows.map(_.getLong(0)))
+    }
 
   def duplicatedWindowSet(spark: SparkSession, dir: String, w: Int = 8,
       maxSize: Int = MaxFrozenSetSize): Array[Long] =
-    dupWindowSetCache.getOrElseUpdate((spark, dir, w),
-      tryCollectWindowSet(spark, dir, w, maxSize).getOrElse(throw new
-        IllegalArgumentException(
-          s"duplicatedWindowSet: the cross-doc duplicated-window index holds " +
-          s"more than maxSize=$maxSize surrogates — a driver-side frozen set " +
-          s"this large is a scale hazard. Use the distributed form " +
-          s"substringDedupFrozenJoinOf(docs, duplicatedWindowIndexOf(corpus, w), w) " +
-          s"(identical rows, index stays a DataFrame), or raise maxSize " +
-          s"deliberately if the driver genuinely has the memory.")))
+    windowSetWithin(spark, dir, w, maxSize).getOrElse(throw new
+      IllegalArgumentException(
+        s"duplicatedWindowSet: the cross-doc duplicated-window index holds " +
+        s"more than maxSize=$maxSize surrogates — a driver-side frozen set " +
+        s"this large is a scale hazard. Use the distributed form " +
+        s"substringDedupFrozenJoinOf(docs, duplicatedWindowIndexOf(corpus, w), w) " +
+        s"(identical rows, index stays a DataFrame), or raise maxSize " +
+        s"deliberately if the driver genuinely has the memory."))
 
   /** [[substringDedupFrozenOf]] with the standing index kept DISTRIBUTED —
     * the over-[[MaxFrozenSetSize]] deployment: explode today's docs'
@@ -530,10 +528,7 @@ object Dedup {
   def substringDedupFrozen(spark: SparkSession, dir: String, w: Int = 8,
       maxSize: Int = MaxFrozenSetSize): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val set = dupWindowSetCache.get((spark, dir, w))
-      .orElse(tryCollectWindowSet(spark, dir, w, maxSize)
-        .map { s => dupWindowSetCache.putIfAbsent((spark, dir, w), s); s })
-    set match {
+    windowSetWithin(spark, dir, w, maxSize) match {
       case Some(s) => substringDedupFrozenOf(docs, s, w)
       case None =>
         substringDedupFrozenJoinOf(docs, duplicatedWindowIndexStanding(spark, dir, w), w)
@@ -545,12 +540,12 @@ object Dedup {
     * no longer fits a driver array, it is still yesterday's offline asset,
     * so serving through [[substringDedupFrozenJoinOf]] must not re-run the
     * corpus-wide index build per query. Memoized per (session, dir, w);
-    * cleared by [[clearCaches]]. */
+    * released with the memos ([[graft.core.Memo]]). */
   private val dupWindowIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
+    Memo[(SparkSession, String, Int), DataFrame](this, _.unpersist())
 
   def duplicatedWindowIndexStanding(spark: SparkSession, dir: String, w: Int = 8): DataFrame =
-    dupWindowIndexCache.getOrElseUpdate((spark, dir, w),
+    dupWindowIndexCache((spark, dir, w))(
       duplicatedWindowIndex(spark, dir, w).cache())
 
   /** Frame form over any (doc_id, text) — StreamBench builds its standing
@@ -826,11 +821,11 @@ object Dedup {
     * count per round) is the most expensive dedup stage — re-deriving it
     * per caller would double it. */
   private val survivorsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Double, Long, Int), DataFrame]
+    Memo[(SparkSession, String, Double, Long, Int), DataFrame](this, _.unpersist())
 
   def dedupSurvivors(spark: SparkSession, dir: String, threshold: Double = 0.2,
       driverCcMaxPairs: Long = DriverCcMaxPairs, maxDf: Int = DefaultMaxShingleDf): DataFrame =
-    survivorsCache.getOrElseUpdate((spark, dir, threshold, driverCcMaxPairs, maxDf),
+    survivorsCache((spark, dir, threshold, driverCcMaxPairs, maxDf))(
       survivorsOf(spark,
         dedupNgramJaccard(spark, dir, threshold, maxDf).select(col("id_a"), col("id_b")),
         Tables.documents(spark, dir).select(col("doc_id")), driverCcMaxPairs).cache())
@@ -1050,11 +1045,10 @@ object Dedup {
     * dir): [[sourceOverlap]] and [[sourcePagerank]] both derive their
     * source-pair edges from it, so the docs join + distinct runs once per
     * dataset. */
-  private val srcShingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val srcShingleCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   private def sourceShingles(spark: SparkSession, dir: String): DataFrame =
-    srcShingleCache.getOrElseUpdate((spark, dir),
+    srcShingleCache((spark, dir))(
       surrogates(spark, dir)
         .join(Tables.documents(spark, dir).select(col("doc_id"), col("source")), "doc_id")
         .select(col("source"), col("s")).distinct()
@@ -1065,11 +1059,10 @@ object Dedup {
     * the single expensive step both [[sourceOverlap]] and
     * [[sourcePagerank]] pay; the per-key fanout is bounded by the NUMBER
     * OF SOURCES (config-sized), so the cached frame is tiny. */
-  private val srcPairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val srcPairCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   private def sourcePairs(spark: SparkSession, dir: String): DataFrame =
-    srcPairCache.getOrElseUpdate((spark, dir), {
+    srcPairCache((spark, dir)) {
       // posting-list dejoin (the [[pairIntersections]] shape): per-shingle
       // sorted source set + codegen i<j expansion — one exchange instead
       // of the self-join's two probe passes; fanout per key is bounded by
@@ -1082,7 +1075,7 @@ object Dedup {
         .groupBy(col("pr.id_a").as("source_a"), col("pr.id_b").as("source_b"))
         .agg(count(lit(1)).as("n_shared"))
         .cache()
-    })
+    }
 
   /** Rank scale for [[sourcePagerank]]: ranks are integers in units of
     * 10⁻¹² of the total probability mass, so every arithmetic step is
@@ -1244,21 +1237,15 @@ object Dedup {
     }
     // Final ranks are materialized in their checkpoint block, so the
     // loop input can be released now. The final block itself must outlive
-    // this call (the returned frame reads it), so it is registered for
-    // [[clearCaches]] instead of unpersisted here — without that, one
+    // this call (the returned frame reads it), so it is pinned until the
+    // memo sweep instead of unpersisted here — without that, one
     // node-count-sized block leaked per pagerank call for the session
     // lifetime.
     e.unpersist(false)
-    prev.foreach(r => pagerankCheckpoints.synchronized { pagerankCheckpoints += r })
+    prev.foreach(r => Memo.pin(this, r))
     ranks.select(col("source"), col("rank").as("rank_e12"))
       .orderBy(col("rank_e12").desc, col("source").asc)
   }
-
-  /** Final-round checkpoint blocks of [[pagerankDistributed]] runs, held
-    * until [[clearCaches]] — callers consume the returned frame lazily,
-    * so the block cannot be dropped inside the call. */
-  private val pagerankCheckpoints =
-    scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
 
   /** N-gram novelty: the fraction of a doc's distinct shingles whose FIRST
     * corpus occurrence (min doc_id) is the doc itself — the freshness
@@ -1351,8 +1338,7 @@ object Dedup {
   val WinnowK = 5
   val WinnowW = 4
 
-  private val winnowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val winnowCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   /** Selected fingerprints (doc_id, fp, selpos): per window of [[WinnowW]]
     * consecutive k-gram hashes, the MINIMUM hash, ties to the RIGHTMOST
@@ -1362,7 +1348,7 @@ object Dedup {
     * all-pairs. Hashes are the shared 60-bit md5 surrogate, so the oracle
     * derives the identical values. */
   private def winnowFps(spark: SparkSession, dir: String): DataFrame =
-    winnowCache.getOrElseUpdate((spark, dir), {
+    winnowCache((spark, dir)) {
       val w = WinnowW
       val grams = winnowGrams(spark, dir)
       val wWin = org.apache.spark.sql.expressions.Window
@@ -1378,7 +1364,7 @@ object Dedup {
         .select(col("doc_id"), col("wmin").as("fp"), col("selpos"))
         .distinct()
         .cache()
-    })
+    }
 
   /** (doc_id, m, pos, h): the k-gram hash stream of every eligible doc
     * (≥ k + w − 1 tokens, so at least one full window exists). */
@@ -1536,37 +1522,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
       .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Unpersist + drop the per-dataset shingle/pair caches (tests and
-    * long-lived multi-dataset services — the caches otherwise hold cached
-    * frames, and their SparkSessions, for the life of the JVM). */
-  def clearCaches(): Unit = {
-    for ((_, df) <- shingleCache) scala.util.Try(df.unpersist())
-    shingleCache.clear()
-    for ((_, df) <- surrogateCache) scala.util.Try(df.unpersist())
-    surrogateCache.clear()
-    for ((_, df) <- ngramPairsCache) scala.util.Try(df.unpersist())
-    ngramPairsCache.clear()
-    for ((_, df) <- paraShingleCache) scala.util.Try(df.unpersist())
-    paraShingleCache.clear()
-    for ((_, df) <- paraPairsCache) scala.util.Try(df.unpersist())
-    paraPairsCache.clear()
-    for ((_, df) <- survivorsCache) scala.util.Try(df.unpersist())
-    survivorsCache.clear()
-    for ((_, df) <- srcShingleCache) scala.util.Try(df.unpersist())
-    srcShingleCache.clear()
-    for ((_, df) <- srcPairCache) scala.util.Try(df.unpersist())
-    srcPairCache.clear()
-    for ((_, df) <- winnowCache) scala.util.Try(df.unpersist())
-    winnowCache.clear()
-    dupWindowSetCache.clear()
-    for ((_, df) <- dupWindowIndexCache) scala.util.Try(df.unpersist())
-    dupWindowIndexCache.clear()
-    pagerankCheckpoints.synchronized {
-      pagerankCheckpoints.foreach(r => scala.util.Try(r.unpersist(false)))
-      pagerankCheckpoints.clear()
-    }
   }
 
   /** Decontamination — the REMOVAL form of [[contaminationCheck]]: the

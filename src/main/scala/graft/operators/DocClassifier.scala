@@ -1,11 +1,9 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 
 /** Trained (not heuristic) document classification — the fastText-shaped
   * linear model every production LLM data pipeline runs as its model-based
@@ -97,9 +95,7 @@ object DocClassifier {
       nTrain: Long, nTest: Long, nPosTrain: Long, nPosTest: Long,
       accTrain: Double, accTest: Double)
 
-  private val fitCache = TrieMap.empty[(SparkSession, String, Int, Int), Model]
-
-  def clearCaches(): Unit = fitCache.clear()
+  private val fitCache = Memo[(SparkSession, String, Int, Int), Model](this)
 
   /** The distillation label: heuristic quality ≥ 0.40 (the corpus
     * median), via the same decimal-scaled ×10⁴ long the quality-decile
@@ -115,7 +111,7 @@ object DocClassifier {
     * consumer share one fit. */
   def fit(spark: SparkSession, dir: String, width: Int = DefaultWidth,
       iters: Int = DefaultIters, lr: Double = DefaultLr): Model =
-    fitCache.getOrElseUpdate((spark, dir, width, iters),
+    fitCache((spark, dir, width, iters))(
       fitOn(Tables.documents(spark, dir).select(
         col("doc_id"), labelExpr(spark).as("y"), col("text")), width, iters, lr))
 

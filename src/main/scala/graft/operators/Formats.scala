@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 
 /** File-format surface as a hash-checked QUERY (SURVEY.md §2b file
   * formats): the CSV/JSON/ORC sink→source roundtrip emits per-format
@@ -164,26 +164,18 @@ object Formats {
     * layout ONCE and later reads prune against it — re-writing all ~30
     * date directories on every invocation measured the pre-pay 4× per
     * bench run instead of the pruned read the query demonstrates. Files
-    * live until [[clearCaches]]. */
-  private val partitionedCache = scala.collection.concurrent.TrieMap
-    .empty[String, java.nio.file.Path]
-  private val partitionedLock = new Object
+    * live until the memo sweep or JVM exit ([[graft.core.Memo.onDisk]]). */
+  private val partitionedCache =
+    Memo.onDisk[String, java.nio.file.Path](this, deleteRecursively)
 
   private[graft] def withPartitionedEvents[T](spark: SparkSession, dir: String)
       (f: DataFrame => T): T = {
-    val base = partitionedLock.synchronized {
-      partitionedCache.get(dir)
-        .filter(p => java.nio.file.Files.exists(p.resolve("events"))) match {
-        case Some(p) => p
-        case None =>
-          partitionedCache.remove(dir).foreach(p => scala.util.Try(deleteRecursively(p)))
-          val b = java.nio.file.Files.createTempDirectory("graft_partitioned_")
-          Tables.events(spark, dir)
-            .withColumn("event_date", to_date(col("ts")))
-            .write.mode("overwrite").partitionBy("event_date").parquet(s"$b/events")
-          partitionedCache.put(dir, b)
-          b
-      }
+    val base = partitionedCache(dir, p => java.nio.file.Files.exists(p.resolve("events"))) {
+      val b = java.nio.file.Files.createTempDirectory("graft_partitioned_")
+      Tables.events(spark, dir)
+        .withColumn("event_date", to_date(col("ts")))
+        .write.mode("overwrite").partitionBy("event_date").parquet(s"$b/events")
+      b
     }
     f(spark.read.parquet(s"$base/events")
       .where(col("event_date") >= lit("2024-01-08") && col("event_date") < lit("2024-01-15")))
@@ -228,29 +220,21 @@ object Formats {
     * layout), then delete the files. */
   /** Layout MEMOIZED per dataset like [[withPartitionedEvents]] — the
     * z-order range shuffle + rewrite is the one-time pre-pay the box scan
-    * amortizes; files live until [[clearCaches]]. */
-  private val zorderCache = scala.collection.concurrent.TrieMap
-    .empty[String, java.nio.file.Path]
-  private val zorderLock = new Object
+    * amortizes; files live until the memo sweep or JVM exit. */
+  private val zorderCache =
+    Memo.onDisk[String, java.nio.file.Path](this, deleteRecursively)
 
   private[graft] def withZorderedLineitem[T](spark: SparkSession, dir: String)
       (f: DataFrame => T): T = {
-    val base = zorderLock.synchronized {
-      zorderCache.get(dir)
-        .filter(p => java.nio.file.Files.exists(p.resolve("li"))) match {
-        case Some(p) => p
-        case None =>
-          zorderCache.remove(dir).foreach(p => scala.util.Try(deleteRecursively(p)))
-          val b = java.nio.file.Files.createTempDirectory("graft_zorder_")
-          Tables.lineitem(spark, dir)
-            .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
-            .withColumn("z", zValue(col("l_partkey") % 65536, col("l_suppkey") % 65536))
-            .repartitionByRange(8, col("z"))
-            .sortWithinPartitions(col("z"))
-            .write.mode("overwrite").parquet(s"$b/li")
-          zorderCache.put(dir, b)
-          b
-      }
+    val base = zorderCache(dir, p => java.nio.file.Files.exists(p.resolve("li"))) {
+      val b = java.nio.file.Files.createTempDirectory("graft_zorder_")
+      Tables.lineitem(spark, dir)
+        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
+        .withColumn("z", zValue(col("l_partkey") % 65536, col("l_suppkey") % 65536))
+        .repartitionByRange(8, col("z"))
+        .sortWithinPartitions(col("z"))
+        .write.mode("overwrite").parquet(s"$b/li")
+      b
     }
     f(spark.read.parquet(s"$base/li")
       .where(col("l_partkey") >= 100 && col("l_partkey") < 200 &&
@@ -265,64 +249,40 @@ object Formats {
     * pre-round-16 shape did) measured the pre-pay 4× per bench run instead
     * of the join it exists to make cheap (round-15 `bucketed_revenue`
     * drift: the write dominates the call at sf0.1). Tables + files live
-    * until [[clearCaches]] (wired into GraftCaches.clearMemos). */
-  private val bucketedCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), (SparkSession, String, String, java.nio.file.Path)]
-  private val bucketedLock = new Object
+    * until the memo sweep or JVM exit. */
+  private val bucketedCache =
+    Memo.onDisk[(String, Int), (SparkSession, String, String, java.nio.file.Path)](this, {
+      case (spark, li, ord, base) =>
+        // a stopped session's catalog went with it
+        if (!spark.sparkContext.isStopped) {
+          scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS $li"))
+          scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS $ord"))
+        }
+        deleteRecursively(base)
+    })
 
   private[graft] def withBucketedJoin[T](spark: SparkSession, dir: String,
       buckets: Int)(f: DataFrame => T): T = {
-    // single-builder lock: a racing getOrElseUpdate would write both table
-    // pairs and orphan the losing tuple's temp dir + catalog entries
-    val (liT, ordT) = bucketedLock.synchronized {
-      val valid = bucketedCache.get((dir, buckets)).filter {
-        case (_, li, ord, _) =>
-          // a hit built by a recreated session (or whose tables were
-          // dropped externally) names catalog tables THIS session doesn't
-          // know — validate every hit, rebuild on miss (two catalog
-          // lookups, no data touched)
-          spark.catalog.tableExists(li) && spark.catalog.tableExists(ord)
-      }
-      valid match {
-        case Some((_, li, ord, _)) => (li, ord)
-        case None =>
-          bucketedCache.remove((dir, buckets)).foreach { case (_, li0, ord0, base0) =>
-            scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS $li0"))
-            scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS $ord0"))
-            scala.util.Try(deleteRecursively(base0))
-          }
-          // unique per layout: the shared Verify/Bench session must not collide
-          val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-          val base = java.nio.file.Files.createTempDirectory("graft_bucketed_")
-          val li = s"graft_li_$tag"
-          val ord = s"graft_ord_$tag"
-          Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_extendedprice"))
-            .write.mode("overwrite").option("path", s"$base/li")
-            .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey").saveAsTable(li)
-          Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority"))
-            .write.mode("overwrite").option("path", s"$base/ord")
-            .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey").saveAsTable(ord)
-          bucketedCache.put((dir, buckets), (spark, li, ord, base))
-          (li, ord)
-      }
+    // a hit built by a recreated session (or whose tables were dropped
+    // externally) names catalog tables THIS session doesn't know — validate
+    // every hit, rebuild on miss (two catalog lookups, no data touched)
+    val (_, liT, ordT, _) = bucketedCache((dir, buckets),
+        t => spark.catalog.tableExists(t._2) && spark.catalog.tableExists(t._3)) {
+      // unique per layout: the shared Verify/Bench session must not collide
+      val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+      val base = java.nio.file.Files.createTempDirectory("graft_bucketed_")
+      val li = s"graft_li_$tag"
+      val ord = s"graft_ord_$tag"
+      Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_extendedprice"))
+        .write.mode("overwrite").option("path", s"$base/li")
+        .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey").saveAsTable(li)
+      Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority"))
+        .write.mode("overwrite").option("path", s"$base/ord")
+        .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey").saveAsTable(ord)
+      (spark, li, ord, base)
     }
     f(spark.table(liT).hint("merge")
       .join(spark.table(ordT), col("l_orderkey") === col("o_orderkey")))
-  }
-
-  /** Drop the memoized bucketed catalog tables and the memoized
-    * partitioned/z-ordered layouts, deleting their files. */
-  def clearCaches(): Unit = {
-    for ((_, (spark, liT, ordT, base)) <- bucketedCache) {
-      scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS $liT"))
-      scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS $ordT"))
-      scala.util.Try(deleteRecursively(base))
-    }
-    bucketedCache.clear()
-    for ((_, base) <- partitionedCache) scala.util.Try(deleteRecursively(base))
-    partitionedCache.clear()
-    for ((_, base) <- zorderCache) scala.util.Try(deleteRecursively(base))
-    zorderCache.clear()
   }
 
   /** Key-skew diagnostic — the pre-join observability pass a 100 TB

@@ -1,9 +1,9 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Memo
 
 /** TRAINED multi-language identification — the fastText-langid shape every
   * production LLM pipeline runs as its first corpus filter (hashed
@@ -123,9 +123,7 @@ object LangClassifier {
   final case class LangModel(width: Int, weights: Map[String, Array[Double]],
       nTrain: Long, nTest: Long, accTest: Double, accTrain: Double)
 
-  private val fitCache = TrieMap.empty[SparkSession, LangModel]
-
-  def clearCaches(): Unit = { fitCache.clear(); kernelCache.clear() }
+  private val fitCache = Memo[SparkSession, LangModel](this)
 
   /** Multi-class argmax over the K integer micro-margins of quantized
     * one-vs-rest models — `greatest` over (margin, -classIndex) structs,
@@ -138,7 +136,7 @@ object LangClassifier {
     greatest(scored: _*).getField("lang")
   }
 
-  def fit(spark: SparkSession): LangModel = fitCache.getOrElseUpdate(spark, {
+  def fit(spark: SparkSession): LangModel = fitCache(spark) {
     val feat = seedCorpus(spark)
       .select(col("doc_id"), col("lang"),
         charBigramBuckets(col("text"), Width).as("buckets"),
@@ -164,7 +162,7 @@ object LangClassifier {
         acc.get(true).map(_._1).getOrElse(0L), acc.get(false).map(_._1).getOrElse(0L),
         accOf(false), accOf(true))
     } finally feat.unpersist()
-  })
+  }
 
   /** Stateless language-prediction expression of a fitted stack over any
     * text column, in composed-builtin form — the executable SPEC TWIN of
@@ -183,11 +181,10 @@ object LangClassifier {
 
   /** One kernel per fitted model (models are themselves memoized per
     * session, so identity keying is stable). */
-  private val kernelCache =
-    TrieMap.empty[LangModel, graft.functions.LangPredictKernel]
+  private val kernelCache = Memo[LangModel, graft.functions.LangPredictKernel](this)
 
   private def kernelOf(m: LangModel): graft.functions.LangPredictKernel =
-    kernelCache.getOrElseUpdate(m, new graft.functions.LangPredictKernel(
+    kernelCache(m)(new graft.functions.LangPredictKernel(
       m.width, Langs.toArray,
       Langs.map(l => m.weights(l)
         .map(x => math.floor(x * DocClassifier.Scale + 0.5).toLong)).toArray))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 
 /** Feature-extraction record produced by the media decoder (top-level so
   * the Dataset encoder stays codegen-compatible). `dims` is format-typed:
@@ -421,38 +421,12 @@ object Multimodal {
     * for consumers where the decode would dominate (a real entropy-coded
     * codec slots into this pass); the aHash pipeline deliberately bypasses
     * the cache — see [[ahashFrame]]'s measurement note. */
-  private val thumbCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), DataFrame]
+  private val thumbCache =
+    Memo[(SparkSession, String, Int, Int), DataFrame](this, _.unpersist())
 
   private def thumbnailFrame(spark: SparkSession, dir: String, tw: Int, th: Int): DataFrame =
-    thumbCache.getOrElseUpdate((spark, dir, tw, th),
+    thumbCache((spark, dir, tw, th))(
       thumbnailFrameUncached(spark, dir, tw, th).cache())
-
-  /** Per-call caches the near-dup passes pin — load-bearing against the
-    * interpreted-HOF join-inlining hazard ([[bitstringNearDupPairs]]'s
-    * comment), but per-invocation, so a long session running the near-dup
-    * queries repeatedly would otherwise accumulate orphaned storage
-    * blocks. Tracked here so [[clearCaches]] releases them. */
-  private val pinnedCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-
-  private def pinned(df: DataFrame): DataFrame =
-    pinnedCaches.synchronized { pinnedCaches += df; df }
-
-  /** Unpersist + drop the per-dataset media caches (the Dedup.clearCaches
-    * twin, reachable through [[graft.GraftCaches.clearAll]]). */
-  def clearCaches(): Unit = {
-    for ((_, df) <- thumbCache) scala.util.Try(df.unpersist())
-    thumbCache.clear()
-    pinnedCaches.synchronized {
-      pinnedCaches.foreach(df => scala.util.Try(df.unpersist()))
-      pinnedCaches.clear()
-    }
-    for ((_, df) <- mediaSurvivorsCache) scala.util.Try(df.unpersist())
-    mediaSurvivorsCache.clear()
-    for ((_, df) <- videoSigCache) scala.util.Try(df.unpersist())
-    videoSigCache.clear()
-    gateFixtureCache.clear()
-  }
 
   /** The decode+resize pass over any (doc_id, ts, text) frame, the
     * event-time column passing through — the form the streaming ingest
@@ -733,14 +707,14 @@ object Multimodal {
   /** Memoized per (session, dir, frames) — the [[thumbCache]] pattern: the
     * 4-thumbnail decode per doc dominates `mm_video_neardup`, and without
     * the memo every repeat invocation (and every consumer beyond the
-    * survivors path, which caches separately) re-paid it. Cleared by
-    * [[clearCaches]]. */
-  private val videoSigCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
+    * survivors path, which caches separately) re-paid it. Released with
+    * the memos ([[graft.core.Memo]]). */
+  private val videoSigCache =
+    Memo[(SparkSession, String, Int), DataFrame](this, _.unpersist())
 
   private[graft] def videoSigFrame(spark: SparkSession, dir: String,
       frames: Int = 4): DataFrame =
-    videoSigCache.getOrElseUpdate((spark, dir, frames),
+    videoSigCache((spark, dir, frames))(
       videoSigsWithTs(Tables.documents(spark, dir)
           .withColumn("ts", lit(null).cast("timestamp")), frames)
         .select(col("doc_id"), col("vsig")).cache())
@@ -793,9 +767,9 @@ object Multimodal {
   /** The label frame is cached per (session, dir): mm_neardup_survivors
     * AND mm_neardup_cluster_stats consume it, and the pair generation +
     * CC fixpoint is the expensive stage — the [[Dedup.dedupSurvivors]]
-    * cache pattern. Cleared by [[clearCaches]]. */
-  private[operators] val mediaSurvivorsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * cache pattern. Released with the memos. */
+  private val mediaSurvivorsCache =
+    Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   /** Media near-dup SURVIVORS — the keep-set a pipeline actually consumes
     * (which media rows to keep, not just which pairs collided): the image
@@ -808,13 +782,13 @@ object Multimodal {
     * ONE survivor semantics across text, embedding, and media dedup. Docs
     * in no pair (including media-ineligible ones) keep themselves. */
   def mediaNearDupSurvivors(spark: SparkSession, dir: String): DataFrame =
-    mediaSurvivorsCache.getOrElseUpdate((spark, dir), {
+    mediaSurvivorsCache((spark, dir)) {
       val pairs = imageNearDup(spark, dir).select(col("id_a"), col("id_b"))
         .union(audioNearDup(spark, dir).select(col("id_a"), col("id_b")))
         .union(videoNearDup(spark, dir).select(col("id_a"), col("id_b")))
       graft.operators.Dedup.survivorsOf(spark, pairs,
         Tables.documents(spark, dir).select(col("doc_id"))).cache()
-    })
+    }
 
   /** Media SOFT dedup — [[Dedup.dedupSoftWeights]]'s media twin: keep
     * every doc, emit sampling weight 1/cluster_size from the cross-modal
@@ -854,7 +828,8 @@ object Multimodal {
     * pre-hashed signature table and the daily batch is small. */
   def imageNearDupIncremental(spark: SparkSession, dir: String,
       batchStart: Long = 400): DataFrame = {
-    val sig = pinned(ahashFrame(spark, dir)
+    // the returned frame reads this cache, so it lives until the memo sweep
+    val sig = Memo.pin(this, ahashFrame(spark, dir)
       .select(col("doc_id"), col("ahash").as("bits")).cache())
     val corpus = sig.where(col("doc_id") < batchStart)
     val batch = sig.where(col("doc_id") >= batchStart)
@@ -938,7 +913,7 @@ object Multimodal {
     // wherever the optimizer decides to evaluate it.
     val wordsOf = expr("transform(sequence(0, cast((length(bits) - 1) div 16 as int)), " +
       "w -> cast(conv(substring(bits, w * 16 + 1, 16), 2, 10) as bigint))")
-    val s = pinned(sig.select(col("doc_id"), col("bits"))
+    val s = Memo.pin(this, sig.select(col("doc_id"), col("bits"))
       .withColumn("words", wordsOf).cache())
     val groups = s.groupBy(col("bits"))
       .agg(min(col("doc_id")).as("rep"), first(col("words")).as("words"))
@@ -1026,10 +1001,9 @@ object Multimodal {
     * probes); the corpus side reuses the production signature pass. */
   /** Memoized planted-gate fixtures per (session, dir, frameLocal, nPlant,
     * nVariants) — (candidate rows, chosen near-band mutants). Pure function
-    * of its key; cleared by [[clearCaches]]. */
-  private val gateFixtureCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Boolean, Int, Int),
-      (Array[(Long, String)], Array[(Long, String, Long)])]
+    * of its key; released with the memos. */
+  private val gateFixtureCache = Memo[(SparkSession, String, Boolean, Int, Int),
+    (Array[(Long, String)], Array[(Long, String, Long)])](this)
 
   private def plantedNearDupGate(
       spark: SparkSession,
@@ -1051,50 +1025,49 @@ object Multimodal {
     // only the PRODUCTION pair-recovery pass below, which is the thing
     // the gate exists to exercise. The fixture is driver-sized by
     // construction (nPlant sources × nVariants probes).
-    val (candRows, chosenRows) = gateFixtureCache.getOrElseUpdate(
-      (spark, dir, frameLocal, nPlant, nVariants), {
-        val cand = docs.where(eligible)
-          .orderBy(col("doc_id")).limit(nPlant)
-          .select(col("doc_id"), col("text"))
-          .collect().map(r => (r.getLong(0), r.getString(1)))
-        // mutate only the first quarter for frame-local media (video: one
-        // frame slice), anywhere for stream media (audio: one PCM byte) —
-        // same (variant*13) % win position arithmetic as always
-        val varRows = cand.toSeq.flatMap { case (id, t) =>
-          val win = if (frameLocal) t.length / 4 else t.length
-          if (win < 1) Seq.empty
-          else (0 until nVariants).map { v =>
-            val p = (v * 13) % win
-            val flipped = if (t.charAt(p) == 'a') 'b' else 'a'
-            (id, v.toLong, t.substring(0, p) + flipped + t.substring(p + 1))
-          }
+    val (candRows, chosenRows) = gateFixtureCache((spark, dir, frameLocal, nPlant, nVariants)) {
+      val cand = docs.where(eligible)
+        .orderBy(col("doc_id")).limit(nPlant)
+        .select(col("doc_id"), col("text"))
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+      // mutate only the first quarter for frame-local media (video: one
+      // frame slice), anywhere for stream media (audio: one PCM byte) —
+      // same (variant*13) % win position arithmetic as always
+      val varRows = cand.toSeq.flatMap { case (id, t) =>
+        val win = if (frameLocal) t.length / 4 else t.length
+        if (win < 1) Seq.empty
+        else (0 until nVariants).map { v =>
+          val p = (v * 13) % win
+          val flipped = if (t.charAt(p) == 'a') 'b' else 'a'
+          (id, v.toLong, t.substring(0, p) + flipped + t.substring(p + 1))
         }
-        val varText = varRows.map { case (id, v, t) => (id, v) -> t }.toMap
-        // signature of every probe — through the production arithmetic, or
-        // through a cheaper probe form when one exists (video: only frame 1
-        // differs from the source, so the probe splices the memoized base
-        // signature instead of re-decoding all 4 frames per variant). The
-        // probe stage only SELECTS which variant to plant; the pair-join
-        // assertion below always runs the full production sigOf, so a probe
-        // shortcut that mis-scored a variant would fail near_pairs_ok
-        // loudly rather than weaken the gate. The (doc, variant) key rides
-        // encoded in the id (variant < 1000).
-        val varSig = probeSigOf.getOrElse(sigOf)(
-            varRows.map { case (id, v, t) => (id * 1000 + v, t) }
-              .toDF("doc_id", "text"))
-          .select(floor(col("doc_id") / 1000).cast("long").as("doc_id"),
-            pmod(col("doc_id"), lit(1000L)).as("variant"), col("bits").as("vbits"))
-        val base = baseSigs.select(col("doc_id"), col("bits").as("base_bits"))
-        val chosen = varSig.join(base, "doc_id")
-          .withColumn("h", hammingBitsCol(col("vbits"), col("base_bits")))
-          .where(col("h").between(1, 3))
-          .groupBy(col("doc_id"))
-          .agg(min(struct(col("variant"), col("h"))).as("b"))
-          .select(col("doc_id"), col("b.variant").as("variant"), col("b.h").as("h"))
-          .collect()
-          .map(r => (r.getLong(0), varText((r.getLong(0), r.getLong(1))), r.getLong(2)))
-        (cand, chosen)
-      })
+      }
+      val varText = varRows.map { case (id, v, t) => (id, v) -> t }.toMap
+      // signature of every probe — through the production arithmetic, or
+      // through a cheaper probe form when one exists (video: only frame 1
+      // differs from the source, so the probe splices the memoized base
+      // signature instead of re-decoding all 4 frames per variant). The
+      // probe stage only SELECTS which variant to plant; the pair-join
+      // assertion below always runs the full production sigOf, so a probe
+      // shortcut that mis-scored a variant would fail near_pairs_ok
+      // loudly rather than weaken the gate. The (doc, variant) key rides
+      // encoded in the id (variant < 1000).
+      val varSig = probeSigOf.getOrElse(sigOf)(
+          varRows.map { case (id, v, t) => (id * 1000 + v, t) }
+            .toDF("doc_id", "text"))
+        .select(floor(col("doc_id") / 1000).cast("long").as("doc_id"),
+          pmod(col("doc_id"), lit(1000L)).as("variant"), col("bits").as("vbits"))
+      val base = baseSigs.select(col("doc_id"), col("bits").as("base_bits"))
+      val chosen = varSig.join(base, "doc_id")
+        .withColumn("h", hammingBitsCol(col("vbits"), col("base_bits")))
+        .where(col("h").between(1, 3))
+        .groupBy(col("doc_id"))
+        .agg(min(struct(col("variant"), col("h"))).as("b"))
+        .select(col("doc_id"), col("b.variant").as("variant"), col("b.h").as("h"))
+        .collect()
+        .map(r => (r.getLong(0), varText((r.getLong(0), r.getLong(1))), r.getLong(2)))
+      (cand, chosen)
+    }
     val planted =
       candRows.map { case (id, t) => (id + 2 * Offset, t) } ++
         chosenRows.map { case (id, t, _) => (id + Offset, t) }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import graft.functions.NativeVectorFunctions.{dotNative, l2sqNative, normNative}
 import graft.functions.VectorFunctions.cosine
 
@@ -21,17 +21,11 @@ object Similarity {
     * full join again. Outputs are pair-sized (small), so `.cache()` holds
     * rows, not the corpus — same pattern as Dedup's ngramPairsCache. */
   private val pairFrameCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+    Memo[(SparkSession, String, String), DataFrame](this, _.unpersist())
 
   private def cachedPairs(spark: SparkSession, dir: String, key: String)
       (build: => DataFrame): DataFrame =
-    pairFrameCache.getOrElseUpdate((spark, dir, key), build.cache())
-
-  /** Lifecycle hook for [[graft.GraftCaches.clearAll]]. */
-  def clearCaches(): Unit = {
-    pairFrameCache.values.foreach(df => scala.util.Try(df.unpersist()))
-    pairFrameCache.clear()
-  }
+    pairFrameCache((spark, dir, key))(build.cache())
 
   /** Brute-force cosine top-k per query — the baseline ANN answer and the
     * ground truth for the bucketed variant. Same broadcast-queries posture
@@ -360,7 +354,7 @@ object Similarity {
 
   /** General form over ANY (vec_id, wv) frame — e.g. a real MRL-trained
     * corpus, or ScaleBench's energy-compacted synthetic sweep. `tag` keys
-    * the cached prefix frame (released by [[clearCaches]]). */
+    * the cached prefix frame (released with the memos, [[graft.core.Memo]]). */
   def matryoshkaSearchOf(spark: SparkSession, we: DataFrame, tag: String,
       nQueries: Int, k: Int): DataFrame = {
     val cand = matCandidatesOf(spark, we, tag, nQueries, k)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Memo
+
 /** Learned-sparse retrieval (the SPLADE / uniCOIL / DeepImpact serving
   * class): documents are encoded as PRUNED sparse term-impact vectors, the
   * index is the posting-list layout of those impacts, and serving is an
@@ -49,9 +51,8 @@ object SparseRetrieval {
     * (session, dir) — encode/stats/topk/champion all fold it, and its base
     * (the per-doc term counts) is the SAME memoized frame the BM25 leg
     * scans, so adding the sparse modality costs zero extra corpus passes.
-    * Cleared by [[clearCaches]]. */
-  private val postingsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * Released with the memos ([[graft.core.Memo]]). */
+  private val postingsCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   /** One-row (nd) corpus-size frame — crossJoin-broadcast like bm25's. */
   private def docCount(spark: SparkSession, dir: String): DataFrame =
@@ -114,7 +115,7 @@ object SparseRetrieval {
     * (w desc, term asc) — rank exposed as `r` so the encode query can show
     * the kept order. */
   private[graft] def prunedPostings(spark: SparkSession, dir: String): DataFrame =
-    postingsCache.getOrElseUpdate((spark, dir),
+    postingsCache((spark, dir))(
       prunedPostingsOf(fullPostings(spark, dir), PruneM).persist())
 
   /** Query-side term weights for the standing literal query set:
@@ -336,12 +337,5 @@ object SparseRetrieval {
       s"sparse dictionary has ${rows.length} terms — a learned-sparse model " +
         "vocabulary is fixed and small; refusing a corpus-sized collect")
     SparseModel(nd, rows.map(r => (r.getString(0), r.getLong(1))).toMap)
-  }
-
-  /** Unpersist + drop the memoized posting frame (bench family-eviction +
-    * dataset-cycling lifecycle — see [[graft.GraftCaches]]). */
-  def clearCaches(): Unit = {
-    postingsCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => })
-    postingsCache.clear()
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 
 /** Text-analysis operators over `documents`: quality stats, language ID,
   * token counting, fingerprinting (north-star surface, SURVEY.md §2b).
@@ -153,28 +153,15 @@ object TextAnalysis {
     * dictionary-sized vocab frame is what keeps [[bpeEncode]] from
     * replaying the corpus-sized word groupBy plus the k nested merge
     * folds when its lazy plan evaluates (the word-frequency cache is
-    * released by then). Cleared by [[clearCaches]]. */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, Seq[(Long, String, String, Long)])]
+    * released by then). Released with the memos ([[graft.core.Memo]]). */
+  private val bpeCache =
+    Memo[(SparkSession, String, Int), (DataFrame, Seq[(Long, String, String, Long)])](
+      this, _._1.unpersist())
 
   private def bpeTrainCached(spark: SparkSession, dir: String, k: Int)
       : (DataFrame, Seq[(Long, String, String, Long)]) =
-    bpeCache.getOrElseUpdate((spark, dir, k),
+    bpeCache((spark, dir, k))(
       bpeTrain(spark, Tables.documents(spark, dir), k))
-
-  /** Unpersist + drop the per-dataset text-analysis memos (the
-    * Dedup.clearCaches twin, reachable through
-    * [[graft.GraftCaches.clearAll]]). */
-  def clearCaches(): Unit = {
-    for ((_, (df, _)) <- bpeCache) scala.util.Try(df.unpersist())
-    bpeCache.clear()
-    for ((_, df) <- lexTcCache) scala.util.Try(df.unpersist())
-    lexTcCache.clear()
-    for ((_, df) <- lexDlCache) scala.util.Try(df.unpersist())
-    lexDlCache.clear()
-    for ((_, df) <- lexDfCache) scala.util.Try(df.unpersist())
-    lexDfCache.clear()
-  }
 
   /** The shared training loop: returns (final segmented vocab
     * `(w, cnt, syms)` — cached AND materialized, so consumers never
@@ -834,12 +821,11 @@ object TextAnalysis {
     * re-runs the corpus scan + groupBy ~4× (dl, dfs, the score join, and
     * the query-idf's own dl), which at corpus scale is the plan you would
     * not want. Everything downstream of this frame is dictionary-sized.
-    * Cleared by [[clearCaches]]. */
-  private val lexTcCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * Released with the memos. */
+  private val lexTcCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   private[graft] def lexTermCounts(spark: SparkSession, dir: String): DataFrame =
-    lexTcCache.getOrElseUpdate((spark, dir),
+    lexTcCache((spark, dir))(
       Tables.documents(spark, dir)
         .select(col("doc_id"), explode(toks(col("text"))).as("term"))
         .where(col("term") =!= "")
@@ -851,19 +837,17 @@ object TextAnalysis {
     * from [[lexTermCounts]]. Memoized + persisted like their base frame:
     * bm25/PRF/hybrid/RAG each fold them ~2-4×, and while recomputing from
     * the cached tc is not a rescan, it is still a full shuffle per use at
-    * corpus scale. Cleared by [[clearCaches]]. */
-  private val lexDlCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private val lexDfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * corpus scale. Released with the memos. */
+  private val lexDlCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
+  private val lexDfCache = Memo[(SparkSession, String), DataFrame](this, _.unpersist())
 
   private[graft] def lexDocLens(spark: SparkSession, dir: String): DataFrame =
-    lexDlCache.getOrElseUpdate((spark, dir),
+    lexDlCache((spark, dir))(
       lexTermCounts(spark, dir)
         .groupBy(col("doc_id")).agg(sum(col("c")).as("n")).persist())
 
   private[graft] def lexTermDfs(spark: SparkSession, dir: String): DataFrame =
-    lexDfCache.getOrElseUpdate((spark, dir),
+    lexDfCache((spark, dir))(
       lexTermCounts(spark, dir)
         .groupBy(col("term")).agg(count(lit(1)).as("df")).persist())
 

@@ -58,27 +58,12 @@ private case class BucketState(ids: List[Long], newestMs: Long)
 object StreamingOps {
 
   /** Stream-static helper frames cached per stream construction (catalogs,
-    * corpus indexes, cluster sizes). Tracked here so a long-lived service
-    * that builds many streams can release them all via [[clearCaches]]
-    * (routed through [[graft.GraftCaches.clearAll]]) instead of
-    * accumulating orphaned storage blocks. */
-  private val pinnedCaches = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
-  private def pin(df: DataFrame): DataFrame = {
-    val cached = df.cache()
-    pinnedCaches.add(cached)
-    cached
-  }
-
-  /** Unpersist every tracked stream-static cache. Call between datasets /
-    * stream teardowns, not while a stream using one is still running. */
-  private[graft] def clearCaches(): Unit = {
-    var df = pinnedCaches.poll()
-    while (df != null) {
-      try df.unpersist() catch { case _: Exception => () }
-      df = pinnedCaches.poll()
-    }
-  }
+    * corpus indexes, cluster sizes), pinned in [[graft.core.Memo]] so a
+    * long-lived service that builds many streams releases them all with the
+    * memo sweep instead of accumulating orphaned storage blocks. Release
+    * between datasets or stream teardowns, not while a stream using one is
+    * still running. */
+  private def pin(df: DataFrame): DataFrame = graft.core.Memo.pin(this, df.cache())
 
   /** Exact microseconds since epoch (`unix_micros` semantics). getTime is
     * millisecond-truncated; the batch twins compare times in micros, so the

@@ -418,7 +418,8 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
       val fetched =
         if (!fullBeam) searchPrepared(prepared, fetchK)
         else core.filteredTopK(prepared, Array.empty[Long], deny = true, fetchK, fullBeam = true)
-      val kept = FanoutModel.pinPool(
+      // the returned frame reads this pool, so it is pinned, not unpersisted
+      val kept = graft.core.Memo.pin(FanoutModel,
         fetched.join(filterIds, Seq("id"), if (deny) "left_anti" else "left_semi")
           .persist())
       if (prev != null) { prev.unpersist(blocking = false); prev = null }
@@ -554,20 +555,6 @@ object FanoutModel {
     * the selectivity that reaches it (both filter sides > 5M) a k×8
     * fetch retains recall while keeping the merge bounded. */
   val PostFilterOverfetch: Int = 8
-
-  /** Post-filter pools [[FanoutModel.postFilterSearch]] persists so the
-    * survivor check and the returned frame share one fetch; bounded at
-    * nQueries × k × mult rows each. Released by
-    * [[VamanaOps.clearCaches]] (the Multimodal pinned-frame pattern). */
-  private[vamana] val pinnedPools = scala.collection.mutable.ListBuffer.empty[DataFrame]
-
-  private[vamana] def pinPool(df: DataFrame): DataFrame =
-    pinnedPools.synchronized { pinnedPools += df; df }
-
-  private[vamana] def clearPinned(): Unit = pinnedPools.synchronized {
-    for (df <- pinnedPools) scala.util.Try(df.unpersist())
-    pinnedPools.clear()
-  }
 
   /** S2 for the fanout path: reassemble each shard kernel in its own
     * partition, resident — searches after load run zero builds, zero

@@ -1,96 +1,60 @@
 package graft.vamana
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import graft.operators.Knn
 
-/** SparkEntry-facing ANN operators. The fitted model is cached per scale
-  * directory so Verify/Bench calls don't rebuild the graph per query. */
+/** SparkEntry-facing ANN operators. Fitted models are memoized per
+  * (session, scale directory) so Verify/Bench calls don't rebuild the graph
+  * per query, and a restarted session never gets a model whose RDDs belong
+  * to a stopped context. */
 object VamanaOps {
 
   /** BASELINE.md's suggested params for the dim-64 embeddings table. */
   val defaultParams: VamanaParams =
     VamanaParams(dim = 64, maxDegree = 32, beamWidth = 64, alpha = 1.2f, efSearch = 128)
 
-  private val cache = TrieMap.empty[String, VamanaModel]
+  private type Key = (SparkSession, String)
+
+  private val cache = Memo[Key, VamanaModel](this, _.unpersist())
 
   def model(spark: SparkSession, dir: String): VamanaModel =
-    cache.getOrElseUpdate(dir,
+    cache((spark, dir))(
       VamanaIndexer.fit(Tables.embeddings(spark, dir), defaultParams))
 
   /** Fanout serving model, fitted ONCE per dataset — round 1 rebuilt every
     * shard graph inside each search call. */
-  private val fanoutCache = TrieMap.empty[String, FanoutModel]
+  private val fanoutCache = Memo[Key, FanoutModel](this, _.unpersist())
 
   def fanoutModel(spark: SparkSession, dir: String): FanoutModel =
-    fanoutCache.getOrElseUpdate(dir,
+    fanoutCache((spark, dir))(
       VamanaFanout.fit(Tables.embeddings(spark, dir), defaultParams, numShards = 4))
 
   /** CLUSTERED (routed) serving model — [[VamanaRouted.fit]]'s SPANN-style
     * k-means shard layout over the same embeddings fixture, fitted once
     * per dataset like [[fanoutModel]] so repeat queries pay zero builds. */
-  private val routedCache = TrieMap.empty[String, RoutedFanoutModel]
+  private val routedCache = Memo[Key, RoutedFanoutModel](this, _.unpersist())
 
   def routedModel(spark: SparkSession, dir: String): RoutedFanoutModel =
-    routedCache.getOrElseUpdate(dir,
+    routedCache((spark, dir))(
       VamanaRouted.fit(Tables.embeddings(spark, dir), defaultParams, numShards = 4))
 
   /** Cosine-metric fanout twin (normalize-at-fit, the kernel's "cos"
     * reduction) — the serving index for similarity-JOIN mining, fitted
     * once per dataset like [[fanoutModel]]. */
-  private val fanoutCosCache = TrieMap.empty[String, FanoutModel]
+  private val fanoutCosCache = Memo[Key, FanoutModel](this, _.unpersist())
 
   def fanoutCosModel(spark: SparkSession, dir: String): FanoutModel =
-    fanoutCosCache.getOrElseUpdate(dir,
+    fanoutCosCache((spark, dir))(
       VamanaFanout.fit(Tables.embeddings(spark, dir),
         defaultParams.copy(metric = "cos"), numShards = 4))
 
-  /** Drop + unpersist the per-dataset fitted models (tests / long-lived
-    * services — the caches otherwise pin models for the life of the JVM). */
-  def clearCaches(): Unit = {
-    for ((_, m) <- cache) m.unpersist()
-    cache.clear()
-    for ((_, f) <- fanoutCache) f.unpersist()
-    fanoutCache.clear()
-    for ((_, m) <- routedCache) m.unpersist()
-    routedCache.clear()
-    for ((_, f) <- fanoutCosCache) f.unpersist()
-    fanoutCosCache.clear()
-    for ((_, m) <- insertCache) m.unpersist()
-    insertCache.clear()
-    for ((_, m) <- deleteCache) m.unpersist()
-    deleteCache.clear()
-    for ((_, m) <- mergeCache) m.unpersist()
-    mergeCache.clear()
-    for ((_, f) <- pqInsertCache) f.unpersist()
-    pqInsertCache.clear()
-    for ((_, f) <- pqDeleteCache) f.unpersist()
-    pqDeleteCache.clear()
-    for ((_, f) <- fullBeamFanoutCache) f.unpersist()
-    fullBeamFanoutCache.clear()
-    for ((_, f) <- fullBeamRoutedCache) f.unpersist()
-    fullBeamRoutedCache.clear()
-    for ((_, (m, _, _)) <- routedRebalanceCache) m.unpersist()
-    routedRebalanceCache.clear()
-    for ((_, (m, _)) <- routedMergeCache) m.unpersist()
-    routedMergeCache.clear()
-    for ((_, f) <- subVecCache) f.unpersist()
-    subVecCache.clear()
-    for ((_, f) <- langCosCache) f.unpersist()
-    langCosCache.clear()
-    fullBeamCache.clear()
-    calibrateCache.clear()
-    FanoutModel.clearPinned()
-  }
-
-  private val insertCache = TrieMap.empty[String, VamanaModel]
-  private val deleteCache = TrieMap.empty[String, VamanaModel]
-  private val mergeCache = TrieMap.empty[String, VamanaModel]
-  private val pqInsertCache = TrieMap.empty[String, FanoutModel]
+  private val insertCache = Memo[Key, VamanaModel](this, _.unpersist())
+  private val deleteCache = Memo[Key, VamanaModel](this, _.unpersist())
+  private val mergeCache = Memo[Key, VamanaModel](this, _.unpersist())
+  private val pqInsertCache = Memo[Key, FanoutModel](this, _.unpersist())
 
   /** Delete-then-serve demo: drop the first 50 vectors from the fitted
     * model (copy-on-write — the shared cached model is untouched), then
@@ -101,7 +65,7 @@ object VamanaOps {
     val n = emb.count()
     // first 50 ids, but never the whole (smoke-scale) corpus
     val nDel = math.min(50L, n / 2)
-    val m = deleteCache.getOrElseUpdate(dir, model(spark, dir).delete((0L until nDel).toArray))
+    val m = deleteCache((spark, dir))(model(spark, dir).delete((0L until nDel).toArray))
     val q = emb.where(col("vec_id") >= nDel && col("vec_id") < nDel + 10)
       .select((col("vec_id") - nDel).cast("long").as("query_id"),
         col("embedding").as("query_vec"))
@@ -118,10 +82,10 @@ object VamanaOps {
     // last 50 vectors as the batch, but never more than half the corpus —
     // a tiny (smoke-scale) dataset must still leave a non-empty base fit
     val cut = math.max(maxId - 49, (maxId + 1) / 2)
-    val m = insertCache.getOrElseUpdate(dir, {
+    val m = insertCache((spark, dir)) {
       val base = VamanaIndexer.fit(emb.where(col("vec_id") < cut), defaultParams)
       base.insert(emb.where(col("vec_id") >= cut))
-    })
+    }
     val q = emb.where(col("vec_id") >= cut)
       .select((col("vec_id") - cut).cast("long").as("query_id"),
         col("embedding").as("query_vec"))
@@ -188,11 +152,11 @@ object VamanaOps {
     * still respects maxDegree after the back-edge prune-on-overflow. */
   def vamanaMergeGate(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val merged = mergeCache.getOrElseUpdate(dir, {
+    val merged = mergeCache((spark, dir)) {
       val a = VamanaIndexer.fit(emb.where(col("vec_id") % 2 === 0), defaultParams)
       val b = VamanaIndexer.fit(emb.where(col("vec_id") % 2 === 1), defaultParams)
       new VamanaModel(a.merge(b).index.withFullBeam)
-    })
+    }
     val q = Knn.queriesFromPoints(emb, 10)
     val ann = merged.search(q, k).select(col("query_id"), col("id"))
     val exact = Knn.knnExact(emb, q, k).select(col("query_id"), col("id"))
@@ -222,13 +186,13 @@ object VamanaOps {
     val maxId = emb.agg(max(col("vec_id").cast("long"))).head().getLong(0)
     val cut = math.max(maxId - 49, (maxId + 1) / 2)
     val key = s"$dir#pq_insert_gate"
-    val fm = pqInsertCache.getOrElseUpdate(dir, {
+    val fm = pqInsertCache((spark, dir)) {
       val base = VamanaFanout.fit(emb.where(col("vec_id") < cut), defaultParams, numShards = 4)
       // warm the per-shard code memo on the PRE-insert membership
       VamanaPq.searchFanoutModel(base, Knn.queriesFromPoints(emb, 5), key,
         k, fullBeam = false).count()
       base.insert(emb.where(col("vec_id") >= cut))
-    })
+    }
     val q = emb.where(col("vec_id") >= cut)
       .select((col("vec_id") - cut).cast("long").as("query_id"),
         col("embedding").as("query_vec"))
@@ -245,7 +209,7 @@ object VamanaOps {
       col("overlap_exact_ok"))
   }
 
-  private val pqDeleteCache = TrieMap.empty[String, FanoutModel]
+  private val pqDeleteCache = Memo[Key, FanoutModel](this, _.unpersist())
 
   /** PQ-fanout DELETE gate — the mutation twin of [[vamanaPqInsertGate]]
     * and the end-to-end exercise of the per-shard code memo's MEMBERSHIP
@@ -262,13 +226,13 @@ object VamanaOps {
     val maxId = emb.agg(max(col("vec_id").cast("long"))).head().getLong(0)
     val cut = math.max(maxId - 49, (maxId + 1) / 2)
     val key = s"$dir#pq_delete_gate"
-    val fm = pqDeleteCache.getOrElseUpdate(dir, {
+    val fm = pqDeleteCache((spark, dir)) {
       val base = VamanaFanout.fit(emb, defaultParams, numShards = 4)
       // warm the per-shard code memo on the PRE-delete membership
       VamanaPq.searchFanoutModel(base, Knn.queriesFromPoints(emb, 5), key,
         k, fullBeam = false).count()
       base.delete((cut to maxId).toArray)
-    })
+    }
     val surviving = emb.where(col("vec_id") < cut)
     val q = Knn.queriesFromPoints(surviving, 10)
     val res = VamanaPq.searchFanoutModel(fm, q, key, k, fullBeam = true)
@@ -309,15 +273,15 @@ object VamanaOps {
     * n): greedy search with a beam that never evicts expands every node
     * reachable from the medoid, so on a connected graph it returns the
     * EXACT top-k. Same fitted graph — no refit, no second build. */
-  private val fullBeamCache = TrieMap.empty[String, VamanaModel]
+  private val fullBeamCache = Memo[Key, VamanaModel](this, _.unpersist())
 
   private def fullBeamModel(spark: SparkSession, dir: String): VamanaModel =
-    fullBeamCache.getOrElseUpdate(dir, {
+    fullBeamCache((spark, dir)) {
       val idx = model(spark, dir).localIndex.getOrElse(sys.error(
         "vamana_search_overlap is a broadcast-scale exactness gate; " +
           "distributed models are recall-gated by vamana_recall instead"))
       new VamanaModel(idx.withFullBeam)
-    })
+    }
 
   /** Hash-checked serving-path gate: per-query OVERLAP between the graph
     * search at full beam and exact kNN, over the same 10-query fixture as
@@ -391,19 +355,19 @@ object VamanaOps {
     * shard size): each shard's range answer is provably its complete
     * in-range subset, so the union is the exact global range set. Same
     * fitted graphs — no refit. */
-  private val fullBeamFanoutCache = TrieMap.empty[String, FanoutModel]
+  private val fullBeamFanoutCache = Memo[Key, FanoutModel](this, _.unpersist())
 
   private def fullBeamFanoutModel(spark: SparkSession, dir: String): FanoutModel =
-    fullBeamFanoutCache.getOrElseUpdate(dir, fanoutModel(spark, dir).withFullBeamShards())
+    fullBeamFanoutCache((spark, dir))(fanoutModel(spark, dir).withFullBeamShards())
 
   /** Full-beam routed twin, memoized per dataset like [[fullBeamFanoutModel]]
     * — [[vamanaRoutedRangeGate]] is re-invoked every Bench iteration and a
     * fresh `withFullBeamShards()` per call would both leak cached kernel
     * copies and re-pay the shard-radii collect each time. */
-  private val fullBeamRoutedCache = TrieMap.empty[String, RoutedFanoutModel]
+  private val fullBeamRoutedCache = Memo[Key, RoutedFanoutModel](this, _.unpersist())
 
   private def fullBeamRoutedModel(spark: SparkSession, dir: String): RoutedFanoutModel =
-    fullBeamRoutedCache.getOrElseUpdate(dir, routedModel(spark, dir).withFullBeamShards())
+    fullBeamRoutedCache((spark, dir))(routedModel(spark, dir).withFullBeamShards())
 
   /** [[vamanaRangeGate]]'s theorem on the SHARDED serving regime: radius
     * membership is a global predicate, so per-shard complete answers
@@ -441,10 +405,10 @@ object VamanaOps {
     * covers only ~0.2-0.5 of the exact maxsim winners — sub-vector maxima
     * are invisible to the full-vector dot — measured before this index
     * replaced it.) Inner-product metric: maxsim sums raw sub-dots. */
-  private val subVecCache = TrieMap.empty[String, FanoutModel]
+  private val subVecCache = Memo[Key, FanoutModel](this, _.unpersist())
 
   private def subVecModel(spark: SparkSession, dir: String): FanoutModel =
-    subVecCache.getOrElseUpdate(dir, {
+    subVecCache((spark, dir)) {
       val g = graft.operators.Similarity.MaxSimGroups
       val subs = Tables.embeddings(spark, dir).select(
           (col("vec_id") * g).as("base"),
@@ -453,7 +417,7 @@ object VamanaOps {
             .as(Seq("j", "sv")))
         .select((col("base") + col("j")).as("vec_id"), col("sv").as("embedding"))
       VamanaFanout.fit(subs, defaultParams.copy(dim = 16, metric = "ip"), numShards = 4)
-    })
+    }
 
   /** MaxSim served at scale — candidate generation by PER-SUB-VECTOR ANN
     * (each query part q_i fetches its top-t sub-vector matches from the
@@ -486,15 +450,16 @@ object VamanaOps {
 
   /** Per-language fitted cosine fanout models for the ANN-served bitext
     * path — one index per language side, cached per (dataset, lang). */
-  private val langCosCache = TrieMap.empty[(String, String), FanoutModel]
+  private val langCosCache =
+    Memo[(SparkSession, String, String), FanoutModel](this, _.unpersist())
 
   private def langCosModel(spark: SparkSession, dir: String, lang: String): FanoutModel =
-    langCosCache.getOrElseUpdate((dir, lang), {
+    langCosCache((spark, dir, lang)) {
       val ids = Tables.documents(spark, dir).where(col("lang") === lang)
         .select(col("doc_id").as("vec_id"))
       VamanaFanout.fit(Tables.embeddings(spark, dir).join(ids, "vec_id"),
         defaultParams.copy(metric = "cos"), numShards = 2)
-    })
+    }
 
   /** ANN-SERVED bitext mining — the scale path the exact `bitext_mining`
     * form points at: every margin ingredient comes from the per-language
@@ -736,11 +701,12 @@ object VamanaOps {
     * union corpus, so per-query overlap with exact kNN must equal k
     * (theorem; oracle literal), and the routing table must cover every
     * shard row (table_synced). */
-  private val routedMergeCache = TrieMap.empty[String, (RoutedFanoutModel, Boolean)]
+  private val routedMergeCache =
+    Memo[Key, (RoutedFanoutModel, Boolean)](this, _._1.unpersist())
 
   def vamanaRoutedMergeGate(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val (merged, zeroBuilds) = routedMergeCache.getOrElseUpdate(dir, {
+    val (merged, zeroBuilds) = routedMergeCache((spark, dir)) {
       val a = VamanaRouted.fit(emb.where(col("vec_id") % 2 === 0), defaultParams, numShards = 2)
       val b = VamanaRouted.fit(emb.where(col("vec_id") % 2 === 1), defaultParams, numShards = 2)
       val builds0 = VamanaKernel.buildCount.get()
@@ -749,7 +715,7 @@ object VamanaOps {
       val full = m.withFullBeamShards()
       a.unpersist(); b.unpersist(); m.unpersist()
       (full, zb)
-    })
+    }
     val q = Knn.queriesFromPoints(emb, 10)
     val ann = merged.search(q, k).select(col("query_id"), col("id"))
     val exact = Knn.knnExact(emb, q, k).select(col("query_id"), col("id"))
@@ -787,10 +753,10 @@ object VamanaOps {
     *    membership-union/ε-closure invariant survived the splits.
     * Constant cost at every sf (the fixture is size-bounded). */
   private val routedRebalanceCache =
-    TrieMap.empty[String, (RoutedFanoutModel, DataFrame, Int)]
+    Memo[Key, (RoutedFanoutModel, DataFrame, Int)](this, _._1.unpersist())
 
   def vamanaRoutedRebalanceGate(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val (fb, corpus, shardsBefore) = routedRebalanceCache.getOrElseUpdate(dir, {
+    val (fb, corpus, shardsBefore) = routedRebalanceCache((spark, dir)) {
       val emb = Tables.embeddings(spark, dir).where(col("vec_id") < 1000)
         .select(col("vec_id"), col("embedding"))
       val base = VamanaRouted.fit(emb, defaultParams, numShards = 4)
@@ -805,7 +771,7 @@ object VamanaOps {
       base.unpersist(); grown.unpersist()
       if (reb.numShards > base.numShards) reb.unpersist() // rebalance split: reb != grown
       (full, emb.unionByName(hot), base.numShards)
-    })
+    }
     val emb = corpus.where(col("vec_id") < 1000)
     val q = Knn.queriesFromPoints(emb, 10)
     val sizes = fb.shardSizes
@@ -837,13 +803,13 @@ object VamanaOps {
     *  - `probes_bounded`: mean and p95 probe counts in [1, numShards].
     * The calibration (bisection passes over the bounded sample) is
     * memoized per dataset like the fitted models. */
-  private val calibrateCache = TrieMap.empty[String, (EpsCalibration, Double)]
+  private val calibrateCache = Memo[Key, (EpsCalibration, Double)](this)
 
   def vamanaRoutedCalibrateGate(spark: SparkSession, dir: String,
       target: Double = 0.9, k: Int = 10): DataFrame = {
     import spark.implicits._
     val m = routedModel(spark, dir)
-    val (cal, halfRecall) = calibrateCache.getOrElseUpdate(dir, {
+    val (cal, halfRecall) = calibrateCache((spark, dir)) {
       val emb = Tables.embeddings(spark, dir)
       val q = Knn.queriesFromPoints(emb, 10)
       val c = m.calibrateEps(q, k, target)
@@ -855,7 +821,7 @@ object VamanaOps {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (c, if (fullRows.isEmpty) 1.0
           else half.count(fullRows.contains).toDouble / fullRows.size)
-    })
+    }
     val s = m.numShards
     Seq((cal.nQueries.toLong, cal.targetMet, halfRecall <= cal.recall + 1e-9,
       cal.meanProbes >= 1.0 && cal.meanProbes <= s &&

@@ -1,11 +1,9 @@
 package graft.vamana
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import graft.operators.{Knn, Quantization}
 import graft.operators.Quantization.PqCodebooks
 
@@ -31,9 +29,10 @@ object VamanaPq {
 
   /** Per-dataset serving state: the fitted broadcast-regime index, the PQ
     * codebooks trained on the shared bounded sample, and one m-byte code row
-    * per stored point (positional, parallel to `idx.points`). Cleared by
+    * per stored point (positional, parallel to `idx.points`). Released by
     * [[clearCaches]]. */
-  private val cache = TrieMap.empty[String, (LocalIndex, PqCodebooks, Array[Array[Int]])]
+  private val cache =
+    Memo[(SparkSession, String), (LocalIndex, PqCodebooks, Array[Array[Int]])](this)
 
   /** FANOUT-regime serving state, memoized per (dataset, shard) in the
     * executor JVM: codebooks trained on the SHARD'S OWN points (bounded
@@ -42,12 +41,13 @@ object VamanaPq {
     * vectors don't fit, which is the regime DiskANN's design exists for
     * (the broadcast-regime [[cache]] is where it's least needed). */
   private val shardCache =
-    TrieMap.empty[(String, Int), (Long, PqCodebooks, Array[Array[Byte]])]
+    Memo[(String, Int), (Long, PqCodebooks, Array[Array[Byte]])](this)
 
-  def clearCaches(): Unit = { cache.clear(); shardCache.clear() }
+  /** Release both memos (the broadcast-regime state and the shard codes). */
+  def clearCaches(): Unit = Memo.release(this)
 
   private def pqState(spark: SparkSession, dir: String): (LocalIndex, PqCodebooks, Array[Array[Int]]) =
-    cache.getOrElseUpdate(dir, {
+    cache((spark, dir)) {
       val idx = VamanaOps.model(spark, dir).localIndex.getOrElse(sys.error(
         "vamana_pq_search serves the broadcast regime; beyond maxLocalPoints " +
           "use searchFanout (per-shard codes, same kernel)"))
@@ -61,7 +61,7 @@ object VamanaPq {
       val cb = Quantization.pqTrain(spark, dir)
       val codes = idx.points.map(encode(_, cb))
       (idx, cb, codes)
-    })
+    }
 
   private def encode(v: Array[Float], cb: PqCodebooks): Array[Int] =
     Array.tabulate(cb.m)(s =>
@@ -216,17 +216,15 @@ object VamanaPq {
 
   private def shardPqState(dir: String, shard: Int, idx: LocalIndex): (PqCodebooks, Array[Array[Byte]]) = {
     val fp = idsFingerprint(idx.ids)
-    shardCache.get((dir, shard)) match {
-      // the memo is positional (code row i ↔ idx.points(i)), so a shard
-      // whose membership changed under the same key (an insert/delete
-      // produced a new model but the caller reused the cacheKey) must
-      // re-encode — otherwise new points would score out of bounds and
-      // survivors would read another point's codes. The fingerprint also
-      // catches SAME-SIZE mutations (delete n + insert n under a reused
-      // key), which a bare size check silently serves wrong codes for.
-      case Some((cachedFp, cb, codes)) if cachedFp == fp && codes.length == idx.size =>
-        (cb, codes)
-      case _ =>
+    // the memo is positional (code row i ↔ idx.points(i)), so a shard
+    // whose membership changed under the same key (an insert/delete
+    // produced a new model but the caller reused the cacheKey) must
+    // re-encode — otherwise new points would score out of bounds and
+    // survivors would read another point's codes. The fingerprint also
+    // catches SAME-SIZE mutations (delete n + insert n under a reused
+    // key), which a bare size check silently serves wrong codes for.
+    val (_, cb, codes) =
+      shardCache((dir, shard), st => st._1 == fp && st._3.length == idx.size) {
         val dim = idx.points(0).length
         require(dim % ShardM == 0, s"dim $dim must divide into $ShardM subspaces")
         val subDim = dim / ShardM
@@ -240,10 +238,9 @@ object VamanaPq {
         val cb = PqCodebooks(ShardM, ShardK, subDim, books)
         // k=32 codes fit a BYTE — the cached code rows really are m
         // bytes/vector, the ledger's claim, not m ints
-        val st = (cb, idx.points.map(p => encode(p, cb).map(_.toByte)))
-        shardCache.put((dir, shard), (fp, st._1, st._2))
-        st
-    }
+        (fp, cb, idx.points.map(p => encode(p, cb).map(_.toByte)))
+      }
+    (cb, codes)
   }
 
   /** PQ-guided top-k in the FANOUT regime — the missing half of the

@@ -209,7 +209,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sparse serving broadcasts the query dictionary; every window is keyed; ranks are heap-aggregated") {
-    SparseRetrieval.clearCaches() // force the un-cached end-to-end plan
+    graft.core.Memo.release(SparseRetrieval) // force the un-cached end-to-end plan
     val p = plan(SparseRetrieval.sparseTopk(spark, dir))
     assert(p.contains("BroadcastHashJoin"), s"query dictionary must broadcast:\n$p")
     // the ONLY window is the encode's per-doc pruning — keyed by doc_id, a

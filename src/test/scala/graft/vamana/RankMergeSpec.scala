@@ -32,7 +32,8 @@ class RankMergeSpec extends AnyFunSuite {
   /** Both merges over the same answers, laid out one partition per
     * element of `partitions` (a shard answer set each). */
   private def assertSameMerge(partitions: Seq[Seq[(Long, Long, Double)]], k: Int): Unit = {
-    import spark.implicits._
+    val s = spark
+    import s.implicits._
     val rdd = spark.sparkContext.parallelize(partitions, math.max(1, partitions.length))
       .flatMap(identity)
     val got = ShardCore.rankMerge(spark, rdd, k)

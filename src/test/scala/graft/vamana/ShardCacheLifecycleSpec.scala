@@ -66,7 +66,8 @@ class ShardCacheLifecycleSpec extends AnyFunSuite {
   private def depth(r: RDD[_]): Int = 1 + (r.dependencies.map(d => depth(d.rdd)) :+ 0).max
 
   test("100 insert/delete rounds keep the resident lineage depth bounded") {
-    import spark.implicits._
+    val s = spark
+    import s.implicits._
     val emb = corpus
     val fresh = emb.where(col("vec_id") < 100).as[(Long, Array[Float])].collect().sortBy(_._1)
     var m = VamanaFanout.fit(emb.where(col("vec_id") >= 100), params, numShards = 3)

@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions.col
   * share. */
 object ShardSpecFixture {
 
-  lazy val spark: SparkSession = SparkSession.builder()
+  /** The live session, looked up on each use: a suite may stop and restart
+    * the context (SessionRestartSpec), so no suite keeps an old one. */
+  def spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
