@@ -693,7 +693,7 @@ object StreamingOps {
     * (spec-asserted). Stateless for the streaming engine; scales by input
     * partitions like the raw-vector leg. */
   def streamingVectorSearchPq(queries: DataFrame, index: graft.vamana.LocalIndex,
-      books: graft.operators.Quantization.PqCodebooks, codes: Array[Array[Int]],
+      books: graft.operators.Quantization.PqCodebooks, codes: Array[Array[Byte]],
       k: Int = 10): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._

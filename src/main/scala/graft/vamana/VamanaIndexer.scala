@@ -7,30 +7,27 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed Vamana index build + serving, Spark-first.
+/** Vamana index build into one broadcast [[VamanaModel]], Spark-first.
   *
-  * Build (the expensive part) is distributed: points are assigned to
-  * `numShards` overlapping shards (each point lands in 2 shards so
-  * cross-shard neighborhoods exist), each shard runs
-  * [[VamanaKernel.build]] inside one task, and the per-shard adjacency
-  * lists are merged + re-pruned to R with a distributed join — the
-  * published DiskANN sharded-build recipe, with no shared mutable state
-  * (vs the reference's `omp critical` global graph, vamana.h:266-288).
+  * The model is one [[LocalIndex]] on the driver (n·(dim·4 + R·4) bytes,
+  * ~7.6 GB for 20M points at dim=64/R=32), broadcast once and searched
+  * partition-locally, shuffle-free. [[VamanaIndexer.DefaultMaxLocalPoints]]
+  * bounds it: a larger corpus is refused before anything is collected and
+  * is served by the shard models instead ([[VamanaFanout.fit]],
+  * [[VamanaRouted.fit]]), whose working set per task is one shard.
   *
-  * Serving has two regimes, split by [[VamanaIndexer.DefaultMaxLocalPoints]]:
-  *  - under the threshold the model materializes into one broadcast
-  *    [[LocalIndex]] (n·(dim·4 + R·4) bytes — ~7.6 GB for 20M points at
-  *    dim=64/R=32) and every query is answered shuffle-free;
-  *  - above it NOTHING is collected to the driver: the model stays as
-  *    points/graph DataFrames (the save format) and queries are served by
-  *    shard-fanout search over the per-shard kernels built during fit —
-  *    the working set per task is one shard, at any corpus size.
+  * With `numShards > 1` the build itself is distributed: every point is
+  * assigned to 2 of `numShards` overlapping shards (so cross-shard
+  * neighborhoods exist), each shard runs [[VamanaKernel.build]] inside one
+  * task, and the per-shard adjacency lists are merged + re-pruned to R
+  * with a distributed join — the published DiskANN sharded-build recipe,
+  * with no shared mutable state (vs the reference's `omp critical` global
+  * graph, vamana.h:266-288). Only the merged graph reaches the driver.
   */
 object VamanaIndexer {
 
-  /** Largest point count materialized into a single broadcast [[LocalIndex]].
-    * Above this, `fit` keeps the model distributed (frames + shard fanout)
-    * and never collects the corpus to the driver. */
+  /** Largest point count `fit` collects into one broadcast [[LocalIndex]];
+    * above it, fit a shard model. */
   val DefaultMaxLocalPoints: Long = 20_000_000L
 
   /** metric -> L2 reduction (cos: normalize; ip: MIPS augmentation with the
@@ -52,7 +49,9 @@ object VamanaIndexer {
     }
   }
 
-  /** Fit a Vamana graph over (idCol: LONG, vecCol: array<float>). */
+  /** Fit a Vamana graph over (idCol: LONG, vecCol: array<float>). The
+    * points are counted first: more than `maxLocalPoints` is rejected
+    * before anything is collected. */
   def fit(
       df: DataFrame,
       params: VamanaParams,
@@ -64,69 +63,49 @@ object VamanaIndexer {
     import spark.implicits._
     val pts: Dataset[(Long, Array[Float])] =
       df.select(col(idCol).cast("long"), col(vecCol).cast("array<float>")).as[(Long, Array[Float])]
+    val n = pts.count()
+    require(n <= maxLocalPoints,
+      s"$n points exceed maxLocalPoints=$maxLocalPoints, the most a broadcast VamanaModel " +
+        "collects to the driver; serve this corpus with VamanaFanout.fit or VamanaRouted.fit")
     val (ptsT, kParams) = metricTransform(pts, params)
-    val n = ptsT.count()
-    // A corpus beyond maxLocalPoints must NEVER reach the driver, shards
-    // requested or not: numShards=1 (the default) routes to the sharded
-    // build with enough shards that each (2-of-s overlapped) shard stays
-    // under the threshold.
-    val effShards =
-      if (numShards > 1) numShards
-      else if (n <= maxLocalPoints) 1
-      else math.max(2, math.ceil(2.0 * n / math.max(1L, maxLocalPoints)).toInt)
-
-    if (effShards <= 1) {
-      // single-shard: build on a thread pool — the executor threads are
-      // otherwise idle during a driver-local build. Output is identical
-      // for any parallelism (kernel contract).
-      val collected = ptsT.collect().sortBy(_._1)
-      val par = math.min(Runtime.getRuntime.availableProcessors(), 16)
-      val index = VamanaKernel.buildParallel(collected.map(_._1), collected.map(_._2), kParams, par)
-      new VamanaModel(index, maxLocalPoints)
-    } else {
-      val s = effShards
-      // deterministic 2-of-s overlap assignment per point id, then one
-      // kernel build per shard, kept as resident shard kernels —
-      // reused (a) to extract edges for the global merge and (b) as the
-      // beyond-broadcast fanout serving model. Never collected.
-      val core = ShardCore.fit(ptsT, kParams, HashRouting(s, replicate2 = true), parallelism = 1)
-      val shardIdx = core.shards
-      // union shard edge lists, dedup, then re-prune each merged list to R —
-      // all keyed joins, nothing driver-side
-      val prunedDs = mergeShardGraph(shardIdx, ptsT, params)
-      if (n <= maxLocalPoints) {
-        // gated materialization: the ONLY place the corpus reaches the driver
-        val pruned = prunedDs.collect().toMap
+    val index =
+      if (numShards <= 1) {
+        // single-shard: build on a thread pool — the executor threads are
+        // otherwise idle during a driver-local build. Output is identical
+        // for any parallelism (kernel contract).
+        val collected = ptsT.collect().sortBy(_._1)
+        val par = math.min(Runtime.getRuntime.availableProcessors(), 16)
+        VamanaKernel.buildParallel(collected.map(_._1), collected.map(_._2), kParams, par)
+      } else {
+        val pruned = mergedShardGraph(ptsT, kParams, numShards).collect().toMap
         val collected = ptsT.collect().sortBy(_._1)
         val ids = collected.map(_._1)
         val pos = ids.zipWithIndex.toMap
         val graph = ids.map(id => pruned.getOrElse(id, Array.empty[Long]).flatMap(pos.get(_)))
-        val medoid = VamanaKernel.centroidMedoid(collected.map(_._2))
-        shardIdx.unpersist()
-        new VamanaModel(
-          new LocalIndex(ids, collected.map(_._2), graph, medoid, kParams), maxLocalPoints)
-      } else {
-        // beyond-broadcast: frames for save/export, shard kernels for serving
-        VamanaModel.distributed(
-          ModelFrames(ptsT.toDF("id", "vec"), prunedDs.toDF("id", "neighbors"), kParams),
-          new FanoutModel(core))
+        new LocalIndex(ids, collected.map(_._2), graph,
+          VamanaKernel.centroidMedoid(collected.map(_._2)), kParams)
       }
-    }
+    new VamanaModel(index, maxLocalPoints)
   }
 
-  /** Per-shard adjacency merged into one global external-id graph: union
-    * shard edge lists, dedup, re-prune each merged list to R — all keyed
-    * joins, nothing driver-side. Shared by the sharded fit and the
-    * incremental-insert frame regeneration. */
-  private[vamana] def mergeShardGraph(
-      shardIdx: RDD[(Int, LocalIndex)],
+  /** The sharded build: each point goes to 2 of `s` shards (seeded hash),
+    * one kernel per shard (members sorted by id, seeded by shard id), then
+    * the shard edge lists are unioned, deduped and re-pruned to R per
+    * point — all keyed joins, nothing driver-side. */
+  private def mergedShardGraph(
       ptsT: Dataset[(Long, Array[Float])],
-      params: VamanaParams): Dataset[(Long, Array[Long])] = {
+      kp: VamanaParams,
+      s: Int): Dataset[(Long, Array[Long])] = {
     val spark = ptsT.sparkSession
     import spark.implicits._
-    val shardAdj: Dataset[(Long, Array[Long])] = shardIdx.flatMap { case (_, idx) =>
-      idx.graph.iterator.zipWithIndex.map { case (nbrs, i) => (idx.ids(i), nbrs.map(idx.ids(_))) }
-    }.toDS()
+    val shardAdj: Dataset[(Long, Array[Long])] = ptsT.rdd
+      .flatMap { case (id, vec) => HashRouting.twoShardsOf(id, kp.seed, s).map(sh => (sh, (id, vec))) }
+      .groupByKey(s)
+      .flatMap { case (shard, it) =>
+        val arr = it.toArray.sortBy(_._1)
+        val idx = ShardCore.buildShard(shard, arr.map(_._1), arr.map(_._2), kp)
+        idx.graph.iterator.zipWithIndex.map { case (nbrs, i) => (idx.ids(i), nbrs.map(idx.ids(_))) }
+      }.toDS()
     val merged = shardAdj.groupByKey(_._1)
       .mapGroups { (id, it) => (id, it.flatMap(_._2).toArray.distinct) }
       .toDF("id", "nbrs")
@@ -143,44 +122,10 @@ object VamanaIndexer {
       .map { case (id, pvec, cands) =>
         (id, VamanaKernel.robustPruneVecs(
           pvec, cands.map(_._1), cands.map(_._2),
-          params.alpha, params.maxDegree, params.paperPrune))
+          kp.alpha, kp.maxDegree, kp.paperPrune))
       }
-  }
-
-  /** Nearest-to-centroid medoid over a distributed point set — only scalars
-    * ever reach the driver. Tie-break (lowest id) matches
-    * [[VamanaKernel.centroidMedoid]] over id-sorted points.
-    *
-    * The centroid accumulates in EXACT decimal arithmetic: floats are
-    * exactly representable as BigDecimal and decimal addition is
-    * associative+commutative, so the result is bit-identical under ANY
-    * partitioning — an unordered double reduce would drift with partition
-    * count and break the engine's determinism contract. */
-  private[graft] def distributedMedoidId(points: Dataset[(Long, Array[Float])]): Long = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val (sumVec, cnt) = points.rdd
-      .map { case (_, v) => (v.map(f => new java.math.BigDecimal(f.toDouble)), 1L) }
-      .reduce { (a, b) =>
-        val s = new Array[java.math.BigDecimal](a._1.length)
-        var i = 0
-        while (i < s.length) { s(i) = a._1(i).add(b._1(i)); i += 1 }
-        (s, a._2 + b._2)
-      }
-    val centroid = sumVec.map(x => (x.doubleValue() / cnt).toFloat)
-    val bc = spark.sparkContext.broadcast(centroid)
-    points
-      .map { case (id, v) => (VamanaKernel.l2sq(v, bc.value), id) }
-      .reduce { (a, b) =>
-        if (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)) a else b
-      }._2
   }
 }
-
-/** The beyond-broadcast model frames: (id, vec) points and (id, neighbors)
-  * external-id adjacency, both kernel-space (metric-transformed). This is
-  * the save layout; nothing here is ever collected. */
-final case class ModelFrames(points: DataFrame, graph: DataFrame, params: VamanaParams)
 
 /** A fitted shard-fanout serving model: hash-routed shards over the
   * [[ShardCore]] (one resident [[LocalIndex]] per shard, built exactly
@@ -199,9 +144,8 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
   def params: VamanaParams = core.params
 
   /** See [[HashRouting]]: the fit-time shard count (insert routing
-    * modulus) and whether the fit placed each point in two shards. */
+    * modulus). */
   private[vamana] def numShardsFit: Int = core.routing.numShards
-  private[vamana] def replicate2: Boolean = core.routing.replicate2
 
   /** Batch ANN top-k (same output shape as [[VamanaModel.search]]). Calling
     * it twice runs ZERO graph builds the second time (spec-asserted) — the
@@ -230,8 +174,7 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
   /** Range (radius) query on the fanout path — the serving regime where
     * range search is embarrassingly parallel: radius membership is a
     * GLOBAL predicate, so each shard's in-range set is exactly the global
-    * answer restricted to that shard and the merge is a plain union (the
-    * replicate2 layout may answer a point twice → dedup by min dist). No
+    * answer restricted to that shard and the merge is a plain union. No
     * top-k cut and no rank merge — unlike kNN, shards cannot disagree
     * about membership, so a full-beam per-shard answer makes the union
     * provably the exact global range set (the fanout range gate's
@@ -295,15 +238,14 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
         deny, k, queryIdCol, queryVecCol, fullBeam)
     } else searchIdFiltered(queries, ids, deny, k, queryIdCol, queryVecCol, fullBeam)
 
-  /** Live external-id count of the fitted index (distributed; the 2-of-s
-    * replicated fit counts distinct ids, not shard rows). Memoized — the
-    * adaptive filtered path reads it once per model. */
-  lazy val totalPoints: Long = if (replicate2) idsDF.count() else core.storedPoints
+  /** Live external-id count of the fitted index (distributed; each point
+    * lives in one shard). Memoized — the adaptive filtered path reads it
+    * once per model. */
+  lazy val totalPoints: Long = core.storedPoints
 
   /** All external ids in the fitted index as a distributed one-column
     * frame `id` — the complement side of the adaptive filtered path. */
-  private[vamana] def idsDF: DataFrame =
-    if (replicate2) core.idsDF.distinct() else core.idsDF
+  private[vamana] def idsDF: DataFrame = core.idsDF
 
   /** M3 search-stats on the SHARDED layout — [[VamanaModel.searchStats]]'s
     * scatter-gather twin: every probed shard's kernel reports its own
@@ -463,8 +405,7 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
 
   /** Distributed incremental insert — the daily-embedding-batch shape at
     * 100 TB: new points are routed by the FIT-TIME shard count and seeded
-    * hash (with the fit's 2-of-s replication when the fit overlapped
-    * shards), each shard kernel runs [[VamanaKernel.insert]] partition-
+    * hash, each shard kernel runs [[VamanaKernel.insert]] partition-
     * locally (zero full rebuilds, spec-gated), and the result is a new
     * fitted model; this model keeps serving unchanged. A batch routed to a
     * shard whose row no longer exists (its whole membership was deleted)
@@ -481,8 +422,7 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
   def shardSizes: Array[Int] = core.shardSizes
 
   /** Shard-size REBALANCE for long-running mutation streams: hash routing
-    * keeps expected sizes even, but a skewed insert stream (every batch
-    * replicated 2-of-s lands some shards hotter) or full-membership
+    * keeps expected sizes even, but a skewed insert stream or full-membership
     * deletes can leave one shard far larger than its peers — and the
     * full-beam serving cost of a shard is quadratic in its size, so one
     * outsized shard dominates every query's tail latency. Each pass
@@ -538,7 +478,7 @@ final class FanoutModel private[vamana] (private[vamana] val core: ShardCore[Has
     * external-id adjacency + per-shard medoid/seed) plus a one-row global
     * params file. Written straight from the shard dataset — distributed. */
   def save(path: String): Unit =
-    core.save(path, Seq("num_shards" -> lit(numShardsFit), "replicate2" -> lit(replicate2)))
+    core.save(path, Seq("num_shards" -> lit(numShardsFit)))
 }
 
 object FanoutModel {
@@ -561,13 +501,13 @@ object FanoutModel {
     * per-query I/O. */
   def load(spark: SparkSession, path: String): FanoutModel = {
     val (params, row) = ShardCore.readParams(spark, path)
-    // num_shards/replicate2 entered the params schema after the first
-    // checkpoint format shipped; older saves lack them, so fall back to
-    // the observable shard count / non-replicated rather than failing.
+    // num_shards entered the params schema after the first checkpoint
+    // format shipped; older saves lack it, so fall back to the observable
+    // shard count rather than failing. A `replicate2` column in older
+    // saves is ignored: every fanout model holds each point in one shard.
     val numShards = ShardCore.paramOr(row, "num_shards",
       spark.read.parquet(s"$path/shards").select(col("shard")).distinct().count().toInt)
-    new FanoutModel(ShardCore.load(spark, path, params,
-      HashRouting(numShards, ShardCore.paramOr(row, "replicate2", false))))
+    new FanoutModel(ShardCore.load(spark, path, params, HashRouting(numShards)))
   }
 }
 
@@ -591,180 +531,120 @@ object VamanaFanout {
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .as[(Long, Array[Float])]
     val (ptsT, kParams) = VamanaIndexer.metricTransform(pts, params)
-    new FanoutModel(ShardCore.fit(ptsT, kParams, HashRouting(numShards, replicate2 = false),
+    new FanoutModel(ShardCore.fit(ptsT, kParams, HashRouting(numShards),
       ShardCore.threadsPerShard(numShards)))
   }
 }
 
-/** A fitted Vamana index. Under the size threshold it wraps a broadcastable
-  * [[LocalIndex]] (shuffle-free serving); above it, the model stays as
-  * distributed frames and serving routes to the shard-fanout path. Persists
-  * ALL params including efSearch — the reference forgets it on save/load,
-  * leaving search width uninitialized (vamana.h:397-405, 62-68;
-  * SURVEY.md Appendix A.1). */
-final class VamanaModel private (
-    private val localOpt: Option[LocalIndex],
-    private val framesOpt: Option[ModelFrames],
-    private val fanoutOpt: Option[FanoutModel],
+/** A fitted broadcast Vamana index: one driver-side [[LocalIndex]],
+  * broadcast by the first search that needs it and searched
+  * partition-locally, shuffle-free. Persists ALL params including
+  * efSearch — the reference forgets it on save/load, leaving search width
+  * uninitialized (vamana.h:397-405, 62-68; SURVEY.md Appendix A.1). */
+final class VamanaModel(
+    val index: LocalIndex,
     /** Broadcast threshold the FIT was called with — the growth gate for
-      * local inserts. A custom-threshold fit gets a matching insert gate,
+      * inserts and merges. A custom-threshold fit gets a matching gate,
       * not the library default. */
-    private val maxLocalPoints: Long) extends Serializable {
+    private val maxLocalPoints: Long = VamanaIndexer.DefaultMaxLocalPoints) extends Serializable {
 
-  def this(index: LocalIndex) = this(Some(index), None, None, VamanaIndexer.DefaultMaxLocalPoints)
-
-  def this(index: LocalIndex, maxLocalPoints: Long) =
-    this(Some(index), None, None, maxLocalPoints)
-
-  /** True when the model never materialized a driver-side index. */
-  def isDistributed: Boolean = localOpt.isEmpty
-
-  /** The broadcastable kernel, when this model holds one — package-private
-    * so [[VamanaOps]] can re-parameterize the SAME fitted graph (e.g. a
-    * full-beam exactness gate) without a refit. */
-  private[vamana] def localIndex: Option[LocalIndex] = localOpt
-
-  /** Kernel-space params — available without materializing anything, for
-    * local and distributed models alike. */
-  def params: VamanaParams = localOpt.map(_.params).getOrElse(framesOpt.get.params)
+  /** Kernel-space params. */
+  def params: VamanaParams = index.params
 
   /** The broadcast of the local index and the context it belongs to, made
     * by the first search form that needs it and reused by every later one
     * until [[unpersist]]. */
   @transient private var shipped: (SparkContext, Broadcast[LocalIndex]) = _
 
-  private def broadcastIndex(spark: SparkSession, idx: LocalIndex): Broadcast[LocalIndex] = synchronized {
+  private def broadcastIndex(spark: SparkSession): Broadcast[LocalIndex] = synchronized {
     val sc = spark.sparkContext
-    if (shipped == null || (shipped._1 ne sc)) shipped = (sc, sc.broadcast(idx))
+    if (shipped == null || (shipped._1 ne sc)) shipped = (sc, sc.broadcast(index))
     shipped._2
   }
 
   /** Id of the index broadcast this model holds now, if any. */
   private[vamana] def broadcastId: Option[Long] = synchronized(Option(shipped).map(_._2.id))
 
-  /** Release any cached state the model holds: a distributed model's
-    * resident fanout shard kernels, which its frames are also read from,
-    * and a local model's index broadcast. The broadcast is unpersisted,
-    * not destroyed: executors drop their copies, frames already returned
-    * still collect (executors fetch the index again), and the next search
-    * broadcasts anew. */
-  def unpersist(): Unit = {
-    fanoutOpt.foreach(_.unpersist())
-    synchronized {
-      if (shipped != null) {
-        if (!shipped._1.isStopped) shipped._2.unpersist()
-        shipped = null
-      }
+  /** Release the index broadcast. It is unpersisted, not destroyed:
+    * executors drop their copies, frames already returned still collect
+    * (executors fetch the index again), and the next search broadcasts
+    * anew. */
+  def unpersist(): Unit = synchronized {
+    if (shipped != null) {
+      if (!shipped._1.isStopped) shipped._2.unpersist()
+      shipped = null
     }
   }
 
+  /** The maxLocalPoints guard of [[insert]] and [[merge]]. */
+  private def requireFits(n: Long, what: String): Unit =
+    require(n <= maxLocalPoints,
+      s"$what would grow the local index beyond maxLocalPoints; " +
+        "serve it with VamanaFanout.fit or VamanaRouted.fit")
+
   /** Incremental insert (FreshDiskANN semantics — the reference can only
-    * rebuild): returns a NEW model containing the batch; this model keeps
-    * serving unchanged. Local models insert into a copy of the kernel
-    * (driver-resident by definition); distributed models route to the
-    * shard-local [[FanoutModel.insert]]. */
+    * rebuild): returns a NEW model containing the batch, inserted into a
+    * copy of the kernel; this model keeps serving unchanged. */
   def insert(newPoints: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): VamanaModel = localOpt match {
-    case None =>
-      val f = fanoutOpt.get.insert(newPoints, idCol, vecCol)
-      // a save() of the new model must include the batch
-      val spark = newPoints.sparkSession
-      import spark.implicits._
-      val old = framesOpt.get
-      val pts = newPoints
-        .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-        .as[(Long, Array[Float])]
-      val (batchT, _) = VamanaIndexer.metricTransform(pts, old.params)
-      VamanaModel.regenerated(old.points.union(batchT.toDF("id", "vec")), f, old.params)
-    case Some(idx) =>
-      require(idx.params.metric != "ip",
-        "incremental insert is not defined for metric=ip (fit-time norm augmentation); refit instead")
-      val spark = newPoints.sparkSession
-      import spark.implicits._
-      val pts = newPoints
-        .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-        .as[(Long, Array[Float])]
-      // the grown index must stay under the broadcast threshold the fit was
-      // called with — beyond it the model should have been (re)fit
-      // distributed in the first place
-      require(idx.size + pts.count() <= maxLocalPoints,
-        "insert would grow the local index beyond maxLocalPoints; refit with shards " +
-          "or serve via a fanout model")
-      val (ptsT, _) = VamanaIndexer.metricTransform(pts, idx.params)
-      val batch = ptsT.collect().sortBy(_._1)
-      new VamanaModel(VamanaKernel.insert(idx, batch.map(_._1), batch.map(_._2)), maxLocalPoints)
+      vecCol: String = "embedding"): VamanaModel = {
+    require(params.metric != "ip",
+      "incremental insert is not defined for metric=ip (fit-time norm augmentation); refit instead")
+    val spark = newPoints.sparkSession
+    import spark.implicits._
+    val pts = newPoints
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+      .as[(Long, Array[Float])]
+    // the grown index must stay under the broadcast threshold the fit was
+    // called with
+    requireFits(index.size + pts.count(), "insert")
+    val (ptsT, _) = VamanaIndexer.metricTransform(pts, params)
+    val batch = ptsT.collect().sortBy(_._1)
+    new VamanaModel(VamanaKernel.insert(index, batch.map(_._1), batch.map(_._2)), maxLocalPoints)
   }
 
   /** Merge another fitted model into this one (DiskANN shard-graph merge
     * — daily builds folding into the serving index without a rebuild;
     * see [[VamanaKernel.merge]] for the algorithm and its provenance).
-    * Broadcast-scale models only: at fanout scale a merge IS a shard
-    * union — route new shards through [[FanoutModel.insert]] +
-    * [[FanoutModel.rebalance]] instead. Not defined for metric=ip: the
-    * two fits augmented with DIFFERENT max-norm constants, so their
-    * kernel spaces differ — refit. Copy-on-write: both inputs keep
-    * serving. */
-  def merge(other: VamanaModel): VamanaModel = (localOpt, other.localIndex) match {
-    case (Some(idx), Some(oidx)) =>
-      require(idx.params.metric != "ip" && oidx.params.metric != "ip",
-        "merge is not defined for metric=ip (per-fit norm augmentation); refit instead")
-      require(idx.size + oidx.size <= maxLocalPoints,
-        "merge would grow the local index beyond maxLocalPoints; refit with shards " +
-          "or serve via a fanout model")
-      new VamanaModel(VamanaKernel.merge(idx, oidx), maxLocalPoints)
-    case (None, None) =>
-      // fanout × fanout: shard-union merge + regenerated save-time frames
-      val f = fanoutOpt.get.merge(other.fanoutOpt.get)
-      val old = framesOpt.get
-      VamanaModel.regenerated(old.points.union(other.framesOpt.get.points), f, old.params)
-    case _ => throw new IllegalStateException(
-      "merge requires both models in the same regime (both broadcast or both fanout); " +
-        "refit the smaller side, or insert its points instead")
+    * At shard scale a merge IS a shard union: [[FanoutModel.merge]]. Not
+    * defined for metric=ip: the two fits augmented with DIFFERENT
+    * max-norm constants, so their kernel spaces differ — refit.
+    * Copy-on-write: both inputs keep serving. */
+  def merge(other: VamanaModel): VamanaModel = {
+    require(params.metric != "ip" && other.params.metric != "ip",
+      "merge is not defined for metric=ip (per-fit norm augmentation); refit instead")
+    requireFits(index.size + other.index.size, "merge")
+    new VamanaModel(VamanaKernel.merge(index, other.index), maxLocalPoints)
   }
 
   /** Delete by external id (FreshDiskANN semantics — the reference has no
     * delete at all): copy-on-write like [[insert]]; this model keeps
-    * serving. Distributed models delete shard-locally and regenerate the
-    * save-time frames from the surviving shards. */
-  def delete(deleteIds: Array[Long]): VamanaModel = localOpt match {
-    case Some(idx) => new VamanaModel(VamanaKernel.delete(idx, deleteIds), maxLocalPoints)
-    case None =>
-      val f = fanoutOpt.get.delete(deleteIds)
-      val old = framesOpt.get
-      VamanaModel.regenerated(
-        old.points.where(!col("id").isInCollection(deleteIds.toSeq)), f, old.params)
-  }
-
-  def index: LocalIndex = localOpt.getOrElse(throw new IllegalStateException(
-    "model exceeds maxLocalPoints and was never collected to the driver; " +
-      "serve via search() (fanout) or save() the frames"))
+    * serving. */
+  def delete(deleteIds: Array[Long]): VamanaModel =
+    new VamanaModel(VamanaKernel.delete(index, deleteIds), maxLocalPoints)
 
   /** Batch ANN top-k: search per query partition-local against the index,
     * broadcast once per model and reused by every later call and search
     * form until [[unpersist]] — no shuffle at all; output shape matches
-    * [[graft.operators.Knn.knnExact]] so recall joins line up. Distributed
-    * models route to fanout serving. */
+    * [[graft.operators.Knn.knnExact]] so recall joins line up. */
   def search(
       queries: DataFrame,
       k: Int,
       queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = localOpt match {
-    case None => fanoutOpt.get.search(queries, k, queryIdCol, queryVecCol)
-    case Some(idx) =>
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val bc = broadcastIndex(spark, idx)
-      queries
-        .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (qid, qvec) =>
-          val q = MetricReduction.prepareQuery(qvec, bc.value.params.metric)
-          VamanaKernel.search(bc.value, q, k).iterator.zipWithIndex.map {
-            case ((id, dist), r) =>
-              (qid, (r + 1).toLong, id, math.rint(dist.toDouble * 1e4) / 1e4)
-          }
+      queryVecCol: String = "query_vec"): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val bc = broadcastIndex(spark)
+    queries
+      .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
+      .as[(Long, Array[Float])]
+      .flatMap { case (qid, qvec) =>
+        val q = MetricReduction.prepareQuery(qvec, bc.value.params.metric)
+        VamanaKernel.search(bc.value, q, k).iterator.zipWithIndex.map {
+          case ((id, dist), r) =>
+            (qid, (r + 1).toLong, id, math.rint(dist.toDouble * 1e4) / 1e4)
         }
-        .toDF("query_id", "rank", "id", "dist")
+      }
+      .toDF("query_id", "rank", "id", "dist")
   }
 
   /** M3 search-stats observability (the surface the reference stubs at
@@ -776,19 +656,17 @@ final class VamanaModel private (
     * the serving path, not an instrumented twin). This is the
     * capacity-planning observable a serving operator reads first: avg
     * comps × corpus scaling says when to shard, avg hops says what a
-    * disk layout would pay per query. Broadcast-scale models only — a
-    * fanout model's per-shard stats are the per-shard kernels' numbers. */
+    * disk layout would pay per query. A shard model reports per shard:
+    * [[FanoutModel.searchStats]]. */
   def searchStats(
       queries: DataFrame,
       k: Int,
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec",
       beamOverride: Int = 0): DataFrame = {
-    val idx = localOpt.getOrElse(throw new IllegalStateException(
-      "searchStats reads the broadcast kernel; distributed models report per shard"))
     val spark = queries.sparkSession
     import spark.implicits._
-    val bc = broadcastIndex(spark, idx)
+    val bc = broadcastIndex(spark)
     val bo = beamOverride
     queries
       .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
@@ -804,33 +682,30 @@ final class VamanaModel private (
 
   /** Range (radius) query: every stored point within squared-L2 `radiusSq`
     * of each query — [[VamanaKernel.rangeSearch]]'s escalating-beam
-    * traversal per partition against the broadcast index (no shuffle);
-    * distributed models route to the shard-union path
-    * ([[FanoutModel.rangeSearch]]). Output (query_id, id, dist) ascending
-    * by id within query — id-ordered, not rank-ordered, because a range
-    * result is a SET (its size is data-dependent, not a parameter). */
+    * traversal per partition against the broadcast index (no shuffle).
+    * Output (query_id, id, dist) ascending by id within query —
+    * id-ordered, not rank-ordered, because a range result is a SET (its
+    * size is data-dependent, not a parameter). */
   def rangeSearch(
       queries: DataFrame,
       radiusSq: Double,
       queryIdCol: String = "query_id",
-      queryVecCol: String = "query_vec"): DataFrame = localOpt match {
-    case None => fanoutOpt.get.rangeSearch(queries, radiusSq, queryIdCol, queryVecCol)
-    case Some(idx) =>
-      require(idx.params.metric == "l2", "range radius is a squared-L2 bound; fit with metric=l2")
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val bc = broadcastIndex(spark, idx)
-      val r = radiusSq.toFloat
-      queries
-        .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (qid, qvec) =>
-          VamanaKernel.rangeSearch(bc.value, qvec, r).iterator.map {
-            case (id, dist) => (qid, id, math.rint(dist.toDouble * 1e4) / 1e4)
-          }
+      queryVecCol: String = "query_vec"): DataFrame = {
+    require(params.metric == "l2", "range radius is a squared-L2 bound; fit with metric=l2")
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val bc = broadcastIndex(spark)
+    val r = radiusSq.toFloat
+    queries
+      .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
+      .as[(Long, Array[Float])]
+      .flatMap { case (qid, qvec) =>
+        VamanaKernel.rangeSearch(bc.value, qvec, r).iterator.map {
+          case (id, dist) => (qid, id, math.rint(dist.toDouble * 1e4) / 1e4)
         }
-        .toDF("query_id", "id", "dist")
-        .orderBy(col("query_id"), col("id"))
+      }
+      .toDF("query_id", "id", "dist")
+      .orderBy(col("query_id"), col("id"))
   }
 
   /** Q2 semantics (vamana.h:426-489): search starting from the stored point
@@ -840,109 +715,59 @@ final class VamanaModel private (
       k: Int,
       queryIdCol: String = "query_id",
       queryVecCol: String = "query_vec",
-      startVecCol: String = "start_vec"): DataFrame = localOpt match {
-    case None => fanoutOpt.get.searchWithStartPoint(queries, k, queryIdCol, queryVecCol, startVecCol)
-    case Some(idx) =>
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val bc = broadcastIndex(spark, idx)
-      queries
-        .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"),
-          col(startVecCol).cast("array<float>"))
-        .as[(Long, Array[Float], Array[Float])]
-        .flatMap { case (qid, qvec, svec) =>
-          val m = bc.value.params.metric
-          VamanaKernel.searchWithStartPoint(bc.value,
-            MetricReduction.prepareQuery(svec, m), MetricReduction.prepareQuery(qvec, m), k
-          ).iterator.zipWithIndex.map {
-            case ((id, dist), r) =>
-              (qid, (r + 1).toLong, id, math.rint(dist.toDouble * 1e4) / 1e4)
-          }
+      startVecCol: String = "start_vec"): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val bc = broadcastIndex(spark)
+    queries
+      .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"),
+        col(startVecCol).cast("array<float>"))
+      .as[(Long, Array[Float], Array[Float])]
+      .flatMap { case (qid, qvec, svec) =>
+        val m = bc.value.params.metric
+        VamanaKernel.searchWithStartPoint(bc.value,
+          MetricReduction.prepareQuery(svec, m), MetricReduction.prepareQuery(qvec, m), k
+        ).iterator.zipWithIndex.map {
+          case ((id, dist), r) =>
+            (qid, (r + 1).toLong, id, math.rint(dist.toDouble * 1e4) / 1e4)
         }
-        .toDF("query_id", "rank", "id", "dist")
+      }
+      .toDF("query_id", "rank", "id", "dist")
   }
 
   /** Point lookup by internal position — GetPoint (vamana.h:549-555). */
   def getPoint(pos: Int): Array[Float] = index.points(pos)
 
-  /** Introspection (M1, vamana.h:41-53): one-row DataFrame of all params.
-    * For a distributed model the medoid position is computed with two
-    * aggregate jobs (centroid argmin + id rank) — still no collect. */
-  def describe(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val (p, medoidPos, n) = localOpt match {
-      case Some(idx) => (idx.params, idx.medoid, idx.size.toLong)
-      case None =>
-        val f = framesOpt.get
-        val pts = f.points.select(col("id").cast("long"), col("vec").cast("array<float>"))
-          .as[(Long, Array[Float])]
-        val medoidId = VamanaIndexer.distributedMedoidId(pts)
-        val medoidPos = pts.filter(_._1 < medoidId).count().toInt
-        (f.params, medoidPos, f.points.count())
-    }
-    ShardCore.paramsFrame(spark, p)
-      .withColumn("medoid_pos", lit(medoidPos))
-      .withColumn("data_size", lit(n))
+  /** Introspection (M1, vamana.h:41-53): one-row DataFrame of all params. */
+  def describe(spark: SparkSession): DataFrame =
+    ShardCore.paramsFrame(spark, params)
+      .withColumn("medoid_pos", lit(index.medoid))
+      .withColumn("data_size", lit(index.size.toLong))
       .withColumn("max_local_points", lit(maxLocalPoints))
-  }
 
-  /** (pos, id, vec) for a distributed model with pos = 0-based rank of id,
-    * assigned distributively: a range sort by id, then `RDD.zipWithIndex`
-    * (per-partition counts + broadcast offsets — one extra count job). The
-    * round-2 shape was `row_number` over a global no-partition window, which
-    * funnels the whole corpus through ONE task; this never does. */
-  private def indexedPoints(spark: SparkSession): DataFrame = {
+  def pointsDF(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    framesOpt.get.points
-      .select(col("id").cast("long"), col("vec").cast("array<float>"))
-      .as[(Long, Array[Float])]
-      .orderBy(col("id"))
-      .rdd.zipWithIndex
-      .map { case ((id, vec), i) => (i.toInt, id, vec) }
+    index.ids.zipWithIndex.map { case (id, pos) => (pos, id, index.points(pos)) }.toSeq
       .toDF("pos", "id", "vec")
   }
 
-  def pointsDF(spark: SparkSession): DataFrame = localOpt match {
-    case Some(idx) =>
-      import spark.implicits._
-      idx.ids.zipWithIndex.map { case (id, pos) => (pos, id, idx.points(pos)) }.toSeq
-        .toDF("pos", "id", "vec")
-    case None => indexedPoints(spark)
+  def graphDF(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    index.graph.zipWithIndex.map { case (nbrs, pos) =>
+      (pos, index.ids(pos), nbrs.map(index.ids(_)))
+    }.toSeq.toDF("pos", "id", "neighbors")
   }
 
-  def graphDF(spark: SparkSession): DataFrame = localOpt match {
-    case Some(idx) =>
-      import spark.implicits._
-      idx.graph.zipWithIndex.map { case (nbrs, pos) =>
-        (pos, idx.ids(pos), nbrs.map(idx.ids(_)))
-      }.toSeq.toDF("pos", "id", "neighbors")
-    case None =>
-      val posOf = indexedPoints(spark).select(col("pos"), col("id"))
-      // left join from points: every pos gets a row even if the merge left a
-      // node edgeless — a dropped row would shift positions on load
-      posOf.join(framesOpt.get.graph, Seq("id"), "left")
-        .select(col("pos"), col("id"),
-          coalesce(col("neighbors"), array().cast("array<bigint>")).as("neighbors"))
-  }
-
-  /** S3 (save, vamana.h:390-424): parquet points + graph + one-row params.
-    * Local models coalesce to one file; distributed models write straight
-    * from the frames — `pos` is assigned by a distributed range sort +
-    * zipWithIndex, never a single-task global window. */
+  /** S3 (save, vamana.h:390-424): parquet points + graph + one-row params,
+    * one file each. */
   def save(spark: SparkSession, path: String): Unit = {
     // three independent write jobs (points / graph / params) — run them
     // concurrently so the single-task legs overlap instead of serializing
     // (the format_roundtrip lesson, guide §2.6)
-    val legs: Seq[() => Unit] = localOpt match {
-      case Some(_) => Seq(
-        () => pointsDF(spark).repartition(1).write.mode("overwrite").parquet(s"$path/points"),
-        () => graphDF(spark).repartition(1).write.mode("overwrite").parquet(s"$path/graph"),
-        () => describe(spark).repartition(1).write.mode("overwrite").parquet(s"$path/params"))
-      case None => Seq(
-        () => pointsDF(spark).write.mode("overwrite").parquet(s"$path/points"),
-        () => graphDF(spark).write.mode("overwrite").parquet(s"$path/graph"),
-        () => describe(spark).repartition(1).write.mode("overwrite").parquet(s"$path/params"))
-    }
+    val legs: Seq[(String, () => DataFrame)] = Seq(
+      "points" -> (() => pointsDF(spark)),
+      "graph" -> (() => graphDF(spark)),
+      "params" -> (() => describe(spark)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(legs.size)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -954,10 +779,11 @@ final class VamanaModel private (
     // with live writers.
     val groupId = s"vamana-save-${java.util.UUID.randomUUID()}"
     try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(legs.map(l => scala.concurrent.Future {
+      scala.concurrent.Future.sequence(legs.map { case (name, frame) => scala.concurrent.Future {
         spark.sparkContext.setJobGroup(groupId, s"vamana save $path", interruptOnCancel = true)
-        try l() finally spark.sparkContext.clearJobGroup()
-      })),
+        try frame().repartition(1).write.mode("overwrite").parquet(s"$path/$name")
+        finally spark.sparkContext.clearJobGroup()
+      }}),
       scala.concurrent.duration.Duration.Inf)
     catch {
       case t: Throwable =>
@@ -972,25 +798,11 @@ final class VamanaModel private (
 
 object VamanaModel {
 
-  private[vamana] def distributed(frames: ModelFrames, fanout: FanoutModel): VamanaModel =
-    new VamanaModel(None, Some(frames), Some(fanout), VamanaIndexer.DefaultMaxLocalPoints)
-
-  /** A distributed model over the mutated shards `f`, its save-time frames
-    * regenerated lazily from `points` (id, vec; kernel space) and `f`. */
-  private def regenerated(points: DataFrame, f: FanoutModel, params: VamanaParams): VamanaModel = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val pts = points.select(col("id").cast("long"), col("vec").cast("array<float>"))
-      .as[(Long, Array[Float])]
-    distributed(ModelFrames(pts.toDF("id", "vec"),
-      VamanaIndexer.mergeShardGraph(f.shards, pts, params).toDF("id", "neighbors"), params), f)
-  }
-
   /** S2 (load, vamana.h:55-96): restore points/graph/params from parquet
     * into a broadcastable LocalIndex. Internal positions are persisted
     * explicitly, so the medoid and graph indices survive the roundtrip
-    * exactly. (Beyond broadcast scale, persistence lives on the fanout
-    * path: [[FanoutModel.load]] never materializes a single index.) */
+    * exactly. (Beyond broadcast scale, persistence lives on the shard
+    * models: [[FanoutModel.load]] never materializes a single index.) */
   def load(spark: SparkSession, path: String): VamanaModel = {
     import spark.implicits._
     val (params, p) = ShardCore.readParams(spark, path)

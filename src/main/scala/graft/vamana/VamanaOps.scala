@@ -276,12 +276,7 @@ object VamanaOps {
   private val fullBeamCache = Memo[Key, VamanaModel](this, _.unpersist())
 
   private def fullBeamModel(spark: SparkSession, dir: String): VamanaModel =
-    fullBeamCache((spark, dir)) {
-      val idx = model(spark, dir).localIndex.getOrElse(sys.error(
-        "vamana_search_overlap is a broadcast-scale exactness gate; " +
-          "distributed models are recall-gated by vamana_recall instead"))
-      new VamanaModel(idx.withFullBeam)
-    }
+    fullBeamCache((spark, dir))(new VamanaModel(model(spark, dir).index.withFullBeam))
 
   /** Hash-checked serving-path gate: per-query OVERLAP between the graph
     * search at full beam and exact kNN, over the same 10-query fixture as
@@ -1154,8 +1149,7 @@ object VamanaOps {
   }
 
   /** The check itself aggregates the model's graph FRAME — `max(size(
-    * neighbors))` over graphDF — so it works unchanged for beyond-broadcast
-    * models that can never materialize `.index` on the driver. */
+    * neighbors))` over graphDF. */
   def degreeCheckOf(spark: SparkSession, m: VamanaModel): DataFrame = {
     val r = m.params.maxDegree
     m.graphDF(spark)

@@ -32,7 +32,7 @@ object VamanaPq {
     * per stored point (positional, parallel to `idx.points`). Released by
     * [[clearCaches]]. */
   private val cache =
-    Memo[(SparkSession, String), (LocalIndex, PqCodebooks, Array[Array[Int]])](this)
+    Memo[(SparkSession, String), (LocalIndex, PqCodebooks, Array[Array[Byte]])](this)
 
   /** FANOUT-regime serving state, memoized per (dataset, shard) in the
     * executor JVM: codebooks trained on the SHARD'S OWN points (bounded
@@ -46,11 +46,9 @@ object VamanaPq {
   /** Release both memos (the broadcast-regime state and the shard codes). */
   def clearCaches(): Unit = Memo.release(this)
 
-  private def pqState(spark: SparkSession, dir: String): (LocalIndex, PqCodebooks, Array[Array[Int]]) =
+  private def pqState(spark: SparkSession, dir: String): (LocalIndex, PqCodebooks, Array[Array[Byte]]) =
     cache((spark, dir)) {
-      val idx = VamanaOps.model(spark, dir).localIndex.getOrElse(sys.error(
-        "vamana_pq_search serves the broadcast regime; beyond maxLocalPoints " +
-          "use searchFanout (per-shard codes, same kernel)"))
+      val idx = VamanaOps.model(spark, dir).index
       // the codebooks are trained on RAW embeddings and search() reranks
       // with the RAW query — both only match idx.points under the identity
       // (l2) reduction. A cos/ip index would need prepareQuery + codebooks
@@ -59,14 +57,17 @@ object VamanaPq {
         s"PQ-guided serving assumes the l2 (identity) reduction; index metric " +
           s"is '${idx.params.metric}' — train codebooks on the transformed points instead")
       val cb = Quantization.pqTrain(spark, dir)
-      val codes = idx.points.map(encode(_, cb))
-      (idx, cb, codes)
+      (idx, cb, encode(idx.points, cb))
     }
 
-  private def encode(v: Array[Float], cb: PqCodebooks): Array[Int] =
-    Array.tabulate(cb.m)(s =>
+  /** One m-byte code row per point: the nearest centroid of each
+    * subspace. A code is a signed byte, so at most 128 centroids. */
+  private def encode(points: Array[Array[Float]], cb: PqCodebooks): Array[Array[Byte]] = {
+    require(cb.k <= 128, s"${cb.k} centroids per subspace do not fit a byte code")
+    points.map(v => Array.tabulate(cb.m)(s =>
       Quantization.nearest(java.util.Arrays.copyOfRange(v, s * cb.subDim, (s + 1) * cb.subDim),
-        cb.books(s)))
+        cb.books(s)).toByte))
+  }
 
   /** Per-query ADC lookup table: lut(s)(c) = ||query_sub − centroid||², float
     * accumulate to match the kernel's l2sq discipline. */
@@ -87,38 +88,19 @@ object VamanaPq {
     * query ([[search]]) and the ingest-side streaming twin
     * ([[graft.streaming.StreamingOps.streamingVectorSearchPq]]), so the
     * two cannot drift (bit-identity spec-asserted, the streaming family's
-    * deployment rule): ADC traversal over the m-byte codes, exact rerank
-    * of the visited pool, (dist, id)-tie-broken top-k. */
+    * deployment rule): [[shardTopK]] over the whole index, distances
+    * rounded to 4 places. */
   private[graft] def topkPq(index: LocalIndex, books: PqCodebooks,
-      cds: Array[Array[Int]], qv: Array[Float], k: Int,
-      fullBeam: Boolean): IndexedSeq[(Long, Double)] = {
-    val lut = adcLut(qv, books)
-    val m = books.m
-    val score: Int => Float = { node =>
-      val row = cds(node)
-      var d = 0.0f
-      var s = 0
-      while (s < m) { d += lut(s)(row(s)); s += 1 }
-      d
-    }
-    rerankTopK(index, score, qv, k, fullBeam, VamanaKernel.AnyId)
+      cds: Array[Array[Byte]], qv: Array[Float], k: Int,
+      fullBeam: Boolean): IndexedSeq[(Long, Double)] =
+    shardTopK(index, books, cds, qv, k, fullBeam, VamanaKernel.AnyId)
       .map { case (id, d) => (id, math.rint(d * 1e4) / 1e4) }
       .toIndexedSeq
-  }
 
-  /** ADC traversal over one index (the broadcast index or one shard),
-    * exact rerank of the visited pool, then the kernel's top-k step over
-    * the allowed ids ([[VamanaKernel.rerankTopK]]) — the per-index body of
-    * every PQ search path. */
-  private def rerankTopK(idx: LocalIndex, score: Int => Float, qv: Array[Float], k: Int,
-      fullBeam: Boolean, allowed: Long => Boolean): Array[(Long, Float)] = {
-    val kk = math.min(k, idx.size)
-    val beamL = if (fullBeam) idx.size else math.max(idx.params.efSearch, kk)
-    VamanaKernel.rerankTopK(idx, score, beamL, qv, kk, allowed)
-  }
-
-  /** One shard's top-k for one query: ADC scores over the shard's m-byte
-    * code rows, then [[rerankTopK]]. */
+  /** The per-index body of every PQ search path, over the broadcast
+    * index or one shard: ADC traversal over its m-byte code rows, exact
+    * rerank of the visited pool, then the kernel's top-k step over the
+    * allowed ids ([[VamanaKernel.rerankTopK]]). */
   private def shardTopK(idx: LocalIndex, cb: PqCodebooks, codes: Array[Array[Byte]],
       qv: Array[Float], k: Int, fullBeam: Boolean,
       allowed: Long => Boolean): Array[(Long, Float)] = {
@@ -131,14 +113,16 @@ object VamanaPq {
       while (s < m) { d += lut(s)(row(s)); s += 1 }
       d
     }
-    rerankTopK(idx, score, qv, k, fullBeam, allowed)
+    val kk = math.min(k, idx.size)
+    val beamL = if (fullBeam) idx.size else math.max(idx.params.efSearch, kk)
+    VamanaKernel.rerankTopK(idx, score, beamL, qv, kk, allowed)
   }
 
   /** The fitted broadcast-regime PQ serving state (index + codebooks +
     * per-point code rows) — the standing-index payload the streaming
     * serving leg broadcasts. */
   private[graft] def servingState(spark: SparkSession, dir: String)
-      : (LocalIndex, PqCodebooks, Array[Array[Int]]) = pqState(spark, dir)
+      : (LocalIndex, PqCodebooks, Array[Array[Byte]]) = pqState(spark, dir)
 
   /** PQ-guided top-k: traversal on ADC scores, exact rerank of the visited
     * pool. Same 10-query fixture as `knn_exact`/`vamana_search` so the three
@@ -236,9 +220,7 @@ object VamanaPq {
             sample.map(v => java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim)),
             ShardK, iters = 3))
         val cb = PqCodebooks(ShardM, ShardK, subDim, books)
-        // k=32 codes fit a BYTE — the cached code rows really are m
-        // bytes/vector, the ledger's claim, not m ints
-        (fp, cb, idx.points.map(p => encode(p, cb).map(_.toByte)))
+        (fp, cb, encode(idx.points, cb))
       }
     (cb, codes)
   }

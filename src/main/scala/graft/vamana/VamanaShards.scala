@@ -36,22 +36,18 @@ private[vamana] sealed trait ShardRouting[R <: ShardRouting[R]] {
   def merged(other: R, mine: RDD[(Int, LocalIndex)], theirs: RDD[(Int, LocalIndex)]): (Int, R)
 }
 
-/** Hash routing: point `id` lives in shard hash(id, seed) mod
-  * `numShards`, plus a second distinct shard when `replicate2`.
-  * `numShards` is the FIT's shard count — the insert modulus even after
-  * a delete removed a whole shard row. `replicate2` is true for the 2-of-s
-  * merged-graph build of [[VamanaIndexer.fit]], false for the 1-of-s
-  * [[VamanaFanout.fit]]. New ids (split halves, merged-in rows) go past the
-  * live maximum, where insert routing can never target them. */
-private[vamana] final case class HashRouting(numShards: Int, replicate2: Boolean)
-    extends ShardRouting[HashRouting] {
+/** Hash routing ([[VamanaFanout.fit]]): point `id` lives in shard
+  * hash(id, seed) mod `numShards`, the FIT's shard count — the insert
+  * modulus even after a delete removed a whole shard row. New ids (split
+  * halves, merged-in rows) go past the live maximum, where insert routing
+  * can never target them. */
+private[vamana] final case class HashRouting(numShards: Int) extends ShardRouting[HashRouting] {
 
   def assign(pts: Dataset[(Long, Array[Float])], seed: Long): Dataset[(Int, Long, Array[Float])] = {
     val spark = pts.sparkSession
     import spark.implicits._
     val s = numShards
-    val rep2 = replicate2 && s >= 2
-    pts.flatMap { case (id, vec) => HashRouting.shardsOf(id, seed, s, rep2).map(sh => (sh, id, vec)) }
+    pts.map { case (id, vec) => (HashRouting.shardOf(id, seed, s), id, vec) }
   }
 
   def freshBase(shardIds: Array[Int]): Int = shardIds.max + 1
@@ -66,14 +62,15 @@ private[vamana] final case class HashRouting(numShards: Int, replicate2: Boolean
 
 private[vamana] object HashRouting {
 
-  /** The 1-of-s or 2-of-s shards of one point id. */
-  def shardsOf(id: Long, seed: Long, s: Int, rep2: Boolean): Seq[Int] = {
-    val s1 = math.floorMod(MurmurHash3.productHash((id, seed)), s)
-    if (!rep2) Seq(s1)
-    else {
-      val h2 = MurmurHash3.productHash((id, seed + 1))
-      Seq(s1, math.floorMod(s1 + 1 + math.floorMod(h2, s - 1), s))
-    }
+  /** The shard of one point id among `s`. */
+  def shardOf(id: Long, seed: Long, s: Int): Int =
+    math.floorMod(MurmurHash3.productHash((id, seed)), s)
+
+  /** [[shardOf]] and a second distinct shard (`s` >= 2): the 2-of-s
+    * overlap of [[VamanaIndexer.fit]]'s sharded build. */
+  def twoShardsOf(id: Long, seed: Long, s: Int): Seq[Int] = {
+    val s1 = shardOf(id, seed, s)
+    Seq(s1, math.floorMod(s1 + 1 + math.floorMod(MurmurHash3.productHash((id, seed + 1)), s - 1), s))
   }
 }
 

@@ -119,11 +119,15 @@ class ClusteringSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val fitted = Clustering.kmeansFitTable(spark, dir, k = 4, iters = 2)
     val tmp = java.nio.file.Files.createTempDirectory("graft_kmmodel").toString
-    Clustering.saveModel(spark, s"$tmp/model", fitted)
-    val loaded = Clustering.loadModel(spark, s"$tmp/model")
-    assert(loaded.length == fitted.length &&
-      loaded.zip(fitted).forall { case (a, b) => a.sameElements(b) },
-      "centroid matrix changed across save/load")
+    try {
+      Clustering.saveModel(spark, s"$tmp/model", fitted)
+      val loaded = Clustering.loadModel(spark, s"$tmp/model")
+      assert(loaded.length == fitted.length &&
+        loaded.zip(fitted).forall { case (a, b) => a.sameElements(b) },
+        "centroid matrix changed across save/load")
+    } finally {
+      scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    }
   }
 
   test("kmeans assignment is bit-stable across partitionings") {

@@ -9,9 +9,7 @@ import graft.vamana._
 
 /** Serving-path guarantees for the beyond-broadcast (fanout) regime: fit
   * builds shard graphs exactly once, searches never rebuild (round 1 rebuilt
-  * every shard graph per query batch), persistence roundtrips, and the
-  * driver-safe distributed fit path serves with the same recall gate as the
-  * broadcast path. */
+  * every shard graph per query batch), and persistence roundtrips. */
 class FanoutServingSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -131,63 +129,13 @@ class FanoutServingSpec extends AnyFunSuite {
     }
   }
 
-  test("distributed fit (maxLocalPoints=0) never collects, serves at the recall gate") {
+  test("degree check aggregates the graph frame of a 3-shard merged fit") {
     val emb = Tables.embeddings(spark, dir)
-    val model = VamanaIndexer.fit(emb, params, numShards = 3, maxLocalPoints = 0)
-    assert(model.isDistributed, "over-threshold fit must stay distributed")
-    assertThrows[IllegalStateException](model.index)
-    val qs = queries(30).cache()
-    val truth = Knn.knnExact(emb, qs, 10)
-    val r = Knn.recallAt(10, model.search(qs, 10), truth)
-    assert(r >= 0.8, s"distributed-fit recall@10 = $r below the 0.8 gate")
-    val d = model.describe(spark).collect().head
-    assert(d.getAs[Long]("data_size") == emb.count(), "describe must see every point")
-  }
-
-  test("DEFAULT-shards fit routes over-threshold corpora to the sharded path (never collects)") {
-    val emb = Tables.embeddings(spark, dir)
-    // numShards left at its default of 1 — the round-2 shape collected the
-    // corpus on this path regardless of the threshold
-    val model = VamanaIndexer.fit(emb, params, maxLocalPoints = 0)
-    assert(model.isDistributed, "default-shards fit must stay distributed above the threshold")
-    assertThrows[IllegalStateException](model.index)
-    val qs = queries(30).cache()
-    val truth = Knn.knnExact(emb, qs, 10)
-    val r = Knn.recallAt(10, model.search(qs, 10), truth)
-    assert(r >= 0.8, s"default-shards distributed-fit recall@10 = $r below the 0.8 gate")
-  }
-
-  test("distributed medoid is identical under any partitioning (exact decimal centroid)") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val pts = Tables.embeddings(spark, dir)
-      .select(col("vec_id").cast("long"), col("embedding").cast("array<float>"))
-      .as[(Long, Array[Float])]
-    val a = VamanaIndexer.distributedMedoidId(pts.repartition(1))
-    val b = VamanaIndexer.distributedMedoidId(pts.repartition(7))
-    assert(a == b, "centroid accumulation must be partitioning-independent")
-  }
-
-  test("degree check aggregates the graph frame — works on a never-collected model") {
-    val emb = Tables.embeddings(spark, dir)
-    val model = VamanaIndexer.fit(emb, params, numShards = 3, maxLocalPoints = 0)
+    val model = VamanaIndexer.fit(emb, params, numShards = 3)
     val row = VamanaOps.degreeCheckOf(spark, model).collect().head
     assert(row.getAs[Long]("n_nodes") == emb.count(), "every node must be checked")
     assert(row.getAs[Int]("max_out_degree") <= params.maxDegree)
     assert(row.getAs[Boolean]("ok"), "merged re-pruned graph must respect R")
-  }
-
-  test("distributed fit saves frames; reloading under the threshold serves them") {
-    val emb = Tables.embeddings(spark, dir)
-    val model = VamanaIndexer.fit(emb, params, numShards = 3, maxLocalPoints = 0)
-    val tmp = java.nio.file.Files.createTempDirectory("dist_model").toString
-    model.save(spark, tmp)
-    val loaded = VamanaModel.load(spark, tmp)
-    assert(loaded.index.params == params, "params survive the frames save")
-    val qs = queries(30).cache()
-    val truth = Knn.knnExact(emb, qs, 10)
-    val r = Knn.recallAt(10, loaded.search(qs, 10), truth)
-    assert(r >= 0.8, s"reloaded merged-graph recall@10 = $r below the 0.8 gate")
   }
 
   test("reference binary index format: export -> import roundtrips exactly") {
@@ -283,30 +231,6 @@ class FanoutServingSpec extends AnyFunSuite {
     assert(base.index.size == 450)
   }
 
-  test("distributed incremental insert: shard-local, zero rebuilds, save includes the batch") {
-    import org.apache.spark.sql.functions.col
-    val emb = Tables.embeddings(spark, dir)
-    val base = VamanaIndexer.fit(emb.where(col("vec_id") < 450), params,
-      numShards = 3, maxLocalPoints = 0)
-    // force the (lazy, cached) shard builds to run before snapshotting the
-    // counter — they belong to fit, not to insert
-    assert(base.search(queries(5), 5).count() > 0)
-    val builds = VamanaKernel.buildCount.get()
-    val inserted = base.insert(emb.where(col("vec_id") >= 450))
-    assert(VamanaKernel.buildCount.get() == builds, "shard-local insert must never rebuild")
-    assert(inserted.isDistributed)
-    val q = emb.where(col("vec_id") >= 450)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    val hits = inserted.search(q, 10)
-      .where(col("rank") === 1 && col("query_id") === col("id")).count()
-    assert(hits == q.count(), "inserted points must be their own nearest neighbors")
-    // frames regenerated: a save/load roundtrip carries the batch
-    val tmp = java.nio.file.Files.createTempDirectory("ins_model").toString
-    inserted.save(spark, tmp)
-    val loaded = VamanaModel.load(spark, tmp)
-    assert(loaded.index.size == emb.count(), "saved frames must include the inserted batch")
-  }
-
   test("delete: removed points never surface, survivors stay searchable, source intact") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, dir)
@@ -325,25 +249,6 @@ class FanoutServingSpec extends AnyFunSuite {
     assert(r >= 0.8, s"post-delete recall@10 = $r below the 0.8 gate (hole repair failed?)")
     assert(base.search(queries(10), 10).collect().map(_.toSeq).toSeq == beforeSearch,
       "delete must not mutate the source index")
-  }
-
-  test("distributed delete: shard-local repair, save excludes the batch") {
-    import org.apache.spark.sql.functions.col
-    val emb = Tables.embeddings(spark, dir)
-    val base = VamanaIndexer.fit(emb, params, numShards = 3, maxLocalPoints = 0)
-    assert(base.search(queries(5), 5).count() > 0) // force lazy shard builds
-    val builds = VamanaKernel.buildCount.get()
-    val deleted = base.delete((0L until 50L).toArray)
-    assert(VamanaKernel.buildCount.get() == builds, "shard-local delete must never rebuild")
-    assert(deleted.isDistributed)
-    val q = emb.where(col("vec_id") >= 50 && col("vec_id") < 80)
-      .select((col("vec_id") - 50).as("query_id"), col("embedding").as("query_vec"))
-    assert(deleted.search(q, 10).where(col("id") < 50).count() == 0,
-      "deleted ids must never surface from any shard")
-    val tmp = java.nio.file.Files.createTempDirectory("del_model").toString
-    deleted.save(spark, tmp)
-    assert(VamanaModel.load(spark, tmp).index.size == emb.count() - 50,
-      "saved frames must exclude the deleted batch")
   }
 
   test("insert/delete registered queries survive the smoke-scale (50-vector) dataset") {

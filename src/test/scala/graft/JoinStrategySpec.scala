@@ -10,14 +10,11 @@ import graft.core.{Joins, Tables}
   * bucketed sides) and salted joins for skew (row-identical to plain). */
 class JoinStrategySpec extends AnyFunSuite {
 
-  private lazy val warehouse = java.nio.file.Files.createTempDirectory("graft_wh").toString
-
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
     .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ to expose exchanges
     .getOrCreate()
 
@@ -29,11 +26,12 @@ class JoinStrategySpec extends AnyFunSuite {
     // session first — force the runtime conf here and restore after
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // unique table names: suites may share a session whose default
+    // warehouse dir survives across JVM runs (managed locations stick);
+    // both are dropped after, which deletes their files
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    val (ordersT, lineitemT) = (s"orders_b_$tag", s"lineitem_b_$tag")
     try {
-      // unique table names: suites may share a session whose default
-      // warehouse dir survives across JVM runs (managed locations stick)
-      val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      val (ordersT, lineitemT) = (s"orders_b_$tag", s"lineitem_b_$tag")
       Tables.orders(spark, dir).write.mode("overwrite")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ordersT)
       Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity"))
@@ -46,7 +44,10 @@ class JoinStrategySpec extends AnyFunSuite {
         s"bucketed join must be co-located (no shuffle):\n$plan")
       assert(joined.count() == Tables.lineitem(spark, dir)
         .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey")).count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    } finally {
+      Seq(ordersT, lineitemT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("AQE splits a skewed shuffle-join partition at runtime (skew=true)") {

@@ -1414,18 +1414,22 @@ class PipelineSpec extends AnyFunSuite {
       (2L, base),                    // exact duplicate clip
       (3L, varied + ("z" * 120)))    // one-frame rewrite
     val tmp = java.nio.file.Files.createTempDirectory("graft_vid").toString
-    docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val sigs = Multimodal.videoSigFrame(spark, tmp)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(sigs.values.forall(_.length == 256), s"expected 4x64-bit signatures: $sigs")
-    assert(sigs(1L) == sigs(2L))
-    assert(sigs(1L).take(192) == sigs(3L).take(192),
-      "untouched frames must keep their bits")
-    val frame3Dist = sigs(1L).drop(192).zip(sigs(3L).drop(192)).count { case (a, b) => a != b }
-    assert(frame3Dist > 3, s"rewritten frame should flip many bits, got $frame3Dist")
-    val pairs = Multimodal.videoNearDup(spark, tmp)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(pairs == Set((1L, 2L, 0L)), s"expected only the exact pair: $pairs")
+    try {
+      docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val sigs = Multimodal.videoSigFrame(spark, tmp)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(sigs.values.forall(_.length == 256), s"expected 4x64-bit signatures: $sigs")
+      assert(sigs(1L) == sigs(2L))
+      assert(sigs(1L).take(192) == sigs(3L).take(192),
+        "untouched frames must keep their bits")
+      val frame3Dist = sigs(1L).drop(192).zip(sigs(3L).drop(192)).count { case (a, b) => a != b }
+      assert(frame3Dist > 3, s"rewritten frame should flip many bits, got $frame3Dist")
+      val pairs = Multimodal.videoNearDup(spark, tmp)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(pairs == Set((1L, 2L, 0L)), s"expected only the exact pair: $pairs")
+    } finally {
+      scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    }
   }
 
   test("audio neardup: planted Hamming 1-3 envelope neighbors recovered, width fixed at 64") {

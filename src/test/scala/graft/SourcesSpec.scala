@@ -26,17 +26,21 @@ class SourcesSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, dir).orderBy("doc_id")
     val n = docs.count()
     val base = java.nio.file.Files.createTempDirectory("graft_sources").toString
-    for (fmt <- Seq("csv", "json", "orc")) {
-      val path = s"$base/$fmt"
-      val writer = docs.write.mode("overwrite").format(fmt)
-      (if (fmt == "csv") writer.option("header", "true") else writer).save(path)
-      val reader = spark.read.format(fmt)
-      val back = (if (fmt == "csv") reader.option("header", "true").option("inferSchema", "true")
-                  else reader).load(path)
-      assert(back.count() == n, s"$fmt roundtrip lost rows")
-      val origIds = docs.select("doc_id").collect().map(_.getLong(0)).toSet
-      val backIds = back.select(col("doc_id").cast("long")).collect().map(_.getLong(0)).toSet
-      assert(backIds == origIds, s"$fmt roundtrip changed doc_ids")
+    try {
+      for (fmt <- Seq("csv", "json", "orc")) {
+        val path = s"$base/$fmt"
+        val writer = docs.write.mode("overwrite").format(fmt)
+        (if (fmt == "csv") writer.option("header", "true") else writer).save(path)
+        val reader = spark.read.format(fmt)
+        val back = (if (fmt == "csv") reader.option("header", "true").option("inferSchema", "true")
+                    else reader).load(path)
+        assert(back.count() == n, s"$fmt roundtrip lost rows")
+        val origIds = docs.select("doc_id").collect().map(_.getLong(0)).toSet
+        val backIds = back.select(col("doc_id").cast("long")).collect().map(_.getLong(0)).toSet
+        assert(backIds == origIds, s"$fmt roundtrip changed doc_ids")
+      }
+    } finally {
+      scala.reflect.io.Directory(new java.io.File(base)).deleteRecursively()
     }
   }
 

@@ -426,11 +426,15 @@ class StreamingSpec extends AnyFunSuite {
       assert(rows.values.forall(_.length == 256), "4x64-bit signatures")
       // bit-identity with the batch signature over the same corpus
       val tmp = java.nio.file.Files.createTempDirectory("graft_vpd_").toString
-      Seq((1L, clipA), (3L, clipB)).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val batch = graft.operators.Multimodal.videoSigFrame(spark, tmp)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(batch == rows, s"stream/batch video signature drift")
+      try {
+        Seq((1L, clipA), (3L, clipB)).toDF("doc_id", "text")
+          .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+        val batch = graft.operators.Multimodal.videoSigFrame(spark, tmp)
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(batch == rows, s"stream/batch video signature drift")
+      } finally {
+        scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+      }
     } finally q.stop()
   }
 

@@ -3,9 +3,10 @@ package graft.vamana
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A broadcast-regime [[VamanaModel]] ships its index once: every search
-  * form reuses one broadcast until `unpersist()`, which releases it without
-  * breaking frames already returned. */
+/** A [[VamanaModel]] ships its index once: every search form reuses one
+  * broadcast until `unpersist()`, which releases it without breaking
+  * frames already returned; a corpus over `maxLocalPoints` never becomes
+  * one. */
 class BroadcastHandleSpec extends AnyFunSuite {
   import ShardSpecFixture._
 
@@ -15,7 +16,6 @@ class BroadcastHandleSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val model = VamanaIndexer.fit(corpus, params)
-    assert(!model.isDistributed)
     assert(model.broadcastId.isEmpty, "the broadcast is made by the first search, not by fit")
     val queries = localQueries(20)
     val first = rows(model.search(queries, 10))
@@ -37,5 +37,19 @@ class BroadcastHandleSpec extends AnyFunSuite {
     assert(rows(model.search(queries, 10)) == first)
     assert(model.broadcastId.isDefined && model.broadcastId != id)
     model.unpersist()
+  }
+
+  test("a fit over maxLocalPoints is refused after the count, collecting nothing") {
+    val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val sc = spark.sparkContext
+    val bare = JobCounter.count(sc) { emb.count() }
+    val fit = JobCounter.count(sc) {
+      val refused = intercept[IllegalArgumentException](
+        VamanaIndexer.fit(emb, params, numShards = 3, maxLocalPoints = 10))
+      assert(refused.getMessage.contains("VamanaFanout.fit"), refused.getMessage)
+    }
+    assert(bare.jobs >= 1)
+    assert(fit.jobs <= bare.jobs,
+      s"the refused fit ran ${fit.jobs} jobs where a bare count runs ${bare.jobs}")
   }
 }

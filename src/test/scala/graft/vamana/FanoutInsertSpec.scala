@@ -10,9 +10,8 @@ import graft.core.Tables
 
 /** Insert-routing guarantees for the fanout model (round-4 advisor items):
   * the routing modulus is the FIT-TIME shard count (not the live shard row
-  * count, which shifts after a whole-shard delete), a batch routed to a
-  * deleted shard recreates that shard instead of silently vanishing, and
-  * inserts replicate 2-of-s exactly when the fit did. */
+  * count, which shifts after a whole-shard delete), and a batch routed to
+  * a deleted shard recreates that shard instead of silently vanishing. */
 class FanoutInsertSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -34,7 +33,7 @@ class FanoutInsertSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     val emb = Tables.embeddings(spark, dir)
     val model = VamanaFanout.fit(emb, params, numShards = 3)
-    assert(model.numShardsFit == 3 && !model.replicate2)
+    assert(model.numShardsFit == 3)
     val lostIds = membership(model)(0)
     assert(lostIds.nonEmpty)
     val deleted = model.delete(lostIds.toArray)
@@ -58,32 +57,9 @@ class FanoutInsertSpec extends AnyFunSuite {
     assert(hits == back.size, s"every reinserted point must find itself ($hits/${back.size})")
   }
 
-  test("insert replicates 2-of-s exactly when the fit overlapped shards") {
-    val emb = Tables.embeddings(spark, dir)
-    val newPts = emb.limit(30)
-      .select((col("vec_id") + 1000L).as("vec_id"), col("embedding"))
-    val newIds = (0 until 30).map(i => 1000L + i).toSet
-    def copies(m: FanoutModel): Map[Long, Int] =
-      m.shards.collect().iterator
-        .flatMap { case (_, idx) => idx.ids.iterator.filter(newIds.contains) }
-        .toSeq.groupBy(identity).view.mapValues(_.size).toMap
-    val oneOf = VamanaFanout.fit(emb, params, numShards = 3)
-    val insOne = oneOf.insert(newPts)
-    assert(copies(insOne).values.toSet == Set(1),
-      "1-of-s fit: inserted points get exactly one shard copy")
-    // same shards, declared as a 2-of-s (merged-graph) fit
-    val twoOf = new FanoutModel(
-      new ShardCore(spark, oneOf.shards, oneOf.params, HashRouting(3, replicate2 = true)))
-    val insTwo = twoOf.insert(newPts)
-    val c2 = copies(insTwo)
-    assert(c2.keySet == newIds && c2.values.toSet == Set(2),
-      s"2-of-s fit: inserted points must land in two distinct shards, got $c2")
-  }
-
   test("local insert growth guard uses the fit-time maxLocalPoints, not the default") {
     val emb = Tables.embeddings(spark, dir)
     val base = VamanaIndexer.fit(emb.where(col("vec_id") < 300), params, maxLocalPoints = 350)
-    assert(!base.isDistributed, "300 points under a 350 threshold fit locally")
     val batch = emb.where(col("vec_id") >= 300) // 200 more: 500 > 350
     val e = intercept[IllegalArgumentException](base.insert(batch))
     assert(e.getMessage.contains("maxLocalPoints"))
